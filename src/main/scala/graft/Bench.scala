@@ -3,15 +3,21 @@ package graft
 /** Benchmark main: one JSON line with per-query wall times on
   * SPARK_GRAFT_SF_DIR. Each query gets an untimed warm-up execution first
   * so the reported numbers measure engine throughput (steady-state plans,
-  * JIT'd codegen), not JVM/classloader warm-up. */
+  * JIT'd codegen), not JVM/classloader warm-up. A query that throws in any
+  * timed pass is listed under `failed` with its message and left out of
+  * `queries` and `total`: its time-to-exception is not a timing. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build("graft-bench")
 
-    def exec(name: String): Long =
-      try SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-      catch { case _: Throwable => -1L }
+    def describe(e: Throwable): String = s"${e.getClass.getName}: ${e.getMessage}"
+    /** Runs one query; Some(message) when it throws. */
+    def exec(name: String): Option[String] =
+      try {
+        SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
+        None
+      } catch { case e: Throwable => Some(describe(e)) }
 
     // some queries cache intermediates; drop them between queries so 60+
     // queries in one JVM don't accumulate storage memory — but OUTSIDE
@@ -53,26 +59,27 @@ object Bench {
     // adding a BPE query can never silently shift the billing. Everything
     // else still pays its full standalone cost via reset() between
     // queries.
-    def timedPass(): (Map[String, Double], Double) = {
+    // Each entry is Right(seconds) or Left(failure message).
+    def timedPass(): (Map[String, Either[String, Double]], Double) = {
       graft.queries.BpeQueries.evictTrainMemo()
       val bt0 = System.nanoTime()
-      try graft.queries.BpeQueries.trainedFor(spark, sfDir,
-        graft.queries.BpeQueries.NumMerges, graft.ops.Bpe.DefaultDictCap)
-        ._2.queryExecution.toRdd.count()
-      catch { // consumers then bill their own run — but say so: a silent
-        // swallow would record a bogus bpe_train time with no signal
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] bpe_train failed: ${e.getMessage}")
+      // on failure the consumers bill their own training run
+      val bpe = try {
+        graft.queries.BpeQueries.trainedFor(spark, sfDir,
+          graft.queries.BpeQueries.NumMerges, graft.ops.Bpe.DefaultDictCap)
+          ._2.queryExecution.toRdd.count()
+        Right((System.nanoTime() - bt0) / 1e9)
+      } catch {
+        case scala.util.control.NonFatal(e) => Left(describe(e))
       }
-      val bpeDt = (System.nanoTime() - bt0) / 1e9
       reset() // the memoized dict is localCheckpoint'd; it survives this
       (names.map { name =>
       val t0 = System.nanoTime()
-      exec(name)
+      val err = exec(name)
       val dt = (System.nanoTime() - t0) / 1e9
       reset()
-      name -> dt
-    }.toMap + ("bpe_train" -> bpeDt), calibrate())
+      name -> err.toLeft(dt)
+    }.toMap + ("bpe_train" -> bpe), calibrate())
     }
     // several timed passes, report the per-query minimum — local-mode wall
     // times on shared hardware are noisy and min is the robust statistic
@@ -81,7 +88,11 @@ object Bench {
     // `bpe_train` is the explicit shared-training line item from
     // timedPass — reported like any query so vs_prev gates cover it
     val reportNames = names :+ "bpe_train"
-    val results = reportNames.map(n => n -> all.map(_._1(n)).min)
+    val runs = reportNames.map(n => n -> all.map(_._1(n)))
+    val results = runs.collect { case (n, rs) if rs.forall(_.isRight) =>
+      n -> rs.flatMap(_.toOption).min }
+    val failed = runs.flatMap { case (n, rs) =>
+      rs.collectFirst { case Left(msg) => n -> msg } }
     val calib = all.map(_._2).min
     val loadavg = {
       val la = java.lang.management.ManagementFactory
@@ -90,6 +101,14 @@ object Bench {
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    def jsonString(x: String): String = "\"" + x.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    val failedJson = failed.map { case (k, msg) =>
+      jsonString(k) + ":" + jsonString(msg) }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // prior-round comparison, embedded so the round record is
     // self-sufficient even if the driver's stdout tail-capture truncates:
@@ -151,7 +170,9 @@ object Bench {
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,""" +
         s""""calib":${f"$calib%.3f"},"loadavg":$loadavg,""" +
-        s""""queries":$qs,"sf":"$sfDir"$prevJson$ratiosJson}"""
+        s""""parallelism":${spark.sparkContext.defaultParallelism},""" +
+        s""""queries":$qs,"failed":$failedJson,""" +
+        s""""sf":"$sfDir"$prevJson$ratiosJson}"""
     println(json)
     // also persist the full line: the driver's stdout tail-capture has
     // truncated the head of the per-query map in past rounds — the file

@@ -98,6 +98,7 @@ object ClusterSmoke {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.CodegenReuse)
       .config("spark.executor.memory", "1g")
       // executors are fresh JVMs launched by the standalone Worker — they
       // need the application classes (this jar-less sbt layout) and the

@@ -109,6 +109,7 @@ object RcaScaleProbe {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.CodegenReuse)
       // the worker grants local-cluster[n,c,mem]'s mem, but the executor
       // JVM still boots at the 1g spark.executor.memory DEFAULT unless
       // told otherwise (first run died exit-52 OOM mid-ingest); size it

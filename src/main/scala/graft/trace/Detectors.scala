@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 /** The reference's detector battery (tools/investigation_tools/detectors.py)
   * as pure DataFrame transforms. Each detector returns its anomaly rows;
   * `summary` collapses them to the detected/count/first/last shape the
-  * report consumes. Baseline lookups broadcast the (tiny) baselines table
-  * with the (metric, role) → (metric, 'ALL') fallback as join + coalesce
-  * (detectors.py:20-57).
+  * report consumes. Baseline lookups carry the (metric, role) →
+  * (metric, 'ALL') fallback of detectors.py:20-57 as lookups + coalesce.
   */
 object Detectors {
 
@@ -29,26 +28,23 @@ object Detectors {
       max(t).as("last_ts"))
   }
 
-  /** Attach a baseline (mean/stddev) per role with 'ALL' fallback —
-    * left-join on role then left-join the single 'ALL' row on a constant
-    * key, coalescing (detectors.py:20-57 as joins, not a cache). */
+  /** Attach a baseline (mean/stddev) per role with a field-wise 'ALL'
+    * fallback (detectors.py:20-57). The metric's baselines fold into ONE
+    * role → (mean, stddev) map, read as a scalar subquery: the baselines
+    * subtree runs once and its value reaches every task, with no join to
+    * plan. Baselines hold one row per (metric_name, role), as
+    * metricBaselines builds them. */
   def withBaseline(rows: DataFrame, baselines: DataFrame,
       metricName: String): DataFrame = {
-    val b = baselines.filter(col("metric_name") === metricName)
-    val byRole = b.select(col("role").as("b_role"),
-      col("mean").as("role_mean"), col("stddev").as("role_std"))
-    val all = b.filter(col("role") === "ALL")
-      .select(lit(1).as("all_key"), col("mean").as("all_mean"),
-        col("stddev").as("all_std")).limit(1)
-    rows
-      .join(broadcast(byRole),
-        coalesce(col("role"), lit("ALL")) === col("b_role"), "left")
-      .withColumn("all_key", lit(1))
-      .join(broadcast(all), Seq("all_key"), "left")
-      .withColumn("b_mean", coalesce(col("role_mean"), col("all_mean")))
-      .withColumn("b_std", coalesce(col("role_std"), col("all_std")))
-      .drop("b_role", "role_mean", "role_std", "all_key",
-        "all_mean", "all_std")
+    val byRole = baselines.filter(col("metric_name") === metricName)
+      .agg(map_from_entries(collect_list(struct(col("role"),
+        struct(col("mean"), col("stddev")))))).scalar()
+    val own = element_at(col("b_map"), coalesce(col("role"), lit("ALL")))
+    val all = element_at(col("b_map"), lit("ALL"))
+    rows.withColumn("b_map", byRole)
+      .withColumn("b_mean", coalesce(own("mean"), all("mean")))
+      .withColumn("b_std", coalesce(own("stddev"), all("stddev")))
+      .drop("b_map")
   }
 
   /** storage_engine_pressure (detectors.py:60-122): VersionLag on

@@ -224,7 +224,7 @@ object RcaLoop {
           concat_ws("=", col("event"), col("n")).as("s")))),
           x => x.getField("s")), ",")))
       val spanBranch = s1(2, "time_span", sevEvt.agg(concat(
-        lit("n="), sum(col("n")),
+        lit("n="), coalesce(sum(col("n")), lit(0L)),
         lit(" first="), coalesce(
           unix_timestamp(min(col("mn"))).cast("string"), lit("")),
         lit(" last="), coalesce(

@@ -27,6 +27,17 @@ private class LowConfidenceClient extends LlmBoundary.LlmClient {
     prompts.map(_ => """{"hypothesis": "unsure", "confidence": 0.1}""")
 }
 
+/** Records every prompt it is sent; answers with low confidence. */
+private class CapturingClient extends LlmBoundary.LlmClient {
+  def complete(prompts: Seq[String]): Seq[String] = prompts.map { p =>
+    CapturingClient.prompts.add(p)
+    """{"hypothesis": "unsure", "confidence": 0.1}"""
+  }
+}
+private object CapturingClient {
+  val prompts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
+
 /** The iterative RCA loop: convergence, confidence shaping, trace shape
   * (investigation_agent.py:866-903, 926-1327). */
 class RcaLoopSpec extends SparkSpec {
@@ -80,6 +91,22 @@ class RcaLoopSpec extends SparkSpec {
       RcaLoop.Config(maxIterations = 8)).collect()
     assert(t.length < 8)
     assert(t.last.getAs[String]("stop_reason") === "stalled")
+  }
+
+  test("empty input: time_span evidence reads n=0, not NULL") {
+    import org.apache.spark.sql.functions._
+    CapturingClient.prompts.clear()
+    val events = spark.range(0)
+      .select(col("id").as("event_id"), lit(null).cast("timestamp").as("ts"),
+        lit("").as("event"), lit(0).as("severity"),
+        lit(null).cast("string").as("role"),
+        map().cast("map<string,string>").as("fields"))
+    val t = RcaLoop.investigate(events, "?", new CapturingClient,
+      RcaLoop.Config(maxIterations = 3)).collect()
+    assert(t.nonEmpty)
+    val prompt = CapturingClient.prompts.peek()
+    assert(prompt != null, "the loop never consulted the LLM")
+    assert(prompt.contains("\ntime_span: n=0 first= last=\n"), prompt)
   }
 
   test("confidence shaping mirrors the reference's three rules") {

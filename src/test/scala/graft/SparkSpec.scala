@@ -12,6 +12,8 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    // the first session in the test JVM sizes Spark's generated-class cache
+    .config(GraftSession.CodegenReuse)
     .getOrCreate()
 
   def sf(name: String): String = s"/root/testdata/sf0.001"

@@ -283,6 +283,44 @@ class TraceOpsSpec extends SparkSpec {
       Seq("detected", "count", "first_ts", "last_ts"))
   }
 
+  test("withBaseline: per-role baseline, field-wise 'ALL' fallback, one plan") {
+    val baselines = Seq(
+      ("VersionLag", "ALL", Some(10.0), Some(2.0)),
+      ("VersionLag", "storage", Some(100.0), None),
+      ("DurabilityLag", "tlog", Some(5.0), Some(1.0)))
+      .toDF("metric_name", "role", "mean", "stddev")
+    val rows = Seq((1L, Some("storage")), (2L, Some("tlog")), (3L, None))
+      .toDF("event_id", "role")
+    val got = Detectors.withBaseline(rows, baselines, "VersionLag")
+      .orderBy("event_id").collect()
+      .map(r => (r.getAs[Long]("event_id"), r.getAs[Double]("b_mean"),
+        r.getAs[Double]("b_std"))).toSeq
+    // storage: own mean, ALL's stddev; tlog (no VersionLag row) and a
+    // null role: ALL's mean and stddev
+    assert(got === Seq((1L, 100.0, 2.0), (2L, 10.0, 2.0), (3L, 10.0, 2.0)))
+    assert(Detectors.withBaseline(rows, baselines, "Missing")
+      .filter(col("b_mean").isNotNull || col("b_std").isNotNull).isEmpty)
+
+    // the baselines subtree (EAV explode + aggregate) is planned once,
+    // as one scalar subquery: no join, so no nested loop either
+    val ev = mkEvents(Seq(
+      (1L, "2025-01-01 00:00:01", "StorageMetrics", 10, Map("VersionLag" -> "5")),
+      (2L, "2025-01-01 00:00:02", "StorageMetrics", 10, Map("VersionLag" -> "7"))))
+    val derived = DerivedTables.metricBaselines(
+      DerivedTables.eventMetrics(ev), minCount = 1)
+    val qe = Detectors.storagePressureAnomalies(ev, derived).queryExecution
+    import org.apache.spark.sql.catalyst.expressions.ScalarSubquery
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
+    def explodes(p: LogicalPlan): Int = p.collect { case g: Generate => g }.length
+    val subqueries = qe.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case s: ScalarSubquery => s })).distinctBy(_.exprId)
+    assert(explodes(qe.optimizedPlan) +
+      subqueries.map(s => explodes(s.plan)).sum === 1)
+    assert(qe.sparkPlan.collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+    }.isEmpty)
+  }
+
   test("timeline: lag crossings and causal signal (W11)") {
     val ev = mkEvents(Seq(
       (1L, "2025-01-01 00:00:00", "Start", 10, Map.empty[String, String]),
