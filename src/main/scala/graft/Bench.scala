@@ -7,6 +7,19 @@ package graft
   * timed pass is listed under `failed` with its message and left out of
   * `queries` and `total`: its time-to-exception is not a timing. */
 object Bench {
+  /** Drops every cache a query may leave behind. Some queries cache
+    * intermediates; dropping them between queries keeps 60+ queries in
+    * one JVM from accumulating storage memory. Callers run it OUTSIDE
+    * the timed window, so teardown cost isn't billed to the next query.
+    * The RCA trace memo survives clearCache (it holds rows, not blocks),
+    * so it is evicted explicitly: every timed execution must pay its
+    * query's full cost, not read a result the warm-up pass computed. */
+  def reset(spark: org.apache.spark.sql.SparkSession): Unit = {
+    spark.catalog.clearCache()
+    graft.queries.TraceQueries.evictRcaTraceCache(spark)
+    graft.queries.TraceQueries.evictFixtureCache(spark)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build("graft-bench")
@@ -19,20 +32,9 @@ object Bench {
         None
       } catch { case e: Throwable => Some(describe(e)) }
 
-    // some queries cache intermediates; drop them between queries so 60+
-    // queries in one JVM don't accumulate storage memory — but OUTSIDE
-    // the timed window, so teardown cost isn't billed to the next query.
-    // The RCA trace memo survives clearCache (it holds rows, not blocks),
-    // so evict it explicitly: every timed execution must pay its query's
-    // full cost, not read a result the warm-up pass computed.
-    def reset(): Unit = {
-      spark.catalog.clearCache()
-      graft.queries.TraceQueries.evictRcaTraceCache(spark)
-      graft.queries.TraceQueries.evictFixtureCache(spark)
-    }
     val names = SparkEntry.queries.keys.toSeq.sorted
     graft.queries.BpeQueries.evictTrainMemo()
-    names.foreach { n => exec(n); reset() } // warm-up
+    names.foreach { n => exec(n); reset(spark) } // warm-up
     // Machine-load calibration: a FIXED synthetic workload (registry- and
     // data-independent, codegen'd, all cores) timed alongside the
     // queries. Its wall time moves with background load exactly like the
@@ -57,7 +59,7 @@ object Bench {
     // eviction) rather than to whichever consumer happens to sort first
     // — order-independent accounting, visible in bench_results.json, and
     // adding a BPE query can never silently shift the billing. Everything
-    // else still pays its full standalone cost via reset() between
+    // else still pays its full standalone cost via reset(spark) between
     // queries.
     // Each entry is Right(seconds) or Left(failure message).
     def timedPass(): (Map[String, Either[String, Double]], Double) = {
@@ -72,12 +74,12 @@ object Bench {
       } catch {
         case scala.util.control.NonFatal(e) => Left(describe(e))
       }
-      reset() // the memoized dict is localCheckpoint'd; it survives this
+      reset(spark) // the memoized dict is localCheckpoint'd; it survives this
       (names.map { name =>
       val t0 = System.nanoTime()
       val err = exec(name)
       val dt = (System.nanoTime() - t0) / 1e9
-      reset()
+      reset(spark)
       name -> err.toLeft(dt)
     }.toMap + ("bpe_train" -> bpe), calibrate())
     }

@@ -32,9 +32,8 @@ object ClusterSmoke {
     * Ewma window codegen, boundary-carried scan, MinHashAgg + banded
     * join, RollingHash codegen, IVF/Lloyd auto mode, the
     * partitioned-store trace analytics path — plus the executor-JVM
-    * service paths: JDK codec SPI discovery on executor classloaders
-    * (ImageIO / AudioSystem registries are per-JVM), the custom as-of
-    * join, and the streaming gate's state store across executors. */
+    * service paths: the custom as-of join, and the streaming gate's
+    * state store across executors. */
   val Slice: Seq[String] = Seq(
     "q3_revenue_by_nation",
     "ev_hll_users",
@@ -44,8 +43,6 @@ object ClusterSmoke {
     "doc_fingerprints",
     "emb_ann_ivf_auto",
     "trace_rollups_60s",
-    "mm_png_decode",
-    "mm_wav_decode",
     "ev_asof_last_signup",
     "ev_streaming_gate",
     // round-6 additions: the int8 quantized scan (zip_with/aggregate
@@ -55,12 +52,10 @@ object ClusterSmoke {
     "emb_int8_knn",
     "doc_clean_pipeline",
     // round-7 additions: the sharded two-level sampler (shard-local
-    // windows + broadcast offset join across executors), the GIF
-    // sequence-reader SPI on executor ImageIO registries, and the
+    // windows + broadcast offset join across executors) and the
     // streaming clean gate's batch-path plan (key-unique probes + the
     // 1-row eval-array cross join + the per-row top-gram fold)
     "doc_budget_sample",
-    "mm_gif_frames",
     "doc_clean_stream_gate",
     // exact percentile is a TypedImperativeAggregate — its buffer merge
     // across executor JVMs is the point of this entry

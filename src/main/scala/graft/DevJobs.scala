@@ -27,9 +27,7 @@ object DevJobs {
       }
     })
     def reset(): Unit = {
-      spark.catalog.clearCache()
-      graft.queries.TraceQueries.evictRcaTraceCache(spark)
-      graft.queries.TraceQueries.evictFixtureCache(spark)
+      Bench.reset(spark)
       graft.queries.BpeQueries.evictTrainMemo()
     }
     def snap(): (Int, Int, Int) = (jobs.get, stages.get, tasks.get)

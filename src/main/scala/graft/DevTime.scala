@@ -30,19 +30,14 @@ object DevTime {
       s"unknown quer${if (unknown.size == 1) "y" else "ies"}: " +
         unknown.mkString(", "))
     val spark = GraftSession.build("graft-dev-time")
-    def reset(): Unit = {
-      spark.catalog.clearCache()
-      graft.queries.TraceQueries.evictRcaTraceCache(spark)
-      graft.queries.TraceQueries.evictFixtureCache(spark)
-    }
     names.foreach { name =>
       val run = queries.Registry.byName(name).run
-      run(spark, sfDir).queryExecution.toRdd.count(); reset() // warm-up
+      run(spark, sfDir).queryExecution.toRdd.count(); Bench.reset(spark) // warm-up
       val times = (1 to passes).map { _ =>
         val t0 = System.nanoTime()
         run(spark, sfDir).queryExecution.toRdd.count()
         val dt = (System.nanoTime() - t0) / 1e9
-        reset(); dt
+        Bench.reset(spark); dt
       }
       println(f"[devtime] $name min ${times.min}%.3f s (passes: ${times.map(t => f"$t%.3f").mkString(", ")})")
     }

@@ -80,7 +80,7 @@ object EmbeddingOps {
     // (label, pos) group) the ULP drift crossed the ROUND(., 4) edge —
     // caught by the past-fixture-scale oracle gate. The decimal sum is a
     // deterministic function of the float values on both sides (same
-    // pattern as mm_feature_stats / DerivedTables.exactMean). `+ 0`
+    // pattern as DerivedTables.exactMean). `+ 0`
     // normalizes IEEE negative zero, which ROUND can produce on both
     // engines but value-hashes differently from 0.0.
     sql("emb_label_centroids",

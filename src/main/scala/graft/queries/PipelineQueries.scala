@@ -5,12 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextFunctions
-import graft.ops.{Multimodal, TextAnalysis, VectorSearch}
+import graft.ops.{TextAnalysis, VectorSearch}
 import QueryDef._
 
 /** Training-data pipeline surface: fingerprinting, token accounting,
-  * SimHash near-dup candidates, language ID, LSH approximate NN, and the
-  * multimodal (binary column) pipeline. */
+  * SimHash near-dup candidates, language ID and LSH approximate NN. */
 object PipelineQueries {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
@@ -1083,509 +1082,6 @@ object PipelineQueries {
         .select(col("query_id"), col("neighbor_id"), col("rank"),
           round(col("cosine"), 6).as("cosine"))
         .orderBy("query_id", "rank")
-    },
-
-    // ---- multimodal metadata (stubbed decode), full oracle on plumbing ---
-    sql("mm_media_meta",
-      """SELECT kind, COUNT(*) AS n_media,
-        |  CAST(SUM(n_bytes) AS BIGINT) AS total_bytes, MAX(n_bytes) AS max_bytes
-        |FROM (
-        |  SELECT (['image','audio','video'])[CAST(doc_id % 3 + 1 AS INTEGER)] AS kind,
-        |    octet_length(encode(text)) AS n_bytes
-        |  FROM documents)
-        |GROUP BY kind
-        |ORDER BY kind""") { (s, dir) =>
-      Multimodal.decode(Multimodal.syntheticMedia(s, dir)).toDF()
-        .groupBy("kind")
-        .agg(count(lit(1)).as("n_media"),
-          sum(col("n_bytes")).as("total_bytes"),
-          max(col("n_bytes")).as("max_bytes"))
-        .orderBy("kind")
-    },
-
-    // ---- multimodal REAL image decode (javax.imageio), full oracle -------
-    // The one non-stub codec this environment ships: the JDK's own PNG
-    // reader. Fixtures are synthetic PNGs whose dimensions follow a known
-    // arithmetic progression; the oracle re-derives those dimensions from
-    // the same arithmetic — so a hash match proves an actual pixel decode
-    // ran on the executors (the encoder's byte output never enters the
-    // comparison; only what the DECODER read back does). Audio/video keep
-    // the documented stub boundary — no JDK codec exists for them.
-    sql("mm_png_decode",
-      """SELECT i AS media_id, 'png' AS format,
-        |  CAST(16 + (i * 7) % 97 AS INTEGER) AS width,
-        |  CAST(12 + (i * 5) % 71 AS INTEGER) AS height
-        |FROM (SELECT unnest(range(20)) AS i)
-        |ORDER BY media_id""") { (s, _) =>
-      import s.implicits._
-      val recs = (0 until 20).map { i =>
-        Multimodal.MediaRecord(i.toLong, "image",
-          Multimodal.syntheticPng(16 + (i * 7) % 97, 12 + (i * 5) % 71,
-            i.toLong), "synthetic")
-      }
-      Multimodal.decodeReal(s.createDataset(recs).repartition(4))
-        .toDF()
-        .select(col("media_id"), col("format"), col("width"), col("height"))
-        .orderBy("media_id")
-    },
-
-    // ---- multimodal REAL image resize (integer nearest-neighbor) ---------
-    // The thumbnail normalization every multimodal pipeline needs, made
-    // oracle-provable: pixels are decoded by the JDK codec and resampled
-    // with PURE INTEGER index math (srcX = x·w div outW — never
-    // Graphics2D interpolation, whose rounding is implementation-
-    // defined). The fixture PNGs plant rgb(x,y) = (x·31+y·17+seed) mod
-    // 0xFFFFFF, so the position-weighted checksum Σ (y·outW+x+1)·rgb of
-    // the 32×24 resample is closed-form — a hash match proves the real
-    // decode ran AND every output pixel came from exactly the right
-    // source coordinate (a flip/transpose/stride bug cannot match).
-    sql("mm_resize",
-      """WITH imgs AS (
-        |  SELECT i, 16 + (i * 7) % 97 AS w, 12 + (i * 5) % 71 AS h
-        |  FROM (SELECT unnest(range(20)) AS i)
-        |), px AS (
-        |  SELECT i, w, h,
-        |    CAST(SUM((y * 32 + x + 1) *
-        |      ((((x * w) // 32) * 31 + ((y * h) // 24) * 17 + i) % 16777215))
-        |      AS BIGINT) AS cs
-        |  FROM imgs,
-        |    (SELECT unnest(range(24)) AS y) ys,
-        |    (SELECT unnest(range(32)) AS x) xs
-        |  GROUP BY i, w, h
-        |)
-        |SELECT i AS media_id, 'png' AS format,
-        |  CAST(w AS INTEGER) AS src_width, CAST(h AS INTEGER) AS src_height,
-        |  CAST(32 AS INTEGER) AS out_width, CAST(24 AS INTEGER) AS out_height,
-        |  cs AS pix_checksum
-        |FROM px
-        |ORDER BY media_id""") { (s, _) =>
-      import s.implicits._
-      val recs = (0 until 20).map { i =>
-        Multimodal.MediaRecord(i.toLong, "image",
-          Multimodal.syntheticPng(16 + (i * 7) % 97, 12 + (i * 5) % 71,
-            i.toLong), "synthetic")
-      }
-      Multimodal.resizeImages(s.createDataset(recs).repartition(4), 32, 24)
-        .toDF()
-        .orderBy("media_id")
-    },
-
-    // ---- multimodal REAL perceptual hash (average-hash, all-integer) ------
-    // The image near-dup fingerprint: 8×8 nearest-neighbor raster (the
-    // mm_resize index math), integer gray = (r+g+b) div 3, integer mean,
-    // bit per cell. No float/DCT/resampler — the oracle re-derives every
-    // bit closed-form from the planted gradient. The 64-bit hash ships as
-    // two 32-bit halves (DuckDB's SUM promotes to 128-bit, so a sign-bit
-    // set at position 63 would not round-trip a BIGINT compare).
-    sql("mm_image_ahash",
-      """WITH imgs AS (
-        |  SELECT i, 16 + (i * 7) % 97 AS w, 12 + (i * 5) % 71 AS h
-        |  FROM (SELECT unnest(range(20)) AS i)
-        |), gr AS (
-        |  SELECT i, w, h, y * 8 + x AS idx,
-        |    ((v // 65536) % 256 + (v // 256) % 256 + v % 256) // 3 AS gray
-        |  FROM (
-        |    SELECT i, w, h, x, y,
-        |      (((x * w) // 8) * 31 + ((y * h) // 8) * 17 + i) % 16777215 AS v
-        |    FROM imgs,
-        |      (SELECT unnest(range(8)) AS y) ys,
-        |      (SELECT unnest(range(8)) AS x) xs)
-        |), m AS (
-        |  SELECT i, CAST(SUM(gray) // 64 AS BIGINT) AS mean FROM gr GROUP BY i
-        |)
-        |SELECT gr.i AS media_id,
-        |  CAST(MAX(gr.w) AS INTEGER) AS width,
-        |  CAST(MAX(gr.h) AS INTEGER) AS height,
-        |  CAST(SUM(CASE WHEN gray > mean AND idx < 32
-        |    THEN CAST(1 AS BIGINT) << CAST(idx AS INTEGER) ELSE 0 END)
-        |    AS BIGINT) AS ahash_lo,
-        |  CAST(SUM(CASE WHEN gray > mean AND idx >= 32
-        |    THEN CAST(1 AS BIGINT) << CAST(idx - 32 AS INTEGER) ELSE 0 END)
-        |    AS BIGINT) AS ahash_hi,
-        |  CAST(SUM(CASE WHEN gray > mean THEN 1 ELSE 0 END) AS INTEGER)
-        |    AS bits_set
-        |FROM gr JOIN m ON m.i = gr.i
-        |GROUP BY gr.i
-        |ORDER BY media_id""") { (s, _) =>
-      import s.implicits._
-      val recs = (0 until 20).map { i =>
-        Multimodal.MediaRecord(i.toLong, "image",
-          Multimodal.syntheticPng(16 + (i * 7) % 97, 12 + (i * 5) % 71,
-            i.toLong), "synthetic")
-      }
-      Multimodal.imageAHash(s.createDataset(recs).repartition(4), 8)
-        .toDF()
-        .select(col("media_id"), col("width"), col("height"),
-          col("ahash").bitwiseAND(lit(0xFFFFFFFFL)).as("ahash_lo"),
-          shiftrightunsigned(col("ahash"), 32).as("ahash_hi"),
-          col("bits_set"))
-        .orderBy("media_id")
-    },
-
-    // ---- image near-dup pairs: banded aHash join + exact popcount --------
-    // The consumer the perceptual hash exists for — the multimodal
-    // analogue of doc_minhash_lsh: 4 × 16-bit bands over the 64-bit
-    // aHash, candidates share ≥1 band (equi-join, never corpus²), exact
-    // XOR-popcount verification at Hamming ≤ 3. Pigeonhole makes the
-    // banding EXACT (3 differing bits cannot hit all 4 bands), so the
-    // oracle is the clean declarative form — all pairs with popcount ≤ 3
-    // over the closed-form hashes — which verifies the banded plan lost
-    // nothing. Fixture: 60 synthetic gradients in 3 groups of 20; group
-    // 1 shifts group 0's seed by +1 (near-identical pixels → tiny
-    // Hamming distance), group 2 by +1000 (far); popcounts run per
-    // 32-bit half in the oracle because DuckDB's SUM promotion would
-    // otherwise need a sign-unsafe 2^63 reassembly.
-    sql("mm_neardup_images",
-      """WITH imgs AS (
-        |  SELECT i,
-        |    16 + ((i % 20) * 7) % 97 AS w, 12 + ((i % 20) * 5) % 71 AS h,
-        |    i % 20 + CASE i // 20 WHEN 1 THEN 1 WHEN 2 THEN 1000
-        |      ELSE 0 END AS seed
-        |  FROM (SELECT unnest(range(60)) AS i)
-        |), gr AS (
-        |  SELECT i, y * 8 + x AS idx,
-        |    ((v // 65536) % 256 + (v // 256) % 256 + v % 256) // 3 AS gray
-        |  FROM (
-        |    SELECT i, x, y,
-        |      (((x * w) // 8) * 31 + ((y * h) // 8) * 17 + seed) % 16777215 AS v
-        |    FROM imgs,
-        |      (SELECT unnest(range(8)) AS y) ys,
-        |      (SELECT unnest(range(8)) AS x) xs)
-        |), m AS (
-        |  SELECT i, CAST(SUM(gray) // 64 AS BIGINT) AS mean FROM gr GROUP BY i
-        |), hsh AS (
-        |  SELECT gr.i,
-        |    CAST(SUM(CASE WHEN gray > mean AND idx < 32
-        |      THEN CAST(1 AS BIGINT) << CAST(idx AS INTEGER) ELSE 0 END)
-        |      AS BIGINT) AS lo,
-        |    CAST(SUM(CASE WHEN gray > mean AND idx >= 32
-        |      THEN CAST(1 AS BIGINT) << CAST(idx - 32 AS INTEGER) ELSE 0 END)
-        |      AS BIGINT) AS hi
-        |  FROM gr JOIN m ON m.i = gr.i
-        |  GROUP BY gr.i
-        |)
-        |SELECT a.i AS media_a, b.i AS media_b,
-        |  CAST(bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi))
-        |    AS INTEGER) AS hamming
-        |FROM hsh a JOIN hsh b ON a.i < b.i
-        |WHERE bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) <= 3
-        |ORDER BY media_a, media_b""") { (s, _) =>
-      import s.implicits._
-      val recs = (0 until 60).map { i =>
-        val base = i % 20
-        val seed = base + (i / 20 match {
-          case 1 => 1; case 2 => 1000; case _ => 0 })
-        Multimodal.MediaRecord(i.toLong, "image",
-          Multimodal.syntheticPng(16 + (base * 7) % 97, 12 + (base * 5) % 71,
-            seed.toLong), "synthetic")
-      }
-      Multimodal.imageNearDupPairs(
-        Multimodal.imageAHash(s.createDataset(recs).repartition(4), 8).toDF())
-        .orderBy("media_a", "media_b")
-    },
-
-    // ---- multimodal REAL audio decode (javax.sound.sampled), full oracle -
-    // Same move as mm_png_decode for the other JDK-shipped codec: WAV/PCM
-    // fixtures whose sample rate / channels / frame count follow known
-    // arithmetic; the engine decodes every frame through the audio system
-    // (reads the stream to exhaustion, counts what came out) and the
-    // oracle re-derives the metadata from the same closed-form arithmetic.
-    // duration_ms = frames * 1000 // rate — integer floor in both engines.
-    // Video remains the one documented stub (no JDK codec).
-    sql("mm_wav_decode",
-      """SELECT i AS media_id, 'wave' AS format,
-        |  ([8000,11025,16000,22050,44100])[CAST(i % 5 + 1 AS INTEGER)] AS sample_rate,
-        |  CAST(1 + i % 2 AS INTEGER) AS channels,
-        |  CAST(1000 + i * 37 AS BIGINT) AS n_frames,
-        |  CAST((1000 + i * 37) * 1000 //
-        |    ([8000,11025,16000,22050,44100])[CAST(i % 5 + 1 AS INTEGER)] AS BIGINT) AS duration_ms
-        |FROM (SELECT unnest(range(20)) AS i)
-        |ORDER BY media_id""") { (s, _) =>
-      import s.implicits._
-      val rates = Seq(8000, 11025, 16000, 22050, 44100)
-      val recs = (0 until 20).map { i =>
-        Multimodal.MediaRecord(i.toLong, "audio",
-          Multimodal.syntheticWav(rates(i % 5), 1 + i % 2, 1000 + i * 37,
-            i.toLong), "synthetic")
-      }
-      Multimodal.decodeWav(s.createDataset(recs).repartition(4))
-        .toDF()
-        .select(col("media_id"), col("format"), col("sample_rate"),
-          col("channels"), col("n_frames"), col("duration_ms"))
-        .orderBy("media_id")
-    },
-
-    // ---- multimodal REAL audio decimation (the audio frame-sample) -------
-    // Every 4th frame kept by pure integer frame indexing (no resampling
-    // filter — coefficients would be implementation-defined), with a
-    // position-weighted checksum over the kept 16-bit samples. The
-    // fixture WAVs plant sample(idx) = (idx·257 + seed·131) mod 65536 −
-    // 32768, so the checksum is closed-form — a hash match proves the
-    // full PCM decode ran AND exactly the right frames/channels were
-    // kept (an off-by-one stride or channel swap cannot match).
-    sql("mm_wav_decimate",
-      """WITH p AS (
-        |  SELECT i, 1 + i % 2 AS ch, 1000 + i * 37 AS nf,
-        |    ([8000,11025,16000,22050,44100])[CAST(i % 5 + 1 AS INTEGER)] AS rate
-        |  FROM (SELECT unnest(range(20)) AS i)
-        |), cs AS (
-        |  SELECT i, CAST(SUM((kk * ch + c + 1) *
-        |      (((4 * kk * ch + c) * 257 + i * 131) % 65536 - 32768))
-        |    AS BIGINT) AS s
-        |  FROM p,
-        |    unnest(range((nf + 3) // 4)) AS tk(kk),
-        |    unnest(range(ch)) AS tc(c)
-        |  GROUP BY i
-        |)
-        |SELECT p.i AS media_id, CAST(p.rate AS INTEGER) AS sample_rate,
-        |  CAST(p.ch AS INTEGER) AS channels,
-        |  CAST(p.nf AS BIGINT) AS n_frames_in,
-        |  CAST((p.nf + 3) // 4 AS BIGINT) AS n_frames_kept,
-        |  cs.s AS pcm_checksum
-        |FROM p JOIN cs ON cs.i = p.i
-        |ORDER BY media_id""") { (s, _) =>
-      import s.implicits._
-      val rates = Seq(8000, 11025, 16000, 22050, 44100)
-      val recs = (0 until 20).map { i =>
-        Multimodal.MediaRecord(i.toLong, "audio",
-          Multimodal.syntheticWav(rates(i % 5), 1 + i % 2, 1000 + i * 37,
-            i.toLong), "synthetic")
-      }
-      Multimodal.decimateWav(s.createDataset(recs).repartition(4), everyN = 4)
-        .toDF()
-        .orderBy("media_id")
-    },
-
-    // ---- multimodal REAL audio frame features (energy / ZCR / peak) ------
-    // The feature-extraction step before audio quality gating: per
-    // 256-frame analysis window, exact-integer Σ s² (energy), strict
-    // sign-flip count per channel (zero-crossing rate's numerator), and
-    // max |s| (clipping probe). The fixture sample arithmetic is
-    // closed-form (interleaved index j: s = (j·257 + seed·131) mod 65536
-    // − 32768), so the oracle replays every window WITHOUT a LAG — the
-    // predecessor sample is just the formula at j − ch. A hash match
-    // proves the real decode ran and the window/channel indexing is
-    // exactly right.
-    sql("mm_wav_features",
-      """WITH p AS (
-        |  SELECT i, 1 + i % 2 AS ch, 1000 + i * 37 AS nf
-        |  FROM (SELECT unnest(range(20)) AS i)
-        |), sm AS (
-        |  SELECT i, (j // ch) // 256 AS w, j // ch AS f, (j // ch) % 256 AS fo,
-        |    (j * 257 + i * 131) % 65536 - 32768 AS s,
-        |    ((j - ch) * 257 + i * 131) % 65536 - 32768 AS sp
-        |  FROM p, unnest(range(nf * ch)) AS tj(j)
-        |)
-        |SELECT i AS media_id, CAST(w AS BIGINT) AS frame_idx,
-        |  CAST(COUNT(*) AS BIGINT) AS n_samples,
-        |  CAST(SUM(s * s) AS BIGINT) AS energy_sq,
-        |  CAST(SUM(CASE WHEN fo > 0 AND sp * s < 0 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS zero_crossings,
-        |  CAST(MAX(ABS(s)) AS BIGINT) AS peak_abs
-        |FROM sm GROUP BY i, w
-        |ORDER BY media_id, frame_idx""") { (s, _) =>
-      import s.implicits._
-      val rates = Seq(8000, 11025, 16000, 22050, 44100)
-      val recs = (0 until 20).map { i =>
-        Multimodal.MediaRecord(i.toLong, "audio",
-          Multimodal.syntheticWav(rates(i % 5), 1 + i % 2, 1000 + i * 37,
-            i.toLong), "synthetic")
-      }
-      Multimodal.wavFrameFeatures(s.createDataset(recs).repartition(4),
-          windowLen = 256)
-        .toDF()
-        .orderBy("media_id", "frame_idx")
-    },
-
-    // ---- multimodal REAL motion decode (multi-frame GIF), full oracle ----
-    // The one motion format with an in-JDK codec: animated GIF via
-    // javax.imageio's sequence reader. Fixtures are synthetic multi-frame
-    // GIFs whose frame counts and dimensions follow known arithmetic; the
-    // engine decodes EVERY frame's pixels (reader.read(i) over an exact
-    // getNumImages(true) scan) and the oracle re-derives the metadata
-    // closed-form — a hash match proves the frame-by-frame decode ran.
-    // True video containers (mp4 etc.) remain the documented stub.
-    sql("mm_gif_frames",
-      """SELECT i AS media_id, 'gif' AS format,
-        |  CAST(1 + i % 6 AS INTEGER) AS n_frames,
-        |  CAST(8 + (i * 5) % 40 AS INTEGER) AS width,
-        |  CAST(6 + (i * 3) % 28 AS INTEGER) AS height
-        |FROM (SELECT unnest(range(18)) AS i)
-        |ORDER BY media_id""") { (s, _) =>
-      import s.implicits._
-      val recs = (0 until 18).map { i =>
-        Multimodal.MediaRecord(i.toLong, "video",
-          Multimodal.syntheticGif(8 + (i * 5) % 40, 6 + (i * 3) % 28,
-            1 + i % 6, i.toLong), "synthetic")
-      }
-      Multimodal.decodeGif(s.createDataset(recs).repartition(4))
-        .toDF()
-        .select(col("media_id"), col("format"), col("n_frames"),
-          col("width"), col("height"))
-        .orderBy("media_id")
-    },
-
-    // ---- multimodal MJPEG FRAME decode (true video frames, pure JVM) -----
-    // Back-to-back baseline JPEGs (the MJPEG wire form) split by a
-    // segment-aware marker walker and pixel-decoded frame by frame with
-    // the JDK's JPEG codec. Fixtures are solid-gray frames at quality
-    // 1.0 (all-ones quant tables → the uniform block's DC survives
-    // exactly; spec-pinned bit round trip), so the position-weighted
-    // pixel checksum is CLOSED-FORM: g · n(n+1)/2, n = w·h — an
-    // off-by-one frame split, wrong frame order, or a decode that
-    // didn't run cannot reproduce it.
-    sql("mm_mjpeg_frames",
-      """SELECT i AS media_id, CAST(f AS INTEGER) AS frame_idx,
-        |  CAST(8 + (i * 5) % 40 AS INTEGER) AS width,
-        |  CAST(6 + (i * 3) % 28 AS INTEGER) AS height,
-        |  CAST((29 + i * 7 + f * 13) % 256 AS BIGINT)
-        |    * ((8 + (i * 5) % 40) * (6 + (i * 3) % 28))
-        |    * ((8 + (i * 5) % 40) * (6 + (i * 3) % 28) + 1) // 2 AS checksum
-        |FROM (SELECT i, unnest(range(1 + i % 6)) AS f
-        |      FROM (SELECT unnest(range(18)) AS i))
-        |ORDER BY media_id, frame_idx""") { (s, _) =>
-      import s.implicits._
-      val recs = (0 until 18).map { i =>
-        Multimodal.MediaRecord(i.toLong, "video",
-          Multimodal.syntheticMjpeg(8 + (i * 5) % 40, 6 + (i * 3) % 28,
-            1 + i % 6, i.toLong), "synthetic")
-      }
-      Multimodal.decodeMjpeg(s.createDataset(recs).repartition(4))
-        .toDF()
-        .select(col("media_id"), col("frame_idx"), col("width"),
-          col("height"), col("checksum"))
-        .orderBy("media_id", "frame_idx")
-    },
-
-    // ---- multimodal AVI (RIFF) frame decode ------------------------------
-    // MJPEG as it actually arrives: RIFF/AVI chunks, not raw
-    // concatenated JPEGs. decodeAviFrames walks the little-endian chunk
-    // tree (LIST hdrl skipped, odd-size JUNK pad rule exercised, frames
-    // pulled from LIST movi's 00dc chunks) and pixel-decodes each frame
-    // through the same JDK JPEG path as mm_mjpeg_frames — so the oracle
-    // is the same closed form, over a DIFFERENT fixture arithmetic:
-    // g · n(n+1)/2 with g = (29 + i·7 + f·13) % 256, n = w·h.
-    sql("mm_avi_frames",
-      """SELECT i AS media_id, CAST(f AS INTEGER) AS frame_idx,
-        |  CAST(8 + (i * 7) % 40 AS INTEGER) AS width,
-        |  CAST(6 + (i * 5) % 28 AS INTEGER) AS height,
-        |  CAST((29 + i * 7 + f * 13) % 256 AS BIGINT)
-        |    * ((8 + (i * 7) % 40) * (6 + (i * 5) % 28))
-        |    * ((8 + (i * 7) % 40) * (6 + (i * 5) % 28) + 1) // 2 AS checksum
-        |FROM (SELECT i, unnest(range(1 + i % 5)) AS f
-        |      FROM (SELECT unnest(range(18)) AS i))
-        |ORDER BY media_id, frame_idx""") { (s, _) =>
-      import s.implicits._
-      val recs = (0 until 18).map { i =>
-        Multimodal.MediaRecord(i.toLong, "video",
-          Multimodal.syntheticAvi(8 + (i * 7) % 40, 6 + (i * 5) % 28,
-            1 + i % 5, i.toLong), "synthetic")
-      }
-      Multimodal.decodeAvi(s.createDataset(recs).repartition(4))
-        .toDF()
-        .select(col("media_id"), col("frame_idx"), col("width"),
-          col("height"), col("checksum"))
-        .orderBy("media_id", "frame_idx")
-    },
-
-    // ---- multimodal mp4 CONTAINER metadata (pure-JVM box parser) ---------
-    // The former "video stub" boundary, retired for metadata: no JDK
-    // codec decodes mp4 FRAMES, but the ISO-BMFF container needs none —
-    // decodeMp4Meta walks ftyp/moov/mvhd/trak/tkhd/stsd (32/64-bit box
-    // sizes, version 0 AND 1 layouts — fixtures alternate) and the
-    // oracle re-derives duration/width/height/codec closed-form from the
-    // fixture arithmetic. duration_ms survives the double integer floor
-    // (ms → timescale ticks → ms), replicated exactly via DuckDB's //.
-    // Only true SAMPLE decode (pixels/audio of mp4 tracks) remains
-    // stubbed, the one thing that genuinely needs a native codec.
-    sql("mm_mp4_meta",
-      """SELECT i AS media_id, 'mp4' AS format,
-        |  (((2000 + i * 333) * ([600,1000,90000])[CAST(i % 3 + 1 AS INTEGER)] // 1000)
-        |    * 1000 // ([600,1000,90000])[CAST(i % 3 + 1 AS INTEGER)]) AS duration_ms,
-        |  CAST(160 + (i * 16) % 480 AS INTEGER) AS width,
-        |  CAST(120 + (i * 8) % 360 AS INTEGER) AS height,
-        |  (['avc1','hev1','mp4v'])[CAST(i % 3 + 1 AS INTEGER)] AS codec
-        |FROM (SELECT unnest(range(18)) AS i)
-        |ORDER BY media_id""") { (s, _) =>
-      import s.implicits._
-      val timescales = Seq(600L, 1000L, 90000L)
-      val codecs = Seq("avc1", "hev1", "mp4v")
-      val recs = (0 until 18).map { i =>
-        Multimodal.MediaRecord(i.toLong, "video",
-          Multimodal.syntheticMp4(160 + (i * 16) % 480, 120 + (i * 8) % 360,
-            2000L + i * 333L, timescales(i % 3), codecs(i % 3),
-            version = i % 2, seed = i.toLong), "synthetic")
-      }
-      Multimodal.decodeMp4(s.createDataset(recs).repartition(4))
-        .toDF()
-        .select(col("media_id"), col("format"), col("duration_ms"),
-          col("width"), col("height"), col("codec"))
-        .orderBy("media_id")
-    },
-
-    // ---- multimodal feature extraction, full oracle ----------------------
-    // The md5-seeded feature stub is re-derived end to end in DuckDB:
-    // payload md5 (the payload IS the text's UTF-8 bytes, so md5(text) in
-    // DuckDB = md5 of the payload) stretched into a 64-hex-char pool
-    // (ph ‖ md5('1|'‖ph)), 4-hex-char slices % 1000 on [-1,1) cast
-    // through FLOAT exactly like the Scala stub, then per-record norms
-    // (left-to-right dot product) and an exact decimal mean per kind.
-    // Verifies the distributed feature plumbing's values, not just its
-    // shape — with 2 digests per record, not 17 (the r3 bench note).
-    sql("mm_feature_stats",
-      """WITH m AS (
-        |  SELECT (['image','audio','video'])[CAST(doc_id % 3 + 1 AS INTEGER)] AS kind,
-        |    md5(text) AS ph
-        |  FROM documents
-        |), p AS (
-        |  SELECT kind, ph || md5('1|' || ph) AS pool FROM m
-        |), f AS (
-        |  SELECT kind,
-        |    list_transform(range(16), i ->
-        |      CAST(CAST(CAST(CAST('0x' || substr(pool, CAST(i * 4 + 1 AS INTEGER), 4) AS BIGINT) % 1000 AS DOUBLE)
-        |        / 500.0 - 1.0 AS FLOAT) AS DOUBLE)) AS fe
-        |  FROM p
-        |), n AS (
-        |  SELECT kind, sqrt(list_dot_product(fe, fe)) AS nrm FROM f
-        |)
-        |SELECT kind, COUNT(*) AS n,
-        |  ROUND(CAST(SUM(CAST(nrm AS DECIMAL(30,10))) AS DOUBLE) / COUNT(nrm), 6) AS avg_norm
-        |FROM n
-        |GROUP BY kind
-        |ORDER BY kind""") { (s, dir) =>
-      import graft.trace.DerivedTables.exactMean
-      Multimodal.features(Multimodal.syntheticMedia(s, dir)).toDF()
-        .select(col("kind"),
-          sqrt(aggregate(transform(col("feature"),
-            x => x.cast("double") * x.cast("double")),
-            lit(0.0), (acc, x) => acc + x)).as("nrm"))
-        .groupBy("kind")
-        .agg(count(lit(1)).as("n"),
-          round(exactMean(col("nrm")), 6).as("avg_norm"))
-        .orderBy("kind")
-    },
-
-    // ---- video frame-sampling stub, full oracle --------------------------
-    // The 1024-byte/every-4th slice rule collapses to closed-form
-    // arithmetic on payload byte length — the oracle checks the exploded
-    // frame shape's counts exactly.
-    sql("mm_frame_samples",
-      """WITH v AS (
-        |  SELECT doc_id AS media_id, octet_length(encode(text)) AS l
-        |  FROM documents WHERE doc_id % 3 = 2 AND octet_length(encode(text)) > 0
-        |), c AS (
-        |  SELECT media_id, l, CAST(ceil(l / 1024.0) AS BIGINT) AS nc FROM v
-        |)
-        |SELECT media_id, CAST((nc + 3) // 4 AS BIGINT) AS n_frames,
-        |  CAST(((nc + 3) // 4 - 1) * 1024 +
-        |    CASE WHEN 4 * ((nc + 3) // 4 - 1) = nc - 1
-        |         THEN l - 1024 * (nc - 1) ELSE 1024 END AS BIGINT) AS sampled_bytes
-        |FROM c ORDER BY media_id""") { (s, dir) =>
-      Multimodal.sampleFrames(Multimodal.syntheticMedia(s, dir))
-        .groupBy("media_id")
-        .agg(count(lit(1)).as("n_frames"),
-          sum(length(col("frame_bytes"))).as("sampled_bytes"))
-        .orderBy("media_id")
     }
   )
 }

@@ -289,37 +289,6 @@ object StreamingOps {
       .select(col(idCol), col("old_id"), col("tbl"), col("cosine"))
   }
 
-  /** ==== streaming image near-dup alerts ==== the multimodal twin of
-    * [[embNearDupAlerts]]: each ARRIVING image decodes to its perceptual
-    * aHash per-partition (a stateless projection — no state store, no
-    * watermark), bands exactly as `Multimodal.imageNearDupPairs`, and
-    * probes the STATIC corpus band index (`Multimodal.bandedHashes` over
-    * the stored fingerprints) via a stream-static inner join; candidates
-    * verify by exact XOR popcount ≤ `maxDist`. Unlike the LSH alert
-    * there is NO recall trade: banding is exact by pigeonhole
-    * (maxDist < bands), so every stored near-duplicate of an arriving
-    * image alerts. Emits one row per shared band like the other alerts
-    * (distinct-ing a stream needs state) — dedupe downstream if volume
-    * matters. Returns (media_id, old_id, band, hamming). */
-  def imageNearDupAlerts(media: Dataset[graft.ops.Multimodal.MediaRecord],
-      corpusBands: DataFrame, maxDist: Int = 3, bands: Int = 4,
-      grid: Int = 8): DataFrame = {
-    require(maxDist >= 0 && maxDist < bands,
-      s"exact recall needs maxDist < bands (pigeonhole), got $maxDist/$bands")
-    val hashed = graft.ops.Multimodal.imageAHash(media, grid).toDF()
-    graft.ops.Multimodal.bandedHashes(hashed, "media_id", "ahash", bands)
-      .select(col("media_id"), col("ahash").as("__h"),
-        col("band"), col("key"))
-      .join(corpusBands.select(col("media_id").as("old_id"),
-        col("ahash").as("__oh"), col("band"), col("key")),
-        Seq("band", "key"), "inner")
-      .filter(col("media_id") =!= col("old_id"))
-      .withColumn("hamming", bit_count(col("__h").bitwiseXOR(col("__oh"))))
-      .filter(col("hamming") <= maxDist)
-      .select(col("media_id"), col("old_id"), col("band"),
-        col("hamming").cast("int").as("hamming"))
-  }
-
   case class DistinctPoint(key: String, value: String,
       ts: java.sql.Timestamp = null)
   case class HllState(n_seen: Long, regs: Array[Byte])

@@ -28,24 +28,30 @@ object Detectors {
       max(t).as("last_ts"))
   }
 
-  /** Attach a baseline (mean/stddev) per role with a field-wise 'ALL'
-    * fallback (detectors.py:20-57). The metric's baselines fold into ONE
-    * role → (mean, stddev) map, read as a scalar subquery: the baselines
-    * subtree runs once and its value reaches every task, with no join to
-    * plan. Baselines hold one row per (metric_name, role), as
+  /** Attach b_mean / b_std per row with a field-wise 'ALL' fallback
+    * (detectors.py:20-57). The baselines fold into ONE key → (mean,
+    * stddev) map, read as a scalar subquery: the baselines subtree runs
+    * once and its value reaches every task, with no join to plan. `key`
+    * builds the map key from a role column; a row looks up its own role,
+    * then 'ALL'. Baselines hold one row per (metric_name, role), as
     * metricBaselines builds them. */
-  def withBaseline(rows: DataFrame, baselines: DataFrame,
-      metricName: String): DataFrame = {
-    val byRole = baselines.filter(col("metric_name") === metricName)
-      .agg(map_from_entries(collect_list(struct(col("role"),
-        struct(col("mean"), col("stddev")))))).scalar()
-    val own = element_at(col("b_map"), coalesce(col("role"), lit("ALL")))
-    val all = element_at(col("b_map"), lit("ALL"))
-    rows.withColumn("b_map", byRole)
+  private def lookupBaseline(rows: DataFrame, baselines: DataFrame,
+      key: Column => Column): DataFrame = {
+    val byKey = baselines.agg(map_from_entries(collect_list(struct(
+      key(col("role")), struct(col("mean"), col("stddev")))))).scalar()
+    val own = element_at(col("b_map"), key(coalesce(col("role"), lit("ALL"))))
+    val all = element_at(col("b_map"), key(lit("ALL")))
+    rows.withColumn("b_map", byKey)
       .withColumn("b_mean", coalesce(own("mean"), all("mean")))
       .withColumn("b_std", coalesce(own("stddev"), all("stddev")))
       .drop("b_map")
   }
+
+  /** One metric's baseline per row's role, via [[lookupBaseline]]. */
+  def withBaseline(rows: DataFrame, baselines: DataFrame,
+      metricName: String): DataFrame =
+    lookupBaseline(rows, baselines.filter(col("metric_name") === metricName),
+      identity)
 
   /** storage_engine_pressure (detectors.py:60-122): VersionLag on
     * StorageMetrics events; flag z ≥ 3 vs baseline OR raw > 50000. */
@@ -235,7 +241,8 @@ object Detectors {
   }
 
   /** baseline_window_anomalies (detectors.py:288-352): per-bucket metric
-    * means vs the baseline table, z ≥ threshold, cnt ≥ minSamples. */
+    * means vs the baseline table, z ≥ threshold, cnt ≥ minSamples. The
+    * baselines are read once, through [[lookupBaseline]]. */
   def baselineWindowAnomalies(metrics: DataFrame, baselines: DataFrame,
       bucketSeconds: Int = 30, zThreshold: Double = 3.0,
       minSamples: Int = 3,
@@ -255,20 +262,11 @@ object Detectors {
       .agg(DerivedTables.exactMean(col("metric_value")).as("mean_val"),
         count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minSamples)
-    val b = baselines.select(col("metric_name").as("bm"),
-      col("role").as("b_role"),
-      col("mean").as("b_mean"), col("stddev").as("b_std"))
-    val bAll = baselines.filter(col("role") === "ALL")
-      .select(col("metric_name").as("am"), col("mean").as("all_mean"),
-        col("stddev").as("all_std"))
-    bucketed
-      .join(broadcast(b),
-        col("metric_name") === col("bm") && col("role") === col("b_role"),
-        "left")
-      .join(broadcast(bAll), col("metric_name") === col("am"), "left")
-      .drop("bm", "b_role", "am")
-      .withColumn("base_mean", coalesce(col("b_mean"), col("all_mean")))
-      .withColumn("base_std", coalesce(col("b_std"), col("all_std")))
+    lookupBaseline(bucketed,
+        baselines.filter(col("metric_name").isin(metricNames.map(lit): _*)),
+        role => struct(col("metric_name"), role.as("role")))
+      .withColumnRenamed("b_mean", "base_mean")
+      .withColumnRenamed("b_std", "base_std")
       .withColumn("zscore",
         when(col("base_std").isNotNull && col("base_std") > 0,
           abs((col("mean_val") - col("base_mean")) / col("base_std"))))

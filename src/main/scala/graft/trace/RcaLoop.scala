@@ -106,13 +106,6 @@ object RcaLoop {
       shared: Option[Shared] = None): DataFrame = {
     val spark = events.sparkSession
     val ev = if (shared.isDefined) events else events.cache()
-    def prof[T](label: String)(f: => T): T =
-      if (sys.env.contains("GRAFT_RCA_PROF")) {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(
-          f"[rcaprof] $label ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      } else f
 
     val trace = mutable.ArrayBuffer.empty[IterationTrace]
     val evidence = mutable.ArrayBuffer.empty[(String, String)]
@@ -173,7 +166,7 @@ object RcaLoop {
     // time-span summaries fold onto one shared (severity, event)
     // conditional aggregate (its exchange is reused across the three
     // string branches) instead of three separate passes over ev.
-    lazy val sweepRows: Array[org.apache.spark.sql.Row] = prof("sweep") {
+    lazy val sweepRows: Array[org.apache.spark.sql.Row] = {
       def s1(idx: Int, tool: String, df: DataFrame): DataFrame =
         df.toDF("summary").select(lit(idx).as("idx"), lit(0L).as("k1"),
           lit(0L).as("k2"), lit(0L).as("k3"), lit(0.0).as("kd"),
@@ -313,7 +306,7 @@ object RcaLoop {
     }
     def runBatchWindows(buckets: Seq[Long]): Map[Long, Seq[String]] = {
       if (buckets.isEmpty) return Map.empty
-      prof("prefetch")(batchWindowsDf(buckets).collect())
+      batchWindowsDf(buckets).collect()
         .groupBy(_.getAs[Long]("bucket"))
         .map { case (b, rows) =>
           b -> rows.sortBy(_.getAs[Int]("rk")).toSeq.map(_.getAs[String]("line")) }
@@ -374,9 +367,6 @@ object RcaLoop {
             "Events:\n" + contextLines.take(cfg.promptEventLimit).mkString("\n") +
             "\nEvidence:\n" +
             evidence.map { case (t, s) => s"$t: $s" }.mkString("\n"))
-          if (sys.env.contains("GRAFT_RCA_DEBUG"))
-            System.err.println(
-              s"=PROMPT ${llmCalls + 1}=\n$prompt\n=ENDPROMPT=")
           import spark.implicits._
           val resp = LlmBoundary.hypothesis(
             LlmBoundary.infer(

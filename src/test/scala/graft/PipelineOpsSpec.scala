@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{GraftFunctions, SimHash, TextFunctions}
-import graft.ops.{Multimodal, TextAnalysis, VectorSearch}
+import graft.ops.{TextAnalysis, VectorSearch}
 
 /** Training-data pipeline operators: LSH ANN recall, SimHash locality,
-  * language ID, multimodal plumbing. */
+  * language ID. */
 class PipelineOpsSpec extends SparkSpec {
 
   import spark.implicits._
@@ -716,395 +716,6 @@ class PipelineOpsSpec extends SparkSpec {
       "le chien court dans la rue et il est pour les amis") === "fr")
     assert(TextAnalysis.LangId.detect("") === "unknown")
     assert(TextAnalysis.LangId.detect("12345 67890") === "unknown")
-  }
-
-  test("multimodal: decode/feature/frame plumbing is deterministic") {
-    val media = Multimodal.syntheticMedia(spark, sf("")).cache()
-    assert(media.count() === 500)
-    val meta = Multimodal.decode(media).cache()
-    assert(meta.count() === 500)
-    val m = meta.filter(_.kind == "audio").head()
-    assert(m.width === -1 && m.duration_ms > 0)
-    val img = meta.filter(_.kind == "image").head()
-    assert(img.width > 0 && img.height > 0 && img.duration_ms === -1L)
-    // deterministic: two runs give identical checksums
-    val c1 = meta.select("media_id", "checksum").collect().toSet
-    val c2 = Multimodal.decode(media).select("media_id", "checksum")
-      .collect().toSet
-    assert(c1 === c2)
-    val feats = Multimodal.features(media)
-    assert(feats.head().feature.length === 16)
-    val frames = Multimodal.sampleFrames(media)
-    assert(frames.count() > 0)
-    // every sampled frame comes from a video record
-    val vids = media.filter(_.kind == "video").select("media_id")
-    assert(frames.join(vids, Seq("media_id"), "left_anti").count() === 0)
-  }
-
-  test("multimodal: real PNG decode reads true dimensions; non-images fall back to the stub") {
-    // round-trip through the JDK codec: write a known-size PNG, decode it
-    // distributed, and get the true dimensions back from the pixel data
-    val recs = Seq(
-      Multimodal.MediaRecord(1L, "image",
-        Multimodal.syntheticPng(33, 21, seed = 5L), "t"),
-      Multimodal.MediaRecord(2L, "image",
-        Multimodal.syntheticPng(128, 1, seed = 9L), "t"),
-      // text bytes: no ImageIO reader claims them -> stub fallback
-      Multimodal.MediaRecord(3L, "image",
-        "definitely not an image".getBytes("UTF-8"), "t"))
-    import spark.implicits._
-    val out = Multimodal.decodeReal(spark.createDataset(recs).repartition(2))
-      .collect().sortBy(_.media_id)
-    assert(out(0).format === "png" && out(0).width === 33 && out(0).height === 21)
-    assert(out(1).format === "png" && out(1).width === 128 && out(1).height === 1)
-    // the fallback row carries the stub's deterministic fake metadata
-    assert(out(2) === Multimodal.decodeStub(recs(2)))
-    // direct decode of generator output is exact for any dims
-    assert(Multimodal.decodeImage(recs(0)).get.checksum ===
-      Multimodal.decodeStub(recs(0)).checksum)
-  }
-
-  test("multimodal: integer nearest-neighbor resize picks exact source pixels") {
-    import spark.implicits._
-    // planted-gradient PNGs: checksum re-derived from the same arithmetic
-    val recs = (0 until 6).map { i =>
-      Multimodal.MediaRecord(i.toLong, "image",
-        Multimodal.syntheticPng(10 + i * 9, 7 + i * 5, i.toLong), "synthetic")
-    } :+ Multimodal.MediaRecord(99L, "image",
-      "not an image".getBytes("UTF-8"), "synthetic")
-    val got = Multimodal.resizeImages(
-        spark.createDataset(recs).repartition(3), outW = 8, outH = 5)
-      .collect().map(r => r.media_id -> r).toMap
-    assert(!got.contains(99L), "non-images must drop, not stub")
-    (0 until 6).foreach { i =>
-      val (w, h) = (10 + i * 9, 7 + i * 5)
-      var want = 0L
-      for (y <- 0 until 5; x <- 0 until 8) {
-        val (sx, sy) = (x * w / 8, y * h / 5)
-        want += (y.toLong * 8 + x + 1) * ((sx * 31L + sy * 17L + i) % 0xFFFFFF)
-      }
-      val r = got(i.toLong)
-      assert((r.src_width, r.src_height, r.out_width, r.out_height) ===
-        ((w, h, 8, 5)), s"dims for $i")
-      assert(r.pix_checksum === want,
-        s"checksum for $i: got ${r.pix_checksum}, want $want")
-    }
-    // upscale case: 3x2 source onto the 8x5 grid replicates pixels
-    val up = Multimodal.resizeImages(spark.createDataset(Seq(
-      Multimodal.MediaRecord(7L, "image",
-        Multimodal.syntheticPng(3, 2, 7L), "synthetic"))), 8, 5)
-      .collect()(0)
-    var wantUp = 0L
-    for (y <- 0 until 5; x <- 0 until 8)
-      wantUp += (y.toLong * 8 + x + 1) *
-        ((x * 3 / 8 * 31L + y * 2 / 5 * 17L + 7L) % 0xFFFFFF)
-    assert(up.pix_checksum === wantUp, "upscale must replicate source pixels")
-  }
-
-  test("multimodal: average-hash matches the closed-form gradient; exact dups collide") {
-    import spark.implicits._
-    val recs = Seq(
-      Multimodal.MediaRecord(1L, "image", Multimodal.syntheticPng(40, 30, 3L), "t"),
-      Multimodal.MediaRecord(2L, "image", Multimodal.syntheticPng(40, 30, 3L), "t"),
-      Multimodal.MediaRecord(3L, "image", Multimodal.syntheticPng(25, 19, 900000L), "t"),
-      Multimodal.MediaRecord(9L, "image", "not an image".getBytes("UTF-8"), "t"))
-    val got = Multimodal.imageAHash(spark.createDataset(recs).repartition(2), 8)
-      .collect().map(r => r.media_id -> r).toMap
-    assert(!got.contains(9L), "non-images must drop")
-    def naive(w: Int, h: Int, seed: Long): (Long, Int) = {
-      val gray = for (y <- 0 until 8; x <- 0 until 8) yield {
-        val v = ((x * w / 8) * 31L + (y * h / 8) * 17L + seed) % 0xFFFFFF
-        (((v >> 16) & 0xFF) + ((v >> 8) & 0xFF) + (v & 0xFF)) / 3
-      }
-      val mean = gray.sum / 64
-      val bits = gray.zipWithIndex.filter(_._1 > mean).map(_._2)
-      (bits.foldLeft(0L)((a, i) => a | (1L << i)), bits.size)
-    }
-    Seq((1L, 40, 30, 3L), (3L, 25, 19, 900000L)).foreach { case (id, w, h, s) =>
-      val (hash, nbits) = naive(w, h, s)
-      assert(got(id).ahash === hash && got(id).bits_set === nbits,
-        s"hash mismatch for media $id")
-      assert(got(id).width === w && got(id).height === h)
-    }
-    assert(got(1L).ahash === got(2L).ahash,
-      "byte-identical images must share the fingerprint")
-    intercept[IllegalArgumentException] {
-      Multimodal.imageAHashMeta(recs.head, 9) // 81 bits > the 64-bit hash
-    }
-  }
-
-  test("image near-dup pairs == brute-force Hamming filter; banding is exact") {
-    import spark.implicits._
-    val rng = new scala.util.Random(41)
-    val base = rng.nextLong()
-    // planted: (1,2) identical; (1,3) 3 bits apart ACROSS 3 bands (the
-    // pigeonhole case — found via the untouched 4th band); (1,4) 4 bits,
-    // one per band — no shared band, and over maxDist anyway
-    val planted = Seq(
-      1L -> base,
-      2L -> base,
-      3L -> (base ^ 0x0000800080000001L),
-      4L -> (base ^ 0x8000200000400001L))
-    val rand = (10L until 80L).map(i => i -> rng.nextLong())
-    val all = planted ++ rand
-    val got = Multimodal.imageNearDupPairs(all.toDF("media_id", "ahash"))
-    // candidates must gather by equi-join on (band, key), never a product
-    def nodes(p: org.apache.spark.sql.execution.SparkPlan):
-        Seq[org.apache.spark.sql.execution.SparkPlan] =
-      p +: p.children.flatMap(nodes)
-    assert(!nodes(got.queryExecution.executedPlan).exists(n =>
-      n.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec] ||
-      n.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec]),
-      "banded near-dup must never build a product")
-    val gotSet = got.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val want = (for {
-      (a, ha) <- all; (b, hb) <- all if a < b
-      d = java.lang.Long.bitCount(ha ^ hb) if d <= 3
-    } yield (a, b, d)).toSet
-    assert(gotSet === want,
-      "banded pairs must equal the brute-force Hamming ≤ 3 filter")
-    assert(gotSet.contains((1L, 2L, 0)), "identical pair at distance 0")
-    assert(gotSet.contains((1L, 3L, 3)), "3-band spread still found (pigeonhole)")
-    assert(!gotSet.exists(p => p._1 == 1L && p._2 == 4L),
-      "distance-4 pair must not pass the ≤3 contract")
-    // decode path: a +1-seed synthetic twin lands within the threshold
-    val recs = Seq(
-      Multimodal.MediaRecord(1L, "image", Multimodal.syntheticPng(40, 30, 3L), "t"),
-      Multimodal.MediaRecord(2L, "image", Multimodal.syntheticPng(40, 30, 4L), "t"),
-      Multimodal.MediaRecord(3L, "image", Multimodal.syntheticPng(40, 30, 5000L), "t"))
-    val pairs = Multimodal.imageNearDupPairs(
-      Multimodal.imageAHash(spark.createDataset(recs), 8).toDF())
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 2L)), "seed+1 twin must be a near-dup")
-    assert(!pairs.contains((1L, 3L)) && !pairs.contains((2L, 3L)),
-      "a far seed must not pair")
-  }
-
-  test("multimodal: real WAV decode reads true rate/channels/frames; non-audio falls back") {
-    // round-trip through the JDK audio system: write known-parameter PCM
-    // WAVs, decode them distributed (every frame pulled through the
-    // codec), and get the true stream parameters back
-    val recs = Seq(
-      Multimodal.MediaRecord(1L, "audio",
-        Multimodal.syntheticWav(16000, 1, 8123, seed = 3L), "t"),
-      Multimodal.MediaRecord(2L, "audio",
-        Multimodal.syntheticWav(44100, 2, 44100, seed = 7L), "t"))
-    import spark.implicits._
-    val out = Multimodal.decodeWav(spark.createDataset(recs).repartition(2))
-      .collect().sortBy(_.media_id)
-    assert(out(0) === Multimodal.WavMeta(1L, "wave", 16000, 1, 8123,
-      8123L * 1000 / 16000))
-    assert(out(1) === Multimodal.WavMeta(2L, "wave", 44100, 2, 44100, 1000L))
-    // non-audio bytes: the audio system rejects them → None, and
-    // decodeReal degrades them to the stub boundary
-    val junk = Multimodal.MediaRecord(3L, "audio",
-      "definitely not audio".getBytes("UTF-8"), "t")
-    assert(Multimodal.decodeWavMeta(junk).isEmpty)
-    val real = Multimodal.decodeReal(spark.createDataset(Seq(recs.head, junk)))
-      .collect().sortBy(_.media_id)
-    // WAV through decodeReal: real duration, audio has no dimensions
-    assert(real(0).format === "wave" &&
-      real(0).duration_ms === 8123L * 1000 / 16000 &&
-      real(0).width === -1 && real(0).height === -1)
-    assert(real(1) === Multimodal.decodeStub(junk))
-  }
-
-  test("multimodal: audio decimation keeps exactly every Nth frame's samples") {
-    import spark.implicits._
-    val recs = (0 until 4).map { i =>
-      Multimodal.MediaRecord(i.toLong, "audio",
-        Multimodal.syntheticWav(8000, 1 + i % 2, 50 + i * 7, i.toLong),
-        "synthetic")
-    } :+ Multimodal.MediaRecord(99L, "audio",
-      "not a wav".getBytes("UTF-8"), "synthetic")
-    val got = Multimodal.decimateWav(
-        spark.createDataset(recs).repartition(2), everyN = 3)
-      .collect().map(r => r.media_id -> r).toMap
-    assert(!got.contains(99L), "non-PCM payloads must drop")
-    (0 until 4).foreach { i =>
-      val (ch, nf) = (1 + i % 2, 50 + i * 7)
-      var (sum, kept, f) = (0L, 0L, 0)
-      while (f < nf) {
-        for (c <- 0 until ch) {
-          val s = ((f * ch + c) * 257L + i * 131L) % 65536L - 32768L
-          sum += (kept * ch + c + 1) * s
-        }
-        kept += 1; f += 3
-      }
-      val r = got(i.toLong)
-      assert((r.channels, r.n_frames_in, r.n_frames_kept) ===
-        ((ch, nf.toLong, kept)), s"shape for $i")
-      assert(r.pcm_checksum === sum, s"checksum for $i")
-    }
-  }
-
-  test("multimodal: audio frame features exact vs naive decode; stereo + tail window") {
-    import spark.implicits._
-    // 2-channel, 10-frame fixture with windowLen 4 → windows of 4/4/2
-    // frames; plus a mono one crossing a window boundary mid-pattern
-    val recs = Seq(
-      Multimodal.MediaRecord(1L, "audio",
-        Multimodal.syntheticWav(8000, 2, 10, seed = 5L), "t"),
-      Multimodal.MediaRecord(2L, "audio",
-        Multimodal.syntheticWav(16000, 1, 700, seed = 9L), "t"),
-      Multimodal.MediaRecord(99L, "audio",
-        "not a wav".getBytes("UTF-8"), "t"))
-    val got = Multimodal.wavFrameFeatures(
-        spark.createDataset(recs).repartition(2), windowLen = 4)
-      .collect().groupBy(_.media_id)
-    assert(!got.contains(99L), "non-PCM payloads must drop")
-    def naive(id: Long, ch: Int, nf: Int, seed: Long, win: Int) = {
-      def s(f: Int, c: Int): Long = ((f * ch + c) * 257L + seed * 131L) % 65536L - 32768L
-      (0 until (nf + win - 1) / win).map { w =>
-        val fs = (w * win) until math.min(nf, (w + 1) * win)
-        Multimodal.WavFrameFeatures(id, w.toLong, fs.size.toLong * ch,
-          fs.map(f => (0 until ch).map(c => s(f, c) * s(f, c)).sum).sum,
-          fs.filter(_ > w * win).map(f => (0 until ch)
-            .count(c => s(f - 1, c) * s(f, c) < 0L).toLong).sum,
-          fs.map(f => (0 until ch).map(c => math.abs(s(f, c))).max).max)
-      }
-    }
-    assert(got(1L).sortBy(_.frame_idx).toSeq === naive(1L, 2, 10, 5L, 4))
-    assert(got(2L).sortBy(_.frame_idx).toSeq === naive(2L, 1, 700, 9L, 4))
-    assert(got(1L).map(_.n_samples).sorted.toSeq === Seq(4L, 8L, 8L),
-      "tail window must be short")
-    intercept[IllegalArgumentException] {
-      Multimodal.wavFrameFeaturesMeta(recs.head, 0)
-    }
-  }
-
-  test("multimodal: real multi-frame GIF decode counts true frames; non-GIFs drop") {
-    // round-trip through the JDK's GIF sequence codec: write animated
-    // GIFs with known frame counts/dims, decode every frame distributed,
-    // and get the true counts back from the stream scan
-    val recs = Seq(
-      Multimodal.MediaRecord(1L, "video",
-        Multimodal.syntheticGif(24, 16, nFrames = 5, seed = 3L), "t"),
-      Multimodal.MediaRecord(2L, "video",
-        Multimodal.syntheticGif(9, 7, nFrames = 1, seed = 8L), "t"),
-      // a PNG is an image the imageio stack claims, but NOT a gif — the
-      // motion decoder must not misreport single-frame stills of other
-      // formats as 1-frame movies
-      Multimodal.MediaRecord(3L, "video",
-        Multimodal.syntheticPng(10, 10, seed = 2L), "t"),
-      Multimodal.MediaRecord(4L, "video",
-        "definitely not a gif".getBytes("UTF-8"), "t"))
-    import spark.implicits._
-    val out = Multimodal.decodeGif(spark.createDataset(recs).repartition(2))
-      .collect().sortBy(_.media_id)
-    assert(out.toSeq === Seq(
-      Multimodal.GifMeta(1L, "gif", 5, 24, 16),
-      Multimodal.GifMeta(2L, "gif", 1, 9, 7)))
-    // decodeReal still claims the GIF as an image (frame-0 dims), so the
-    // total-function path keeps working for mixed media columns
-    val real = Multimodal.decodeReal(spark.createDataset(recs.take(1)))
-      .collect().head
-    assert(real.format === "gif" && real.width === 24 && real.height === 16)
-  }
-
-  test("multimodal: MJPEG frame decode — closed-form checksums, exact round trip") {
-    // the closed-form contract: a solid gray at quality 1.0 survives
-    // JPEG quantization bit-for-bit (all-ones tables, lone DC), so the
-    // decoded position-weighted checksum is g·n(n+1)/2 from arguments
-    val recs = Seq(
-      Multimodal.MediaRecord(1L, "video",
-        Multimodal.syntheticMjpeg(20, 14, nFrames = 3, seed = 4L), "t"),
-      Multimodal.MediaRecord(2L, "video",
-        Multimodal.syntheticMjpeg(9, 7, nFrames = 1, seed = 11L), "t"),
-      // non-JPEG payloads yield no frames (no SOI / codec rejects)
-      Multimodal.MediaRecord(3L, "video",
-        Multimodal.syntheticPng(10, 10, seed = 2L), "t"),
-      Multimodal.MediaRecord(4L, "video",
-        "definitely not mjpeg".getBytes("UTF-8"), "t"))
-    import spark.implicits._
-    val out = Multimodal.decodeMjpeg(spark.createDataset(recs).repartition(2))
-      .collect().sortBy(r => (r.media_id, r.frame_idx))
-    def want(id: Long, w: Int, h: Int, nF: Int, seed: Long) =
-      (0 until nF).map { f =>
-        val g = ((29L + seed * 7L + f * 13L) % 256L)
-        val n = (w * h).toLong
-        Multimodal.MjpegFrame(id, f, w, h, g * n * (n + 1) / 2)
-      }
-    assert(out.toSeq === want(1L, 20, 14, 3, 4L) ++ want(2L, 9, 7, 1, 11L),
-      "every frame must decode to its closed-form checksum, in order")
-    // frame INDEPENDENCE: truncating the stream mid-way keeps the
-    // leading frames' checksums intact (the walker splits on real
-    // frame boundaries, not byte offsets)
-    val two = Multimodal.syntheticMjpeg(20, 14, 2, 4L)
-    val one = Multimodal.syntheticMjpeg(20, 14, 1, 4L)
-    val frames = Multimodal.decodeMjpegFrames(
-      Multimodal.MediaRecord(9L, "video", two, "t"))
-    assert(frames.length === 2)
-    assert(frames.head.checksum ===
-      Multimodal.decodeMjpegFrames(
-        Multimodal.MediaRecord(9L, "video", one, "t")).head.checksum)
-  }
-
-  test("multimodal: AVI RIFF walker pulls movi 00dc frames; non-AVI drops") {
-    def want(id: Long, w: Int, h: Int, nF: Int, seed: Long) =
-      (0 until nF).map { f =>
-        val g = ((29L + seed * 7L + f * 13L) % 256L)
-        val n = (w * h).toLong
-        Multimodal.MjpegFrame(id, f, w, h, g * n * (n + 1) / 2)
-      }
-    val recs = Seq(
-      Multimodal.MediaRecord(1L, "video",
-        Multimodal.syntheticAvi(20, 14, nFrames = 3, seed = 4L), "t"),
-      Multimodal.MediaRecord(2L, "video",
-        Multimodal.syntheticAvi(9, 7, nFrames = 1, seed = 11L), "t"),
-      // RAW concatenated JPEGs are NOT an AVI: no RIFF header, no rows
-      Multimodal.MediaRecord(3L, "video",
-        Multimodal.syntheticMjpeg(20, 14, 2, 4L), "t"),
-      Multimodal.MediaRecord(4L, "video",
-        "RIFF but not really".getBytes("UTF-8"), "t"))
-    import spark.implicits._
-    val out = Multimodal.decodeAvi(spark.createDataset(recs).repartition(2))
-      .collect().sortBy(r => (r.media_id, r.frame_idx))
-    // same gray arithmetic as MJPEG → same closed-form checksums; the
-    // walker must skip hdrl/avih and the odd-sized JUNK chunk (pad rule)
-    // to land on the movi frames
-    assert(out.toSeq === want(1L, 20, 14, 3, 4L) ++ want(2L, 9, 7, 1, 11L),
-      "every movi 00dc frame must decode to its closed-form checksum")
-    // the JPEG payloads inside the container are the SAME bytes the raw
-    // MJPEG path decodes — cross-check one frame against decodeMjpegFrames
-    assert(out.head.checksum ===
-      Multimodal.decodeMjpegFrames(Multimodal.MediaRecord(9L, "video",
-        Multimodal.syntheticMjpeg(20, 14, 1, 4L), "t")).head.checksum)
-  }
-
-  test("multimodal: mp4 box parser reads mvhd/tkhd/stsd; non-containers drop") {
-    val recs = Seq(
-      // version-0 boxes, avc1, exact-millisecond timescale
-      Multimodal.MediaRecord(1L, "video",
-        Multimodal.syntheticMp4(320, 240, 4000L, 1000L, "avc1",
-          version = 0, seed = 1L), "t"),
-      // version-1 (64-bit times) boxes, 90kHz timescale
-      Multimodal.MediaRecord(2L, "video",
-        Multimodal.syntheticMp4(640, 360, 2500L, 90000L, "hev1",
-          version = 1, seed = 2L), "t"),
-      // a GIF, text bytes, and a truncated mp4 must all parse to None
-      Multimodal.MediaRecord(3L, "video",
-        Multimodal.syntheticGif(8, 6, 2, 3L), "t"),
-      Multimodal.MediaRecord(4L, "video",
-        "not an iso bmff container at all".getBytes("UTF-8"), "t"),
-      Multimodal.MediaRecord(5L, "video",
-        Multimodal.syntheticMp4(320, 240, 4000L, 1000L, "avc1",
-          version = 0, seed = 5L).take(40), "t"))
-    import spark.implicits._
-    val out = Multimodal.decodeMp4(spark.createDataset(recs).repartition(2))
-      .collect().sortBy(_.media_id)
-    assert(out.toSeq === Seq(
-      Multimodal.Mp4Meta(1L, "mp4", 4000L, 320, 240, "avc1"),
-      Multimodal.Mp4Meta(2L, "mp4", 2500L, 640, 360, "hev1")))
-    // decodeReal degrades through image → wav → mp4 → stub: the container
-    // parses without a codec, text bytes still land on the stub
-    val real = Multimodal.decodeReal(spark.createDataset(recs))
-      .collect().sortBy(_.media_id)
-    assert(real(0).format === "mp4" && real(0).width === 320 &&
-      real(0).duration_ms === 4000L)
-    assert(real(1).format === "mp4" && real(1).height === 360)
-    assert(real(3).format === "mp4-stub")
   }
 
   test("bpeish token count: matches manual tokenization") {

@@ -258,41 +258,6 @@ class ScaleRegistrySpec extends SparkSpec {
       s"super-linear at 100×: ${violations.mkString(", ")}\n$report")
   }
 
-  test("image aHash + banded near-dup at 10x images: decode-bound, ~linear") {
-    // mm_image_ahash / mm_neardup_images are fixture-bound (they ignore
-    // sfDir), so their scaling evidence is operator-level: n synthetic
-    // PNGs GENERATED ON EXECUTORS (spark.range → map — no driver-side
-    // byte buffers), decoded to 8×8 aHashes, then banded-paired. Each
-    // image i has exactly one planted identical twin (i ± n/2), so the
-    // output grows linearly with n and the measured ratio is the decode
-    // + band-join plan, not a quadratic output.
-    import spark.implicits._
-    import graft.ops.Multimodal
-    def run(n: Int): Double = {
-      val half = n / 2
-      val recs = spark.range(0, n, 1, 32).map { i =>
-        val base = (i % half).toInt
-        Multimodal.MediaRecord(i, "image",
-          Multimodal.syntheticPng(16 + (base % 20) * 7 % 97,
-            12 + (base % 20) * 5 % 71, base.toLong), "synthetic")
-      }
-      val t0 = System.nanoTime()
-      val pairs = Multimodal.imageNearDupPairs(
-        Multimodal.imageAHash(recs, 8).toDF())
-        .queryExecution.toRdd.count()
-      spark.catalog.clearCache()
-      assert(pairs >= half,
-        s"planted twins must pair: got $pairs of >= $half at n=$n")
-      (System.nanoTime() - t0) / 1e9
-    }
-    run(200) // warm-up
-    val base = run(200)
-    val scaled = run(2000)
-    info(f"aHash near-dup: 200 imgs $base%.2f s → 2000 imgs $scaled%.2f s (${scaled / base}%.1f×)")
-    assert(scaled / base <= FamilyBound,
-      f"image fingerprint pipeline scaled super-linearly (${scaled / base}%.1f×)")
-  }
-
   test("trace operators at TRUE 100x volume: 96k → 9.57M events") {
     val Logs100 = "/tmp/graft_scale/logs100"
     assume(new java.io.File(Logs100).isDirectory, "run dev/gen_scale_logs.py x100")

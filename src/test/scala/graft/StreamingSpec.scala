@@ -486,51 +486,6 @@ class StreamingSpec extends SparkSpec {
       "the duplicate fpB row rejected")
   }
 
-  test("image near-dup alerts: stream-static probe equals batch banded pairs") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ops.Multimodal
-    // static corpus: 6 stored images (2 dim/seed families + strays)
-    val corpus = Seq(
-      Multimodal.MediaRecord(1L, "image", Multimodal.syntheticPng(40, 30, 3L), "c"),
-      Multimodal.MediaRecord(2L, "image", Multimodal.syntheticPng(40, 30, 900L), "c"),
-      Multimodal.MediaRecord(3L, "image", Multimodal.syntheticPng(25, 19, 7L), "c"),
-      Multimodal.MediaRecord(4L, "image", Multimodal.syntheticPng(25, 19, 5000L), "c"),
-      Multimodal.MediaRecord(5L, "image", Multimodal.syntheticPng(33, 21, 11L), "c"),
-      Multimodal.MediaRecord(6L, "image", Multimodal.syntheticPng(61, 17, 13L), "c"))
-    val corpusHashes = Multimodal.imageAHash(
-      spark.createDataset(corpus), 8).toDF().cache()
-    val corpusBands = Multimodal.bandedHashes(corpusHashes).cache()
-    corpusBands.count()
-    // arrivals over two triggers: a verbatim copy of 1, a +1-seed twin
-    // of 3, and a fresh far image
-    val arrivals = Seq(
-      Multimodal.MediaRecord(101L, "image", Multimodal.syntheticPng(40, 30, 3L), "s"),
-      Multimodal.MediaRecord(102L, "image", Multimodal.syntheticPng(25, 19, 8L), "s"),
-      Multimodal.MediaRecord(103L, "image", Multimodal.syntheticPng(52, 47, 999L), "s"))
-    val input = MemoryStream[Multimodal.MediaRecord]
-    val q = StreamingOps.imageNearDupAlerts(input.toDS(), corpusBands)
-      .writeStream.format("memory").queryName("img_alert_out")
-      .outputMode(OutputMode.Append).start()
-    input.addData(arrivals(0)); q.processAllAvailable()
-    input.addData(arrivals(1), arrivals(2)); q.processAllAvailable()
-    val alerts = spark.table("img_alert_out").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    q.stop()
-    // batch truth: banded pairs over corpus ∪ arrivals, restricted to
-    // (arrival, stored) pairs
-    val allHashes = corpusHashes.unionByName(Multimodal.imageAHash(
-      spark.createDataset(arrivals), 8).toDF())
-    val want = Multimodal.imageNearDupPairs(allHashes).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .collect { case (a, b) if b >= 100L && a < 100L => (b, a) }.toSet
-    assert(alerts === want,
-      s"streaming alerts must equal the batch banded pairs: $alerts vs $want")
-    assert(alerts.contains((101L, 1L)), "verbatim copy must alert")
-    assert(alerts.contains((102L, 3L)), "+1-seed twin must alert")
-    assert(!alerts.exists(_._1 == 103L), "a fresh image must not alert")
-    corpusHashes.unpersist(); corpusBands.unpersist()
-  }
-
   test("winnow admission: multi-trigger carrier equals the batch first-seen gate") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions.col

@@ -321,6 +321,59 @@ class TraceOpsSpec extends SparkSpec {
     }.isEmpty)
   }
 
+  test("baselineWindowAnomalies: own and 'ALL' baselines, hand z-scores, no join") {
+    val baselines = Seq(
+      ("VersionLag", "ALL", Some(10.0), Some(2.0)),
+      ("VersionLag", "storage", Some(100.0), Some(5.0)),
+      ("DurabilityLag", "ALL", Some(1.0), Some(0.5)),
+      ("DurabilityLag", "storage", Some(2.0), None))
+      .toDF("metric_name", "role", "mean", "stddev")
+    val b0 = 1735689600L // a multiple of the 30 s bucket
+    val metrics = Seq(
+      // storage has its own VersionLag baseline: z = |125 - 100| / 5
+      (b0 + 1, Some("storage"), "VersionLag", 120.0),
+      (b0 + 2, Some("storage"), "VersionLag", 130.0),
+      // next bucket, z = |102 - 100| / 5 = 0.4: not flagged
+      (b0 + 31, Some("storage"), "VersionLag", 101.0),
+      (b0 + 32, Some("storage"), "VersionLag", 103.0),
+      // one sample is below minSamples
+      (b0 + 61, Some("storage"), "VersionLag", 1000.0),
+      // tlog has no VersionLag row: 'ALL' gives z = |19 - 10| / 2
+      (b0 + 3, Some("tlog"), "VersionLag", 20.0),
+      (b0 + 4, Some("tlog"), "VersionLag", 18.0),
+      // z = |1.25 - 1| / 0.5 = 0.5: not flagged
+      (b0 + 5, Some("tlog"), "DurabilityLag", 1.0),
+      (b0 + 6, Some("tlog"), "DurabilityLag", 1.5),
+      // a null role reads as 'ALL': z = |3.5 - 1| / 0.5
+      (b0 + 7, None, "DurabilityLag", 3.0),
+      (b0 + 8, None, "DurabilityLag", 4.0),
+      // field-wise: storage's own mean, 'ALL''s stddev: z = |4 - 2| / 0.5
+      (b0 + 9, Some("storage"), "DurabilityLag", 4.0),
+      (b0 + 10, Some("storage"), "DurabilityLag", 4.0),
+      // no baseline at all: never flagged
+      (b0 + 11, Some("storage"), "BytesInput", 9e9),
+      (b0 + 12, Some("storage"), "BytesInput", 1.0))
+      .toDF("sec", "role", "metric_name", "metric_value")
+      .withColumn("ts", timestamp_seconds(col("sec")))
+    val df = Detectors.baselineWindowAnomalies(metrics, baselines,
+      bucketSeconds = 30, zThreshold = 3.0, minSamples = 2)
+    val got = df.collect().map(r => (r.getLong(0), r.getString(1),
+      r.getString(2), r.getDouble(3), r.getDouble(4), r.getDouble(5),
+      r.getDouble(6), r.getLong(7))).toSeq
+    assert(got === Seq(
+      (b0, "ALL", "DurabilityLag", 3.5, 1.0, 0.5, 5.0, 2L),
+      (b0, "storage", "DurabilityLag", 4.0, 2.0, 0.5, 4.0, 2L),
+      (b0, "storage", "VersionLag", 125.0, 100.0, 5.0, 5.0, 2L),
+      (b0, "tlog", "VersionLag", 19.0, 10.0, 2.0, 4.5, 2L)))
+
+    // the baselines are read once, as a scalar subquery: no join anywhere
+    // in the executed plan, subqueries included
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    assert(Aqe.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+    }.isEmpty)
+  }
+
   test("timeline: lag crossings and causal signal (W11)") {
     val ev = mkEvents(Seq(
       (1L, "2025-01-01 00:00:00", "Start", 10, Map.empty[String, String]),
