@@ -4,8 +4,8 @@
 replica so FK joins stay consistent (each replica is a self-contained
 shard of the keyspace); dimension tables (nation/region) copy as-is.
 Documents get a distinct per-replica suffix (near-duplicates across
-replicas — the hard dedup path); embeddings replicate exactly (10-way
-duplicate vectors). NOT part of the shipped engine (driver-side python).
+replicas — the hard dedup path). NOT part of the shipped engine
+(driver-side python).
 
 Usage: python3 dev/gen_scale_tables.py [K] [OUT]
        (default K=10 replicas -> /tmp/graft_scale/sf1;
@@ -88,17 +88,4 @@ gen("documents",
     # equal to length(text) on every replica
     f"lang, source, CASE WHEN (doc_id + {{k}}) % 5 = 4 THEN length({UNIQ}) "
     "ELSE n_chars + length(' replica{k}') END AS n_chars")
-# Rotating each replica's vector by k dims preserves within-replica dot
-# products exactly (same near-dup structure per shard) while cross-replica
-# cosine collapses toward 0 (sampled max 0.36 < the 0.45 threshold) — so
-# true near-dup output grows ~K, not ~K^2, matching how real corpora grow.
-# Rotation wraps at the 64-dim width, so replicas k >= 64 additionally
-# negate (cosine -1 against their rotation twin — still not a near-dup).
-rot = ("CASE WHEN {k} % 64 = 0 THEN embedding ELSE "
-       "list_concat(embedding[{k} % 64 + 1:], embedding[1:{k} % 64]) END")
-gen("embeddings",
-    "vec_id + {k} * CAST(1000000 AS BIGINT) AS vec_id, "
-    f"CASE WHEN {{k}} < 64 THEN {rot} "
-    f"ELSE list_transform({rot}, x -> -x) END AS embedding, "
-    "label")
 print("done:", OUT)

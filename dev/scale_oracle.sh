@@ -1,60 +1,25 @@
 #!/usr/bin/env bash
 # Past-fixture-scale oracle gate (round 6): hash-verify registered
-# queries against DuckDB at sf1-equivalent (10x sf0.1) volume and the
-# corpus-coupled emb subset at true 100x. This is the gate that caught
-# the emb_ann_lsh_auto oracle row-budget bug and the q1 sum_charge
-# decimal-exactness drift — divergence classes invisible at fixture
-# scale. NOT part of the shipped engine (driver-side python deps).
+# queries against DuckDB at sf1-equivalent (10x sf0.1) volume. This is
+# the gate that caught the q1 sum_charge decimal-exactness drift — a
+# divergence class invisible at fixture scale. NOT part of the shipped
+# engine (driver-side python deps).
 #
-# Usage: dev/scale_oracle.sh [10x|100x|all]   (default: 10x)
+# Usage: dev/scale_oracle.sh [10x]   (default: 10x)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 mode="${1:-10x}"
 
 run10x() {
   [ -d /tmp/graft_scale/sf1 ] || python3 dev/gen_scale_tables.py
-  # full registry; the emb_neardup twins' DuckDB sides take ~30-40 min
-  # each at 20k vectors (their ORACLES are the quadratic cost) — budget
-  # ~75 min total for the compare
+  # full registry
   SPARK_GRAFT_CPUS=16 sbt -batch \
     "runMain graft.Verify /tmp/graft_scale/sf1 /tmp/verify_scale_full"
   ORACLE_MEM="${ORACLE_MEM:-60GB}" \
     python3 dev/check_oracle.py /tmp/graft_scale/sf1 /tmp/verify_scale_full
 }
 
-run100x() {
-  [ -d /tmp/graft_scale/sf10 ] || \
-    python3 dev/gen_scale_tables.py 100 /tmp/graft_scale/sf10
-  # corpus-coupled ANN subset, minus emb_ann_ivf_auto: its DuckDB twin
-  # OOMs at 200k vectors (the Lloyd-assignment join carries 64-dim lists
-  # across ~90M rows). The regime that matters for it — trainCap
-  # actively binding — is covered by the 60k-vector run below instead.
-  # The quadratic-regime twins are likewise excluded (pairs trips its
-  # 100k guard BY DESIGN at 200k vectors; neardup_lsh is the fixed-bits
-  # fixture regime).
-  SPARK_GRAFT_CPUS=16 sbt -batch \
-    "runMain graft.Verify /tmp/graft_scale/sf10 /tmp/verify_100x emb_ann_ivf,emb_ann_lsh,emb_knn,emb_label"
-  python3 - <<'PY'
-import json
-p = '/tmp/verify_100x/oracle_sql.json'
-d = json.load(open(p))
-d.pop('emb_ann_ivf_auto', None)
-json.dump(d, open(p, 'w'))
-PY
-  ORACLE_MEM="${ORACLE_MEM:-60GB}" \
-    python3 dev/check_oracle.py /tmp/graft_scale/sf10 /tmp/verify_100x
-  # trainCap-binding check: 60k vectors > the 50k cap, oracle feasible
-  [ -d /tmp/graft_scale/sf3 ] || \
-    python3 dev/gen_scale_tables.py 30 /tmp/graft_scale/sf3
-  SPARK_GRAFT_CPUS=16 sbt -batch \
-    "runMain graft.Verify /tmp/graft_scale/sf3 /tmp/verify_ivf30 emb_ann_ivf_auto"
-  ORACLE_THREADS=8 ORACLE_MEM="${ORACLE_MEM:-80GB}" \
-    python3 dev/check_oracle.py /tmp/graft_scale/sf3 /tmp/verify_ivf30
-}
-
 case "$mode" in
   10x) run10x ;;
-  100x) run100x ;;
-  all) run10x; run100x ;;
-  *) echo "usage: $0 [10x|100x|all]" >&2; exit 2 ;;
+  *) echo "usage: $0 [10x]" >&2; exit 2 ;;
 esac

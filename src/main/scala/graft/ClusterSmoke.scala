@@ -15,7 +15,7 @@ import graft.queries.Registry
   *
   * local[N] shares one JVM end to end, so it never exercises: closure and
   * task serialization across processes, codegen compiled on a non-driver
-  * classloader (EwmaExpression, RollingHash, NearestCells), cross-JVM
+  * classloader (EwmaExpression, RollingHash), cross-JVM
   * serialize/merge of custom TypedImperativeAggregate buffers (HllAgg,
   * MinHashAgg), or remote shuffle fetches. This main runs all of them for
   * real; equality with local mode is the assertion that the engine's
@@ -30,8 +30,8 @@ object ClusterSmoke {
   /** One query per plan family (the round-6 verdict's list, plus the
     * native-codegen expressions): classic shuffle join, HllAgg merge,
     * Ewma window codegen, boundary-carried scan, MinHashAgg + banded
-    * join, RollingHash codegen, IVF/Lloyd auto mode, the
-    * partitioned-store trace analytics path — plus the executor-JVM
+    * join, RollingHash codegen, the partitioned-store trace analytics
+    * path — plus the executor-JVM
     * service paths: the custom as-of join, and the streaming gate's
     * state store across executors. */
   val Slice: Seq[String] = Seq(
@@ -41,15 +41,12 @@ object ClusterSmoke {
     "ev_value_drops",
     "doc_minhash_lsh",
     "doc_fingerprints",
-    "emb_ann_ivf_auto",
     "trace_rollups_60s",
     "ev_asof_last_signup",
     "ev_streaming_gate",
-    // round-6 additions: the int8 quantized scan (zip_with/aggregate
-    // integer dots on executor codegen) and the end-to-end cleaning
-    // pipeline (broadcast decontam probe + CC star-loop + repetition
-    // min_by + quality gate composed across executor JVMs)
-    "emb_int8_knn",
+    // round-6 addition: the end-to-end cleaning pipeline (broadcast
+    // decontam probe + CC star-loop + repetition min_by + quality gate
+    // composed across executor JVMs)
     "doc_clean_pipeline",
     // round-7 additions: the sharded two-level sampler (shard-local
     // windows + broadcast offset join across executors) and the

@@ -28,8 +28,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
     ext.injectFunction((FunctionIdentifier("graft_ewma"),
       info("graft_ewma"), Ewma.builder))
-    ext.injectFunction((FunctionIdentifier("graft_nearest_cells"),
-      info("graft_nearest_cells"), GraftFunctions.nearestBuilder))
     ext.injectFunction((FunctionIdentifier("graft_md5_seeds"),
       info("graft_md5_seeds"), graft.functions.TextFunctions.md5SeedsBuilder))
     ext.injectFunction((FunctionIdentifier("simhash32"),

@@ -17,7 +17,8 @@ object GraftSession {
     *   - one tail op (append, re-read, battery, gate): 104; its
     *     maintenance pass: 278 more
     *   - the sf0.1 `Bench` warm-up: 1,651, measured on the 184-query
-    *     registry (since cut to 170 by dropping the multimodal family),
+    *     registry (since cut to 152 by dropping the multimodal and
+    *     embedding/ANN families),
     *     with the 33 queries whose reference fixtures were missing failing
     *     early
     * A JVM runs either a pipeline session or the Bench, so the Bench pass

@@ -5,9 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Algebraic-identity 100× gate for the registry entries whose DuckDB
-  * oracle replay is compute-infeasible at 500k docs / 200k vectors
-  * (recursive-CTE transitive closures, per-row greedy folds, Lloyd
-  * re-derivations that OOM one DuckDB node). Their OPERATORS all run
+  * oracle replay is compute-infeasible at 500k docs (recursive-CTE
+  * transitive closures, per-row greedy folds). Their OPERATORS all run
   * Spark-side at 100×; what was missing is a 100× VALUE check. This
   * main supplies it without a cross-engine replay: each query's output
   * is audited against invariants that must hold exactly if — and
@@ -37,22 +36,6 @@ import org.apache.spark.sql.functions._
   *    every reported pair matches and respects the bound) plus
   *    sampled-bucket completeness (all qualifying cross-sig pairs in
   *    the sampled byte-band buckets are reported).
-  *  - LSH near-dup pairs: full precision (recomputed cosine of every
-  *    reported pair matches the reported value and the threshold) and
-  *    provenance (every pair genuinely collides in ≥1 hyperplane
-  *    bucket). Recall is anchored by the exact all-pairs twin at 10×.
-  *  - IVF ANN: reported cosines recomputed from raw vectors; ranks
-  *    re-derived; every neighbor a member of its query's probed cells;
-  *    sampled k-means assignment optimality (the assigned cell
-  *    maximizes the centroid dot product, re-derived through an
-  *    independent explode/argmax plan, not the operator's fold).
-  *  - SemDeDup: cell assignment equality against clusterAssign,
-  *    sampled drop-justification (every sampled dropped vector has a
-  *    lower-id same-cell mate at cosine ≥ threshold — the operator's
-  *    drops are one-sided exact, so this must hold for ALL drops) and
-  *    sampled keep-justification (no sampled kept vector has a
-  *    lower-id same-cell mate above the quantized-collapse over-keep
-  *    bound cos(acos t − acos B), B = √((1+t)/2)).
   *
   * Usage: runMain graft.ScaleInvariants <sfDir> [check1,check2,...]
   * Prints one OK/FAIL line per check and a JSON summary; exits 1 on
@@ -66,12 +49,8 @@ object ScaleInvariants {
     val only: Option[Set[String]] =
       args.lift(1).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val spark = GraftSession.build("graft-invariants")
-    graft.functions.GraftFunctions.register(spark)
     def q(name: String): DataFrame = SparkEntry.queries(name)(spark, sfDir)
     def docs: DataFrame = Tables(spark, sfDir, "documents")
-    def vectors: DataFrame = Tables(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("label"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
 
     val checks: Seq[(String, SparkSession => String)] = Seq(
       "cc_wellformed" -> (s => ccWellformed(s, q("doc_dedup_components"), docs)),
@@ -85,12 +64,6 @@ object ScaleInvariants {
       "pack_greedy" -> (s => packGreedy(s, q("doc_seq_pack"), docs)),
       "pack_examples" -> (s => packExamples(s, q("doc_pack_examples"), docs)),
       "simhash_pairs" -> (s => simhashPairs(s, q("doc_simhash_pairs"), docs)),
-      "neardup_lsh" -> (s => neardupLsh(s, q("emb_neardup_lsh"),
-        q("emb_neardup_lsh_auto"), vectors)),
-      "ivf_auto" -> (s => ivfAuto(s, q("emb_ann_ivf_auto"), vectors)),
-      "semdedup" -> (s => semDedup(s, q("emb_semdedup"), vectors)),
-      "pq_adc" -> (s => pqAdc(s, q("emb_ann_pq"), vectors)),
-      "ivfpq_res" -> (s => ivfPqRes(s, q("emb_ann_ivfpq_res"), vectors)),
       "kmv_profile" -> (s => kmvProfile(s, q("ev_profile_kmv"),
         Tables(s, sfDir, "events")))
     )
@@ -385,438 +358,6 @@ object ScaleInvariants {
         s"$np pairs precision-exact; sampled buckets complete"
       } finally { p.unpersist(); () }
     } finally { sigs.unpersist(); () }
-  }
-
-  // ---- embedding LSH near-dup pairs --------------------------------------
-
-  private def neardupLsh(s: SparkSession, fixturePairs: => DataFrame,
-      autoPairs: => DataFrame, vectors: DataFrame): String = {
-    import graft.ops.VectorSearch
-    // The fixture-regime registered query (threshold 0.45, fixed 3
-    // bits) is output-quadratic BY DESIGN — at 200k vectors the
-    // candidate volume before dedup is ~6·10^10 pairs, beyond any
-    // single node's spill budget (measured disk-full even on the bare
-    // count). So: at ≤10× volume audit emb_neardup_lsh itself; at
-    // 100× audit emb_neardup_lsh_auto — the REGISTERED production
-    // regime (same 0.45 threshold, AUTO bits: buckets scale with the
-    // corpus, the shape a 100 TB job runs), whose candidate list is
-    // sub-linear. Both audits are the same invariants:
-    // recomputed-cosine precision + bucket provenance (recall at 100×
-    // is the banding trade, not an invariant).
-    val nVec = vectors.count()
-    val production = nVec > 30000L
-    val (threshold, bits, tables) =
-      if (production) (0.45, VectorSearch.autoBits(nVec), 6)
-      else (0.45, 3, 12)
-    val pairs0 = if (production) autoPairs else fixturePairs
-    val nPairs = pairs0.count()
-    val every = math.max(1L, nPairs / 1000000L)
-    val pairs = pairs0.filter(
-      pmod(xxhash64(col("vec_a"), col("vec_b")), lit(every)) === 0)
-    val v = vectors.withColumn("nrm",
-      sqrt(graft.functions.GraftFunctions.dotProduct(col("e"), col("e"))))
-      .select(col("vec_id"), col("e"), col("nrm")).cache()
-    try {
-      val joined = pairs
-        .join(v.select(col("vec_id").as("vec_a"), col("e").as("ea"),
-          col("nrm").as("na")), "vec_a")
-        .join(v.select(col("vec_id").as("vec_b"), col("e").as("eb"),
-          col("nrm").as("nb")), "vec_b")
-        .withColumn("truecos",
-          graft.functions.GraftFunctions.dotProduct(col("ea"), col("eb")) /
-            (col("na") * col("nb"))).cache()
-      try {
-        val bad = joined.filter(
-          round(col("truecos"), 6) =!= col("cosine") ||
-            col("truecos") < threshold || col("vec_a") >= col("vec_b")).count()
-        require(bad == 0, s"$bad pairs fail recomputed cosine/threshold")
-        // provenance: each pair collides in >=1 of the tables' hyperplane
-        // buckets (recomputed for pair members only)
-        def codeCols(side: String) = (0 until tables).map { t =>
-          val planes =
-            VectorSearch.hyperplanes(64, bits, VectorSearch.DefaultSeed + t)
-          planes.zipWithIndex.map { case (pl, i) =>
-            when(graft.functions.GraftFunctions.dotProduct(col(s"e$side"),
-              array(pl.map(lit(_)): _*)) >= 0, lit(1 << i)).otherwise(lit(0))
-          }.reduce(_ + _).as(s"c$side$t")
-        }
-        val coded = joined.select(
-          (Seq(col("vec_a"), col("vec_b")) ++ codeCols("a") ++ codeCols("b")): _*)
-        val collides = (0 until tables)
-          .map(t => col(s"ca$t") === col(s"cb$t")).reduce(_ || _)
-        val orphans = coded.filter(!collides).count()
-        require(orphans == 0, s"$orphans pairs collide in no table")
-        val np = joined.count()
-        val regime = if (production) s"production(0.45, autoBits=$bits)"
-          else "fixture(0.45, 3 bits)"
-        s"$regime: $np of $nPairs pairs (1/$every sample) " +
-          "precision-exact, all bucket-provenanced"
-      } finally { joined.unpersist(); () }
-    } finally { v.unpersist(); () }
-  }
-
-  // ---- IVF auto ANN ------------------------------------------------------
-
-  private def ivfAuto(s: SparkSession, out: DataFrame,
-      vectors: DataFrame): String = {
-    import graft.ops.VectorSearch
-    val v = vectors.select(col("vec_id"), col("e")).cache()
-    try {
-      val n = v.count()
-      val cells = VectorSearch.autoCells(n)
-      val cap = VectorSearch.DefaultTrainCap
-      val cents = VectorSearch.kmeansCentroids(v, "vec_id", "e", cells, 2, cap)
-      // reported cosine == true cosine; ranks re-derived independently
-      val withN = v.withColumn("nrm",
-        sqrt(graft.functions.GraftFunctions.dotProduct(col("e"), col("e"))))
-      val joined = out
-        .join(withN.select(col("vec_id").as("query_id"), col("e").as("qe"),
-          col("nrm").as("qn")), "query_id")
-        .join(withN.select(col("vec_id").as("neighbor_id"), col("e").as("ne"),
-          col("nrm").as("nn")), "neighbor_id")
-        .withColumn("truecos",
-          graft.functions.GraftFunctions.dotProduct(col("qe"), col("ne")) /
-            (col("qn") * col("nn")))
-      val badCos = joined
-        .filter(round(col("truecos"), 6) =!= col("cosine")).count()
-      require(badCos == 0, s"$badCos reported cosines differ from recompute")
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("truecos").desc, col("neighbor_id"))
-      val badRank = joined.withColumn("rk", row_number().over(w))
-        .filter(col("rk") =!= col("rank")).count()
-      require(badRank == 0, s"$badRank ranks out of order")
-      // assignment via the operator; optimality re-derived via an
-      // independent explode/argmax plan on a deterministic sample
-      val assigned = VectorSearch.clusterAssign(v, "vec_id", "e",
-        k = cells, iters = 2, trainCap = cap)
-        .select(col("vec_id"), col("cid")).cache()
-      try {
-        import s.implicits._
-        val centDf = cents.toSeq.toDF("cid2", "c")
-        val sample = v.filter(col("vec_id") % 199 === 0)
-        val best = sample.crossJoin(broadcast(centDf))
-          .withColumn("d",
-            graft.functions.GraftFunctions.dotProduct(col("e"), col("c")))
-          .withColumn("rk", row_number().over(Window.partitionBy("vec_id")
-            .orderBy(col("d").desc, col("cid2"))))
-          .filter(col("rk") === 1).select(col("vec_id"), col("cid2"))
-        val badAssign = best.join(assigned, "vec_id")
-          .filter(col("cid") =!= col("cid2")).count()
-        val nSample = best.count()
-        require(badAssign == 0,
-          s"$badAssign of $nSample sampled assignments not argmax-optimal")
-        // every neighbor is a member of one of its query's nprobe cells
-        val queries = out.select("query_id").distinct()
-          .join(v.withColumnRenamed("vec_id", "query_id"), "query_id")
-        val qProbe = queries.crossJoin(broadcast(centDf))
-          .withColumn("d",
-            graft.functions.GraftFunctions.dotProduct(col("e"), col("c")))
-          .withColumn("rk", row_number().over(Window.partitionBy("query_id")
-            .orderBy(col("d").desc, col("cid2"))))
-          // probe width from the shared constant the registered query uses
-          // — a query change cannot silently weaken this audit
-          .filter(col("rk") <= VectorSearch.AutoNprobe)
-          .select(col("query_id"), col("cid2"))
-        val outside = out.select("query_id", "neighbor_id")
-          .join(assigned.withColumnRenamed("vec_id", "neighbor_id"),
-            "neighbor_id")
-          .join(qProbe, Seq("query_id"), "left")
-          .groupBy("query_id", "neighbor_id")
-          .agg(max(when(col("cid") === col("cid2"), 1).otherwise(0)).as("inP"))
-          .filter(col("inP") === 0).count()
-        require(outside == 0, s"$outside neighbors outside their probed cells")
-        s"$n vectors, $cells cells: cosines exact, ranks exact, " +
-          s"$nSample sampled assignments argmax-optimal, neighbors in-probe"
-      } finally { assigned.unpersist(); () }
-    } finally { v.unpersist(); () }
-  }
-
-  // ---- SemDeDup ----------------------------------------------------------
-
-  private def semDedup(s: SparkSession, out: DataFrame,
-      vectors: DataFrame): String = {
-    import graft.ops.VectorSearch
-    val t = 0.45
-    val v = vectors.select(col("vec_id"), col("e")).cache()
-    try {
-      val n = v.count()
-      val o = out.cache()
-      try {
-        require(o.count() == n &&
-          o.select("vec_id").distinct().count() == n, "not one row per vector")
-        // cell equality vs the clustering operator (same deterministic
-        // derivation semDedup routes through)
-        val cells = VectorSearch.autoCells(n)
-        val assigned = VectorSearch.clusterAssign(v, "vec_id", "e",
-          k = cells, iters = 2, trainCap = VectorSearch.DefaultTrainCap)
-          .select(col("vec_id"), col("cid").as("cid2"))
-        val badCell = o.join(assigned, "vec_id")
-          .filter(col("cid") =!= col("cid2")).count()
-        require(badCell == 0, s"$badCell cell labels differ from clusterAssign")
-        // per-vector decision audits on deterministic samples, each row
-        // joined to its FULL cell (cells are ~sqrt(N), so sample × cell
-        // is bounded)
-        val withN = v.withColumn("nrm",
-          sqrt(graft.functions.GraftFunctions.dotProduct(col("e"), col("e"))))
-        val members = o.select(col("vec_id"), col("cid"))
-          .join(withN, "vec_id")
-        def mates(sample: DataFrame, minCos: Double): DataFrame =
-          sample.join(members.select(col("cid"),
-              col("vec_id").as("mate_id"), col("e").as("me"),
-              col("nrm").as("mn")), "cid")
-            .filter(col("mate_id") < col("vec_id"))
-            .withColumn("cos",
-              graft.functions.GraftFunctions.dotProduct(col("e"), col("me")) /
-                (col("nrm") * col("mn")))
-            .filter(col("cos") >= minCos)
-        // drops are one-sided exact: EVERY dropped vector must have a
-        // lower-id same-cell mate at cosine >= threshold
-        val droppedSample = members
-          .join(o.filter(col("keep") === 0).select("vec_id"), "vec_id")
-          .filter(col("vec_id") % 97 === 0).cache()
-        val nd = droppedSample.count()
-        val justified = mates(droppedSample, t)
-          .select("vec_id").distinct().count()
-        require(justified == nd,
-          s"${nd - justified} of $nd sampled drops have no justifying mate")
-        // keeps may over-keep only inside the quantized-collapse margin:
-        // no kept vector has a lower-id mate above cos(acos t − acos B)
-        val b = math.sqrt((1.0 + t) / 2.0)
-        val keepBound = t * b + math.sqrt(1 - t * t) * math.sqrt(1 - b * b)
-        val keptSample = members
-          .join(o.filter(col("keep") === 1).select("vec_id"), "vec_id")
-          .filter(col("vec_id") % 97 === 0).cache()
-        val nk = keptSample.count()
-        val overKept = mates(keptSample, keepBound)
-          .select("vec_id").distinct().count()
-        require(overKept == 0,
-          s"$overKept of $nk sampled keeps have a mate above $keepBound")
-        droppedSample.unpersist(); keptSample.unpersist()
-        s"$n vectors, cells equal clusterAssign; $nd sampled drops " +
-          f"justified, $nk sampled keeps clean below ${keepBound}%.4f"
-      } finally { o.unpersist(); () }
-    } finally { v.unpersist(); () }
-  }
-
-  // ---- Product quantization ------------------------------------------------
-
-  /** PQ-ADC audit (for the volumes where the DuckDB replay's keyed
-    * Lloyd joins exceed memory): the codebooks re-derive with the
-    * deterministic trainer (replay, not trust), then three independent
-    * plans assert (a) sampled per-subspace code OPTIMALITY — each stored
-    * code maximizes the sub-centroid dot (explode/argmax, ties to the
-    * lowest cid); (b) every REPORTED (query, neighbor) adc_fp equals an
-    * integer-LUT recomputation built by melt + join — the oracle's SQL
-    * shape, in-engine; (c) reported adc_cosine and rank re-derive from
-    * adc_fp and independently-recomputed reconstruction norms. PQ is
-    * lossy BY DESIGN — there is no claim about WHICH neighbors surface
-    * (the fixture-scale brute twin anchors recall), only exactness of
-    * everything computed about them. */
-  private def pqAdc(s: SparkSession, out0: DataFrame, v0: DataFrame): String = {
-    import s.implicits._
-    val (dim, m, k) = (64, 4, 16) // the registered emb_ann_pq parameters
-    val dsub = dim / m
-    val v = v0.select(col("vec_id"), col("e")).cache()
-    try {
-      val out = out0.cache() // query_id, neighbor_id, rank, adc_fp, adc_cosine
-      val n = v.count()
-      val books = graft.ops.VectorSearch.pqCodebooks(v, "vec_id", "e", dim, m, k)
-      val enc = graft.ops.VectorSearch.pqEncode(v, "e", dim, books)
-        .select(col("vec_id") +: (0 until m).map(i => col(s"code_$i")): _*)
-        .cache()
-      try {
-        // melt: (vec_id, sub, code); sub-centroids: (sub, cid2, c)
-        val codes = enc.select(col("vec_id"),
-          posexplode(array((0 until m).map(i => col(s"code_$i")): _*))
-            .as(Seq("sub", "code")))
-        val subCent = books.zipWithIndex.flatMap { case (b, sub) =>
-          b.map { case (cid, c) => (sub, cid, c.toSeq) }
-        }.toSeq.toDF("sub", "cid2", "c")
-        // (a) sampled code optimality via explode/argmax
-        val sample = codes.filter(col("vec_id") % 199 === 0)
-          .join(v, "vec_id")
-        val best = sample.join(broadcast(subCent), "sub")
-          .withColumn("d", graft.functions.GraftFunctions.dotProduct(
-            slice(col("e"), col("sub") * dsub + 1, lit(dsub)), col("c")))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy("vec_id", "sub")
-              .orderBy(col("d").desc, col("cid2"))))
-          .filter(col("rk") === 1)
-        val badCode = best.filter(col("code") =!= col("cid2")).count()
-        val nSample = best.count()
-        require(badCode == 0,
-          s"$badCode of $nSample sampled sub-codes not argmax-optimal")
-        // (b) reported adc_fp == melt/join LUT recomputation
-        val qe = out.select("query_id").distinct()
-          .join(v.withColumnRenamed("vec_id", "query_id"), "query_id")
-          .withColumnRenamed("e", "qe")
-        val lut = qe.crossJoin(broadcast(subCent))
-          .withColumn("d_fp", round(graft.functions.GraftFunctions.dotProduct(
-            slice(col("qe"), col("sub") * dsub + 1, lit(dsub)), col("c"))
-            * 1e6, 0).cast("bigint"))
-          .select(col("query_id"), col("sub"), col("cid2"), col("d_fp"))
-        val expect = out.select(col("query_id"), col("neighbor_id"),
-            col("adc_fp"))
-          .join(codes.withColumnRenamed("vec_id", "neighbor_id"),
-            Seq("neighbor_id"))
-          .join(lut.withColumnRenamed("cid2", "code"),
-            Seq("query_id", "sub", "code"))
-          .groupBy("query_id", "neighbor_id", "adc_fp")
-          .agg(sum(col("d_fp")).as("recomputed"))
-        val badFp = expect.filter(col("adc_fp") =!= col("recomputed")).count()
-        require(badFp == 0, s"$badFp reported adc_fp differ from the recompute")
-        // (c) cosine + rank re-derivation from independent norms
-        val n2 = subCent.withColumn("n2", round(
-            graft.functions.GraftFunctions.dotProduct(col("c"), col("c"))
-              * 1e6, 0).cast("bigint"))
-          .select(col("sub"), col("cid2").as("code"), col("n2"))
-        val rn = codes.join(broadcast(n2), Seq("sub", "code"))
-          .groupBy("vec_id").agg(sum(col("n2")).as("rn2"))
-        val qn = qe.withColumn("qnrm", sqrt(
-          graft.functions.GraftFunctions.dotProduct(col("qe"), col("qe"))))
-          .select(col("query_id"), col("qnrm"))
-        val scored = out
-          .join(rn.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
-          .join(qn, "query_id")
-          .withColumn("truecos", col("adc_fp").cast("double") / 1e6 /
-            (col("qnrm") * sqrt(col("rn2").cast("double") / 1e6)))
-        val badCos = scored
-          .filter(round(col("truecos"), 6) =!= col("adc_cosine")).count()
-        require(badCos == 0, s"$badCos reported adc_cosine differ")
-        val badRank = scored.withColumn("rk", row_number().over(
-            Window.partitionBy("query_id")
-              .orderBy(col("truecos").desc, col("neighbor_id"))))
-          .filter(col("rk") =!= col("rank")).count()
-        require(badRank == 0, s"$badRank ranks out of order")
-        s"$n vectors: $nSample sampled sub-codes argmax-optimal, " +
-          "reported adc_fp/cosine/rank all recompute exactly"
-      } finally { enc.unpersist(); out.unpersist(); () }
-    } finally { v.unpersist(); () }
-  }
-
-  /** Residual-IVFADC audit (emb_ann_ivfpq_res at volumes where the
-    * two-stage DuckDB replay is infeasible): the coarse quantizer,
-    * residuals and residual codebooks re-derive with the deterministic
-    * trainers (replay, not trust), then independent plans assert
-    * (a) PROBE MEMBERSHIP — every reported neighbor's coarse cell is in
-    * its query's nprobe nearest cells, re-derived by explode/argmax;
-    * (b) every reported adc_fp equals micro dot(q, c_cell) + the
-    * melt/join LUT recomputation over the residual codes — the score
-    * decomposition dot(q, c + r̂) checked end to end; (c) adc_cosine and
-    * rank re-derive from adc_fp and reconstruction norms recomputed
-    * IN-ENGINE from |c|² + Σ (2·dot(c_sub, cw) + |cw|²) — which also
-    * cross-checks the driver-side microFp literals against the engine's
-    * round(). Lossiness caveats as pqAdc. */
-  private def ivfPqRes(s: SparkSession, out0: DataFrame, v0: DataFrame): String = {
-    import s.implicits._
-    val (dim, nCells, nprobe, m, k) = (64, 16, 4, 4, 16)
-    val dsub = dim / m
-    val v = v0.select(col("vec_id"), col("e")).cache()
-    try {
-      val out = out0.cache() // query_id, neighbor_id, rank, adc_fp, adc_cosine
-      val n = v.count()
-      val cents = graft.ops.VectorSearch.kmeansCentroids(v, "vec_id", "e",
-        nCells, 2, 0)
-      val centDf = cents.map { case (cid, c) => (cid, c.toSeq) }
-        .toSeq.toDF("cell", "cc")
-      val cellDf = graft.ops.VectorSearch.clusterAssign(v, "vec_id", "e",
-          nCells, 2, 0)
-        .select(col("vec_id"), col("cid").as("cell"))
-      val rv = v.join(cellDf, "vec_id").join(broadcast(centDf), "cell")
-        .withColumn("rv", zip_with(col("e"), col("cc"), (x, c) => x - c))
-        .select(col("vec_id"), col("cell"), col("rv"))
-        .cache()
-      val books = graft.ops.VectorSearch.pqCodebooks(rv, "vec_id", "rv",
-        dim, m, k)
-      val enc = graft.ops.VectorSearch.pqEncode(rv, "rv", dim, books)
-        .select(col("vec_id") +: col("cell") +:
-          (0 until m).map(i => col(s"code_$i")): _*)
-        .cache()
-      try {
-        val codes = enc.select(col("vec_id"), col("cell"),
-          posexplode(array((0 until m).map(i => col(s"code_$i")): _*))
-            .as(Seq("sub", "code")))
-        val subCent = books.zipWithIndex.flatMap { case (b, sub) =>
-          b.map { case (cid, c) => (sub, cid, c.toSeq) }
-        }.toSeq.toDF("sub", "cid2", "c")
-        val qe = out.select("query_id").distinct()
-          .join(v.withColumnRenamed("vec_id", "query_id"), "query_id")
-          .withColumnRenamed("e", "qe").cache()
-        // (a) probe membership: nprobe nearest cells by explode/argmax
-        val probes = qe.crossJoin(broadcast(centDf))
-          .withColumn("d", graft.functions.GraftFunctions.dotProduct(
-            col("qe"), col("cc")))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy("query_id").orderBy(col("d").desc, col("cell"))))
-          .filter(col("rk") <= nprobe)
-          .select(col("query_id"), col("cell"))
-        val outCells = out.select(col("query_id"), col("neighbor_id"))
-          .join(enc.select(col("vec_id").as("neighbor_id"), col("cell")),
-            "neighbor_id")
-        val badProbe = outCells.join(probes, Seq("query_id", "cell"),
-          "left_anti").count()
-        require(badProbe == 0,
-          s"$badProbe reported neighbors outside their query's probed cells")
-        // (b) adc_fp == micro dot(q, c_cell) + melt/join LUT recompute
-        val qc = qe.crossJoin(broadcast(centDf))
-          .withColumn("qc_fp", round(graft.functions.GraftFunctions
-            .dotProduct(col("qe"), col("cc")) * 1e6, 0).cast("bigint"))
-          .select(col("query_id"), col("cell"), col("qc_fp"))
-        val lut = qe.crossJoin(broadcast(subCent))
-          .withColumn("d_fp", round(graft.functions.GraftFunctions.dotProduct(
-            slice(col("qe"), col("sub") * dsub + 1, lit(dsub)), col("c"))
-            * 1e6, 0).cast("bigint"))
-          .select(col("query_id"), col("sub"), col("cid2"), col("d_fp"))
-        val expect = out.select(col("query_id"), col("neighbor_id"),
-            col("adc_fp"))
-          .join(codes.withColumnRenamed("vec_id", "neighbor_id"),
-            Seq("neighbor_id"))
-          .join(lut.withColumnRenamed("cid2", "code"),
-            Seq("query_id", "sub", "code"))
-          .groupBy("query_id", "neighbor_id", "adc_fp", "cell")
-          .agg(sum(col("d_fp")).as("lut_sum"))
-          .join(qc, Seq("query_id", "cell"))
-          .withColumn("recomputed", col("qc_fp") + col("lut_sum"))
-        val badFp = expect.filter(col("adc_fp") =!= col("recomputed")).count()
-        require(badFp == 0, s"$badFp reported adc_fp differ from the recompute")
-        // (c) cosine + rank from in-engine reconstruction norms:
-        // |c + r̂|² = |c|² + Σ_sub (2·dot(c_sub, cw) + |cw|²), each term
-        // micro-rounded in-engine (cross-checks the operator's microFp)
-        val base = centDf.withColumn("b", round(
-            graft.functions.GraftFunctions.dotProduct(col("cc"), col("cc"))
-              * 1e6, 0).cast("bigint"))
-          .select(col("cell"), col("b"))
-        val cross = centDf.crossJoin(broadcast(subCent))
-          .withColumn("t", round((graft.functions.GraftFunctions.dotProduct(
-              slice(col("cc"), col("sub") * dsub + 1, lit(dsub)), col("c"))
-              * 2.0 + graft.functions.GraftFunctions.dotProduct(
-              col("c"), col("c"))) * 1e6, 0).cast("bigint"))
-          .select(col("cell"), col("sub"), col("cid2").as("code"), col("t"))
-        val rn = codes.join(broadcast(cross), Seq("cell", "sub", "code"))
-          .groupBy("vec_id", "cell").agg(sum(col("t")).as("tsum"))
-          .join(broadcast(base), "cell")
-          .select(col("vec_id"), (col("b") + col("tsum")).as("rn2"))
-        val qn = qe.withColumn("qnrm", sqrt(
-          graft.functions.GraftFunctions.dotProduct(col("qe"), col("qe"))))
-          .select(col("query_id"), col("qnrm"))
-        val scored = out
-          .join(rn.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
-          .join(qn, "query_id")
-          .withColumn("truecos", col("adc_fp").cast("double") / 1e6 /
-            (col("qnrm") * sqrt(col("rn2").cast("double") / 1e6)))
-        val badCos = scored
-          .filter(round(col("truecos"), 6) =!= col("adc_cosine")).count()
-        require(badCos == 0, s"$badCos reported adc_cosine differ")
-        val badRank = scored.withColumn("rk", row_number().over(
-            Window.partitionBy("query_id")
-              .orderBy(col("truecos").desc, col("neighbor_id"))))
-          .filter(col("rk") =!= col("rank")).count()
-        require(badRank == 0, s"$badRank ranks out of order")
-        val nOut = out.count()
-        s"$n vectors, $nOut reported pairs: probe membership, residual " +
-          "adc_fp decomposition, cosine and rank all recompute exactly"
-      } finally { enc.unpersist(); rv.unpersist(); out.unpersist(); () }
-    } finally { v.unpersist(); () }
   }
 
   /** KMV profile: every registered column's sketch output re-derived

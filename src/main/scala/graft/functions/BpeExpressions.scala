@@ -20,8 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * and the registered DuckDB oracles replay the same semantics — but as
   * a single whole-stage-codegen-friendly call: O(|merges| · |word|)
   * primitive work per row, a one-node expression tree, no checkpoints.
-  * The merge table rides along as a referenced object (the NearestCells
-  * move), never as literal expression layers.
+  * The merge table rides along as one referenced object, never as
+  * literal expression layers.
   */
 case class BpeReplayExpr(child: Expression, merges: Array[(String, String)])
     extends UnaryExpression {
@@ -51,8 +51,8 @@ case class BpeReplayExpr(child: Expression, merges: Array[(String, String)])
 object BpeReplayExpr {
 
   /** `graft_bpe_replay(word, merges_literal)`: the merge table must
-    * arrive as ONE folded array<struct<l,r>> Literal (typedlit — the
-    * graft_nearest_cells convention), converted here to the referenced
+    * arrive as ONE folded array<struct<l,r>> Literal (typedlit, never a
+    * CreateArray tree), converted here to the referenced
     * String-pair array so the merges never occupy expression-tree
     * nodes. */
   val builder: Seq[Expression] => Expression = exprs => {

@@ -605,14 +605,20 @@ object TextFunctions {
   val gramHashesBuilder: Seq[Expression] => Expression = exprs => {
     require(exprs.length == 4,
       s"graft_gram_hashes expects (text, k, clip, hex), got ${exprs.length} arguments")
-    def lt[T](e: Expression, what: String, f: String => T): T = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
-        f(v.toString)
-      case other => throw new IllegalArgumentException(
-        s"graft_gram_hashes $what must be a literal, got $other")
+    // a NULL literal or one that does not parse as `kind` (NPE /
+    // NumberFormatException from the parse) gets the same descriptive error
+    def lt[T](e: Expression, what: String, kind: String, f: String => T): T = {
+      def bad = new IllegalArgumentException(
+        s"graft_gram_hashes $what must be a non-null $kind literal, got $e")
+      e match {
+        case org.apache.spark.sql.catalyst.expressions.Literal(v, _) if v != null =>
+          try f(v.toString) catch { case _: IllegalArgumentException => throw bad }
+        case _ => throw bad
+      }
     }
-    GramHashesExpr(exprs.head, lt(exprs(1), "k", _.toInt),
-      lt(exprs(2), "clip", _.toBoolean), lt(exprs(3), "hex", _.toBoolean))
+    GramHashesExpr(exprs.head, lt(exprs(1), "k", "int", _.toInt),
+      lt(exprs(2), "clip", "boolean", _.toBoolean),
+      lt(exprs(3), "hex", "boolean", _.toBoolean))
   }
 
   val repetitionStatsBuilder: Seq[Expression] => Expression = exprs => {

@@ -64,90 +64,6 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Top-`nprobe` nearest centroids of a vector by dot product (descending;
-  * ties break to the LOWEST cell id — the same order as sorting
-  * struct(-dot, cid) ascending, and the same winner as a left-to-right
-  * strictly-greater fold when nprobe = 1).
-  *
-  * The centroid matrix rides along as a referenced object, NOT as
-  * literal expressions: the literal-fold form costs a (cells × dim)-node
-  * expression tree — ~28k nodes at √N cells for a 200k corpus — which
-  * breaks whole-stage codegen and runs interpreted. Here the matrix is
-  * one `double[][]` and the scan is a tight primitive loop with an
-  * O(cells · nprobe) insertion top-n, codegen'd.
-  */
-case class NearestCells(child: Expression, centroids: Array[Array[Double]],
-    nprobe: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = ArrayType(
-    org.apache.spark.sql.types.IntegerType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) if centroids.nonEmpty && nprobe >= 1 =>
-      TypeCheckResult.TypeCheckSuccess
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckFailure(
-      "nearest_cells needs a non-empty centroid matrix and nprobe >= 1")
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"nearest_cells expects ARRAY<DOUBLE>, got ${t.sql}")
-  }
-
-  /** cells × nprobe selection shared by eval and codegen.
-    *
-    * NaN dot products (NaN vector component, or ±Inf×0) are demoted to
-    * -Infinity so degenerate inputs degrade deterministically: the output
-    * is always `np` valid cell ids (all-NaN input yields cells 0..np-1,
-    * the tie-break-by-lowest-cid answer for an all-equal score vector) —
-    * never a -1 sentinel that downstream element_at would trip over. The
-    * literal-fold path in VectorSearch.assign applies the same nanvl
-    * demotion so both physical forms agree on degenerate input. */
-  def nearest(v: ArrayData): Array[Int] = {
-    val np = math.min(nprobe, centroids.length)
-    val bestD = new Array[Double](np)
-    val bestC = new Array[Int](np)
-    var filled = 0
-    var c = 0
-    while (c < centroids.length) {
-      val row = centroids(c)
-      val n = math.min(v.numElements(), row.length)
-      var d = 0.0
-      var i = 0
-      while (i < n) { d += row(i) * v.getDouble(i); i += 1 }
-      if (java.lang.Double.isNaN(d)) d = java.lang.Double.NEGATIVE_INFINITY
-      // strictly-greater insertion among the `filled` live entries: equal
-      // d keeps the earlier (lower) cid; unfilled slots append in cid order
-      var j = filled
-      while (j > 0 && d > bestD(j - 1)) j -= 1
-      if (j < np) {
-        var m = math.min(filled, np - 1)
-        while (m > j) { bestD(m) = bestD(m - 1); bestC(m) = bestC(m - 1); m -= 1 }
-        bestD(j) = d; bestC(j) = c
-        if (filled < np) filled += 1
-      }
-      c += 1
-    }
-    bestC
-  }
-
-  override def nullSafeEval(a: Any): Any =
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(nearest(a.asInstanceOf[ArrayData]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("nearestCells", this, classOf[NearestCells].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      val cids = ctx.freshName("cids")
-      s"""
-         |int[] $cids = $self.nearest($a);
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($cids);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Session registration + Column-level API for graft native functions. */
 object GraftFunctions {
   /** Shared builder (per-session registry AND GraftExtensions). */
@@ -158,44 +74,11 @@ object GraftFunctions {
     DotProduct(exprs(0), exprs(1))
   }
 
-  /** graft_nearest_cells(vec, centroid_matrix_literal, nprobe_literal):
-    * the matrix must arrive as ONE folded Literal (typedlit), never a
-    * CreateArray tree — the whole point is keeping cells × dim values
-    * out of the expression tree. */
-  val nearestBuilder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-      org.apache.spark.sql.catalyst.expressions.Expression = exprs => {
-    require(exprs.length == 3,
-      s"graft_nearest_cells expects (vec, centroids, nprobe), got ${exprs.length}")
-    val matrix = exprs(1) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: ArrayData, _) =>
-        v.toObjectArray(ArrayType(DoubleType)).map(
-          _.asInstanceOf[ArrayData].toDoubleArray())
-      case other => throw new IllegalArgumentException(
-        s"graft_nearest_cells centroids must be an array literal, got $other")
-    }
-    val np = exprs(2) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"graft_nearest_cells nprobe must be an int literal, got $other")
-    }
-    NearestCells(exprs(0), matrix, np)
-  }
-
   def register(spark: SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_dot", dotBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nearest_cells", nearestBuilder, "built-in")
   }
 
   /** Requires register(spark) on the session first. */
   def dotProduct(a: Column, b: Column): Column = call_function("graft_dot", a, b)
-
-  /** Requires register(spark) on the session first. */
-  def nearestCells(vec: Column, centroids: Array[Array[Double]],
-      nprobe: Int): Column =
-    call_function("graft_nearest_cells", vec,
-      org.apache.spark.sql.functions.typedlit(
-        centroids.map(_.toSeq).toSeq),
-      org.apache.spark.sql.functions.lit(nprobe))
 }

@@ -198,11 +198,11 @@ object Bpe {
     * bounded training dict never held. Fully distributed, no
     * corpus-scale state — the merge table is the only driver-held input
     * (numMerges rows), riding into the plan as ONE native
-    * [[graft.functions.BpeReplayExpr]] reference object (the
-    * NearestCells move). The former shape stacked numMerges interpreted
-    * `aggregate()` fold layers with lazy localCheckpoint truncations
-    * every 8; the native replay is a single codegen-friendly O(|merges|
-    * · |word|) call per row, value-identical (BpeSpec pins it against
+    * [[graft.functions.BpeReplayExpr]] reference object. The former
+    * shape stacked numMerges interpreted `aggregate()` fold layers with
+    * lazy localCheckpoint truncations every 8; the native replay is a
+    * single codegen-friendly O(|merges| · |word|) call per row,
+    * value-identical (BpeSpec pins it against
     * the naive reference; the doc_bpe_encode_oov oracle hash-matches).
     *
     * Input: a frame with a `word` column (distinct words — callers

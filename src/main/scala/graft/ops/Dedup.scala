@@ -39,11 +39,12 @@ object Dedup {
     * density ~2/(win+1) instead of every gram — the local-similarity
     * detector plagiarism/citation pipelines deploy.
     *
-    * Scale shape: per-row gram explode (win-bounded window fan-out, no
-    * joins), one window ranked per (doc, window-end) — each partition
-    * group holds ≤ win rows, massively parallel, never a per-doc
-    * history. Hashes are md5-derived so any engine re-derives them:
-    * the first 15 hex chars = 60 bits, always-positive BIGINT. The
+    * Scale shape: per-row gram explode (no fan-out, no joins), then one
+    * sliding window over `partitionBy(doc_id)`: each document's whole
+    * gram stream is sorted inside one task, so the skew bound is the
+    * largest document (its gram count), not `win`; parallelism is
+    * across documents. Hashes are md5-derived so any engine re-derives
+    * them: the first 15 hex chars = 60 bits, always-positive BIGINT. The
     * width matters at corpus scale — a 32-bit hash collides random
     * unrelated grams past ~77k distinct grams (birthday bound),
     * inflating winnowOverlap's shared_fps with false pairs the hot cap

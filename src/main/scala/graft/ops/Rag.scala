@@ -1,14 +1,16 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** Retrieval pipeline, data side: chunk text → embed → top-k retrieve.
   *
   * The reference ships chunks to a managed vector store and retrieves
   * through it (tools/rag/rag_client.py:74-107); the engine-side twin is
-  * an embedding column plus ANN search (graft.ops.VectorSearch), so the
-  * whole index lives in the tables the engine already manages.
+  * an embedding column plus an exact cosine top-k, so the whole index
+  * lives in the tables the engine already manages.
   *
   * The embedder is STUBBED as a deterministic hash-projection column
   * expression (no model weights in this environment): each dimension is
@@ -42,19 +44,41 @@ object Rag {
       embedStub(col(textCol), dim).as("embedding"))
 
   /** Top-k chunks for each query string, exact cosine (the query set
-    * broadcasts; for corpus-vs-corpus scale use VectorSearch.annCosine
-    * over the same index). Returns (query_id, chunk_id, rank, cosine,
+    * broadcasts). Returns (query_id, chunk_id, rank, cosine,
     * chunk_content). */
   def retrieve(idx: DataFrame, queries: DataFrame, k: Int = 10,
       dim: Int = 16): DataFrame = {
     // bruteForceCosine reads the query id from the corpus id column name
     val q = queries.select(col("query_id").as("chunk_id"),
       embedStub(col("query_text"), dim).as("embedding"))
-    VectorSearch.bruteForceCosine(
+    bruteForceCosine(
       idx.select(col("chunk_id"), col("embedding")), q,
       "chunk_id", "embedding", k, excludeSelf = false)
       .withColumnRenamed("neighbor_id", "chunk_id")
       .join(idx.select(col("chunk_id"), col("chunk_content")), "chunk_id")
       .select("query_id", "chunk_id", "rank", "cosine", "chunk_content")
+  }
+
+  /** Exact brute-force cosine top-k (broadcast query set).
+    * `excludeSelf` drops neighbor_id == query_id matches — right for
+    * corpus-vs-corpus dedup, wrong for external query sets whose ids
+    * merely collide with corpus ids. */
+  private def bruteForceCosine(corpus: DataFrame, queries: DataFrame, idCol: String,
+      vecCol: String, k: Int = 10, excludeSelf: Boolean = true): DataFrame = {
+    val c = corpus
+      .withColumn("nrm", sqrt(GraftFunctions.dotProduct(col(vecCol), col(vecCol))))
+    val q = queries
+      .select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
+      .withColumn("qnrm", sqrt(GraftFunctions.dotProduct(col("qvec"), col("qvec"))))
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("cosine").desc, col("neighbor_id"))
+    c.crossJoin(broadcast(q))
+      .filter(if (excludeSelf) col(idCol) =!= col("query_id") else lit(true))
+      .withColumn("cosine",
+        GraftFunctions.dotProduct(col("qvec"), col(vecCol)) /
+          (col("qnrm") * col("nrm")))
+      .select(col("query_id"), col(idCol).as("neighbor_id"), col("cosine"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
   }
 }

@@ -689,51 +689,6 @@ object TextAnalysis {
             (col("n_bigrams").cast("double") * 1e6), 6)).as("avg_nll_bits"))
   }
 
-  /** Hashed bag-of-words document vectors (the "hashing trick"): every
-    * word lands in bucket md5(word)[:8] mod `dim`, per-doc bucket counts
-    * form a dense integer vector, L2-normalized to unit length — the
-    * standard text-clustering feature when no embedding model is in the
-    * loop (spherical k-means over these IS topic clustering). The md5
-    * bucket and the normalization (integer counts → one exact sqrt →
-    * one divide per slot) are bit-identical in any engine, so the
-    * vectors feed the deterministic k-means machinery directly.
-    *
-    * Scale shape: one corpus scan → a (doc, bucket) count (map-side
-    * combinable, ≤ dim rows per doc), the dense layout is a per-doc
-    * explode(sequence(dim)) + equi-join + collect_list — never a
-    * vocabulary-sized state (that is the trick's point: the feature
-    * space is FIXED at `dim` no matter how many distinct words 100 TB
-    * holds). Returns (idCol, v (raw counts), e (unit vector)); docs with
-    * zero words drop. */
-  def hashedTfVectors(df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", dim: Int = 32): DataFrame = {
-    require(dim >= 1, s"hashing dim must be >= 1, got $dim")
-    val toks = df.select(col(idCol), explode(words(col(textCol))).as("term"))
-    val cnts = toks
-      .withColumn("b",
-        conv(substring(md5(col("term")), 1, 8), 16, 10).cast("bigint")
-          % dim.toLong)
-      .groupBy(col(idCol), col("b")).agg(count(lit(1)).as("c"))
-    // dense layout: ONE groupBy collecting each doc's (bucket, count)
-    // entries into a map, then a fixed-`dim` sequence transform with a
-    // map lookup (absent bucket ⇒ 0.0) — same vectors as the former
-    // distinct-ids × explode(sequence(dim)) grid + equi-join + second
-    // groupBy, minus the grid Generate and its join/shuffle
-    val vecs = cnts.groupBy(col(idCol))
-      .agg(map_from_entries(collect_list(struct(col("b"), col("c"))))
-        .as("bc"))
-      .select(col(idCol),
-        transform(sequence(lit(0L), lit(dim.toLong - 1L)),
-          b => coalesce(element_at(col("bc"), b), lit(0L)).cast("double"))
-          .as("v"))
-    vecs
-      .withColumn("nrm",
-        sqrt(graft.functions.GraftFunctions.dotProduct(col("v"), col("v"))))
-      .filter(col("nrm") > 0.0)
-      .withColumn("e", transform(col("v"), x => x / col("nrm")))
-      .drop("nrm")
-  }
-
   /** Inverted-index build with bounded posting lists — the
     * tail-term retrieval index the BM25/decontamination probes consume
     * upstream. Per term: its document frequency and the first `topK`

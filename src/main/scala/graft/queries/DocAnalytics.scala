@@ -286,101 +286,6 @@ object DocAnalytics {
         .orderBy("term")
     },
 
-    // ---- topic clustering over hashed bag-of-words vectors ---------------
-    // The no-embedding-model text-clustering path (data-mixing audits run
-    // it when an encoder isn't in the loop): every word hashes into one
-    // of 32 buckets (md5 — the feature space is FIXED no matter how many
-    // distinct words the corpus holds), per-doc counts L2-normalize to a
-    // unit vector, and spherical k-means (the SAME deterministic
-    // md5-seeded / exact-decimal-Lloyd machinery as emb_kmeans_stats,
-    // fully re-derived below) labels every doc. Report: cluster size,
-    // token mass, and the dominant bucket (count argmax, ties to the
-    // lowest bucket) — all exact integers.
-    sql("doc_topic_clusters", {
-      val (dim, k) = (32, 8)
-      def assignSql(src: String, cf: String): String =
-        s"""SELECT * EXCLUDE (rk) FROM (
-           |  SELECT s.*, $cf.cid AS cid,
-           |    ROW_NUMBER() OVER (PARTITION BY s.vec_id
-           |      ORDER BY list_dot_product(s.e, $cf.c) DESC, $cf.cid) AS rk
-           |  FROM $src s CROSS JOIN $cf) WHERE rk = 1""".stripMargin
-      def lloydSql(assigned: String): String =
-        s"""SELECT cid, list(m ORDER BY pos) AS c FROM (
-           |  SELECT cid, pos,
-           |    CAST(SUM(CAST(x AS DECIMAL(38,18))) AS DOUBLE) / COUNT(*) AS m
-           |  FROM (SELECT cid, unnest(e) AS x,
-           |          unnest(range(1, len(e) + 1)) AS pos FROM $assigned)
-           |  GROUP BY cid, pos) GROUP BY cid""".stripMargin
-      s"""WITH toks AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS term
-        |  FROM documents
-        |), cnts AS (
-        |  SELECT doc_id,
-        |    CAST('0x' || substr(md5(term), 1, 8) AS BIGINT) % $dim AS b,
-        |    COUNT(*) AS c
-        |  FROM toks GROUP BY doc_id, b
-        |), grid AS (
-        |  SELECT d.doc_id, gb.b, COALESCE(c.c, 0) AS c
-        |  FROM (SELECT DISTINCT doc_id FROM toks) d
-        |  CROSS JOIN (SELECT unnest(range($dim)) AS b) gb
-        |  LEFT JOIN cnts c ON c.doc_id = d.doc_id AND c.b = gb.b
-        |), vecs AS (
-        |  SELECT doc_id, list(CAST(c AS DOUBLE) ORDER BY b) AS v
-        |  FROM grid GROUP BY doc_id
-        |), v AS (
-        |  SELECT doc_id AS vec_id,
-        |    list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS e
-        |  FROM vecs WHERE list_dot_product(v, v) > 0
-        |), c0 AS (
-        |  SELECT cid, e AS c FROM (
-        |    SELECT ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS cid, e
-        |    FROM v) WHERE cid < $k
-        |), a0 AS (${assignSql("v", "c0")}),
-        |c1 AS (${lloydSql("a0")}),
-        |a1 AS (${assignSql("v", "c1")}),
-        |c2 AS (${lloydSql("a1")}),
-        |af AS (${assignSql("v", "c2")}),
-        |bc AS (
-        |  SELECT a.cid, g.b, CAST(SUM(g.c) AS BIGINT) AS tok
-        |  FROM af a JOIN grid g ON g.doc_id = a.vec_id
-        |  GROUP BY a.cid, g.b
-        |), nd AS (SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_docs FROM af GROUP BY cid),
-        |tt AS (SELECT cid, CAST(SUM(tok) AS BIGINT) AS total_tokens FROM bc GROUP BY cid),
-        |top AS (
-        |  SELECT cid, b AS top_bucket, tok AS top_bucket_tokens FROM (
-        |    SELECT cid, b, tok, ROW_NUMBER() OVER (PARTITION BY cid
-        |      ORDER BY tok DESC, b) AS rk FROM bc) WHERE rk = 1
-        |)
-        |SELECT n.cid, n.n_docs, tt.total_tokens, top.top_bucket, top.top_bucket_tokens
-        |FROM nd n JOIN tt ON tt.cid = n.cid JOIN top ON top.cid = n.cid
-        |ORDER BY n.cid""".stripMargin
-    }) { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      graft.functions.GraftFunctions.register(s)
-      // cache the feature frame: k-means re-reads its input for the seed
-      // pull, each Lloyd pass, and the final assignment — without the
-      // cache the whole tokenize/count/densify derivation re-runs ~5×
-      val feats = graft.ops.TextAnalysis.hashedTfVectors(
-        docs(s, dir), "doc_id", "text", dim = 32).cache()
-      val assigned = graft.ops.VectorSearch
-        .clusterAssign(feats, "doc_id", "e", k = 8, iters = 2)
-        .select(col("doc_id"), col("v"), col("cid")).cache()
-      val bc = assigned
-        .select(col("cid"), posexplode(col("v")).as(Seq("b", "x")))
-        .groupBy("cid", "b").agg(sum(col("x").cast("long")).as("tok"))
-      val nd = assigned.groupBy("cid").agg(count(lit(1)).as("n_docs"))
-      val tt = bc.groupBy("cid").agg(sum(col("tok")).as("total_tokens"))
-      val w = Window.partitionBy("cid").orderBy(col("tok").desc, col("b"))
-      val top = bc.withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("cid"), col("b").cast("bigint").as("top_bucket"),
-          col("tok").as("top_bucket_tokens"))
-      nd.join(tt, "cid").join(top, "cid")
-        .select(col("cid"), col("n_docs"), col("total_tokens"),
-          col("top_bucket"), col("top_bucket_tokens"))
-        .orderBy("cid")
-    },
-
     // ---- per-doc quality scoring (stopword ratio, token stats) -----------
     sql("doc_quality",
       """SELECT doc_id, n_tokens, stop_tokens,

@@ -5,8 +5,8 @@ package graft.queries
 object Registry {
   lazy val all: Seq[QueryDef] =
     Relational.all ++ EventAnalytics.all ++ DocAnalytics.all ++
-      EmbeddingOps.all ++ TraceQueries.all ++ PipelineQueries.all ++
-      BpeQueries.all ++ SinkRoundtrip.all
+      TraceQueries.all ++ PipelineQueries.all ++ BpeQueries.all ++
+      SinkRoundtrip.all
 
   lazy val byName: Map[String, QueryDef] =
     all.map(q => q.name -> q).toMap

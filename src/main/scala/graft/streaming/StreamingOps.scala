@@ -249,46 +249,6 @@ object StreamingOps {
         col("dedup_keep"), col("not_contaminated"), col("keep"))
   }
 
-  /** Streaming EMBEDDING near-duplicate ingest alerts — the
-    * vector-modality twin of `nearDupAlerts`: each arriving embedding's
-    * hyperplane-LSH bucket ids are computed STATELESSLY per row (the same
-    * sign-bit projection the batch `VectorSearch` paths use, seeded
-    * identically), exploded per table, and probed against the STATIC
-    * bucketed corpus index (`VectorSearch.explodedBuckets` of the
-    * existing corpus — the stored index shape). Candidates sharing a
-    * bucket in any table verify by EXACT cosine against `threshold`, so
-    * precision is exact and recall is the usual LSH bargain. Stream-static
-    * inner join → stateless, no watermark/state store. Emits one row per
-    * (vec_id, old_id, tbl) collision that clears the threshold — a pair
-    * colliding in several tables alerts once per table (distinct-ing a
-    * stream would need state); dedupe downstream if volume matters.
-    * `bits` must be given explicitly: a stream has no count() to size
-    * autoBits from — size it from the STORED corpus count at deploy
-    * time. */
-  def embNearDupAlerts(vecs: DataFrame, corpusBuckets: DataFrame,
-      dim: Int, threshold: Double, bits: Int, tables: Int = 4,
-      seed: Long = 42L, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    require(bits > 0, "bits must be sized from the stored corpus count")
-    val q = graft.ops.VectorSearch.explodedBuckets(
-      vecs.withColumn("__qnrm",
-        sqrt(graft.functions.GraftFunctions.dotProduct(col(vecCol), col(vecCol)))),
-      vecCol, dim, bits, tables, seed)
-      .select(col(idCol), col(vecCol).as("__qvec"), col("__qnrm"),
-        col("tbl"), col("bucket"))
-    q.join(
-        corpusBuckets.select(col(idCol).as("old_id"),
-          col(vecCol).as("__nvec"), col("nrm").as("__nnrm"),
-          col("tbl"), col("bucket")),
-        Seq("tbl", "bucket"), "inner")
-      .filter(col(idCol) =!= col("old_id"))
-      .withColumn("cosine",
-        graft.functions.GraftFunctions.dotProduct(col("__qvec"), col("__nvec")) /
-          (col("__qnrm") * col("__nnrm")))
-      .filter(col("cosine") >= threshold)
-      .select(col(idCol), col("old_id"), col("tbl"), col("cosine"))
-  }
-
   case class DistinctPoint(key: String, value: String,
       ts: java.sql.Timestamp = null)
   case class HllState(n_seen: Long, regs: Array[Byte])

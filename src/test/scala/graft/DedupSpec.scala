@@ -343,7 +343,6 @@ class DedupSpec extends SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
-      import s2.implicits._
       val r = s2.sql(
         """SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d,
           |       rolling_hash('abc') AS h""".stripMargin).first()
@@ -353,14 +352,6 @@ class DedupSpec extends SparkSpec {
         "SELECT graft_ewma(x, 0.5) OVER (ORDER BY i) AS e FROM VALUES (1, 2.0), (2, 4.0) AS t(i, x)")
         .collect().map(_.getDouble(0)).toSeq
       assert(e === Seq(2.0, 3.0))
-      // graft_nearest_cells resolves through the injected registry too —
-      // via the Column helper, which ships the centroid matrix as one
-      // folded typedlit Literal (the builder rejects unfolded trees)
-      val cells = Seq(Tuple1(Seq(0.9, 0.1))).toDF("v")
-        .select(graft.functions.GraftFunctions.nearestCells(col("v"),
-          Array(Array(0.0, 1.0), Array(1.0, 0.0)), 2).as("c"))
-        .first().getSeq[Int](0)
-      assert(cells === Seq(1, 0))
       // graft_hll injects as an aggregate through the same path
       val hll = s2.sql(
         """SELECT graft_hll(CAST(i AS STRING)).est AS est

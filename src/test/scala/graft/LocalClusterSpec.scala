@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions.col
   * JVM running the ClusterSmoke slice on `local-cluster[2,4,2048]` — real
   * executor processes, real task/closure serialization, cross-JVM merge
   * of the custom aggregate buffers (HllAgg, MinHashAgg), codegen on
-  * executor classloaders (Ewma, RollingHash, NearestCells), remote
+  * executor classloaders (Ewma, RollingHash), remote
   * shuffle fetches — then assert each query's result is EXACTLY the
   * local-mode answer computed in this JVM.
   *

@@ -10,26 +10,20 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
   * BNLJ over a GROWING side and measured 26× at 10× volume until they
   * were re-shaped into time-bucketed equi-joins.
   *
-  * The product exceptions are the two deliberately-all-pairs exact
-  * verification twins, which are input-size-guarded in code
-  * (Dedup.jaccardPairs, EmbeddingOps' emb_neardup_pairs) and exist to
-  * anchor the bucketed production paths.
+  * The product exception is the deliberately-all-pairs exact
+  * verification twin, which is input-size-guarded in code
+  * (Dedup.jaccardPairs) and exists to anchor the bucketed production
+  * path.
   */
 class PlanGuardSpec extends SparkSpec {
 
-  private val allowedProducts = Set("emb_neardup_pairs", "doc_neardup_jaccard")
+  private val allowedProducts = Set("doc_neardup_jaccard")
 
   /** BNLJ allowed ONLY where the broadcast side cannot grow with the
     * data: each entry names the bound. */
   private val allowedBnlj: Map[String, String] = Map(
     // 1-row global stats frame crossJoined onto bucket counts (J4)
     "ev_zscore_hotspots" -> "broadcast side is a single global-stats row",
-    // fixed literal query set (vec_id < 5) broadcast against the corpus
-    "emb_knn_cosine" -> "broadcast side is the 5-vector query set",
-    // same shape, int8-quantized scoring (exact integer dots)
-    "emb_int8_knn" -> "broadcast side is the 5-vector quantized query set",
-    // same shape, PQ-ADC scoring (5 query rows carrying m integer LUTs)
-    "emb_ann_pq" -> "broadcast side is the 5-query LUT set",
     // 1-row total-symbols frame crossJoined onto the pair scoring
     "doc_interp_nll" -> "broadcast side is a 1-row symbol-total frame",
     // three 1-row aggregate counts crossJoined into one summary row

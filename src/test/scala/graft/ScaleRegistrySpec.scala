@@ -17,16 +17,10 @@ import graft.trace._
   * Both tests self-cancel when the generated inputs are absent, so the
   * regular test cycle stays fast; COVERAGE.md records a full run.
   *
-  * Excluded by design: doc_neardup_jaccard and emb_neardup_pairs — the
-  * two guarded all-pairs ORACLE TWINS (documented `weak`, fail-fast over
-  * 100k rows). Their quadratic cost at 10× is the reason the production
-  * paths (doc_minhash_lsh / emb_neardup_lsh) exist; those ARE measured
-  * here. emb_dbscan is excluded for the same reason one notch up: its
-  * registered fixture regime (threshold 0.3, 2-bit buckets — the coarse
-  * bands a LOW threshold needs for recall) is Θ(N²·4×) candidate volume
-  * by construction (~16× emb_neardup_lsh's 552 s at 10×); the
-  * production regime — dedup thresholds, auto-sized bits — is measured
-  * in the dedicated test below alongside nearDupPairs.
+  * Excluded by design: doc_neardup_jaccard — the guarded all-pairs
+  * ORACLE TWIN (documented `weak`, fail-fast over 100k rows). Its
+  * quadratic cost at 10× is the reason the production path
+  * (doc_minhash_lsh) exists; that IS measured here.
   */
 class ScaleRegistrySpec extends SparkSpec {
 
@@ -35,16 +29,7 @@ class ScaleRegistrySpec extends SparkSpec {
   private val Logs = "/tmp/graft_scale/logs"
   private val Logs10 = "/tmp/graft_scale/logs10"
 
-  private val ExcludedTwins =
-    Set("doc_neardup_jaccard", "emb_neardup_pairs", "emb_dbscan")
-
-  /** Measured but exempt from the linear bound: at threshold 0.45 on this
-    * corpus the TRUE ANSWER is Θ(N²) — random 64-dim pairs clear 0.45 with
-    * p ≈ 1e-4, so 2k vectors hold ~180 qualifying pairs and 20k hold
-    * ~18k; the work is quadratic because the output is. The linear-scale
-    * production regime (dedup thresholds, auto-sized bits) is measured by
-    * the dedicated test below. */
-  private val QuadraticOutput = Set("emb_neardup_lsh")
+  private val ExcludedTwins = Set("doc_neardup_jaccard")
 
   /** Ratio bound: 10× rows on fixed cores is ~10× ideally; partial
     * aggregation and amortized constants often land BELOW 10, shuffle
@@ -76,17 +61,13 @@ class ScaleRegistrySpec extends SparkSpec {
     val fams = qs.map(q => q.name).groupBy(family).toSeq.sortBy(_._1)
     val report = new StringBuilder
     val violations = Seq.newBuilder[String]
-    fams.foreach { case (fam, allNames) =>
-      val (exempt, names) = allNames.partition(QuadraticOutput)
+    fams.foreach { case (fam, names) =>
       val b = names.map(base).sum
       val s = names.map(scaled).sum
       val r = s / b
       report ++= f"$fam%-12s sf0.1 $b%7.1f s → 10x $s%7.1f s  ratio $r%5.1f\n"
       names.sortBy(n => -scaled(n) / base(n)).take(3).foreach { n =>
         report ++= f"    $n%-34s ${base(n)}%6.2f → ${scaled(n)}%7.2f  (${scaled(n) / base(n)}%5.1f×)\n"
-      }
-      exempt.foreach { n =>
-        report ++= f"    $n%-34s ${base(n)}%6.2f → ${scaled(n)}%7.2f  (${scaled(n) / base(n)}%5.1f×, Θ(N²) output — exempt)\n"
       }
       if (r > FamilyBound)
         violations += s"family $fam scaled super-linearly (${r}× for 10× " +
@@ -98,58 +79,12 @@ class ScaleRegistrySpec extends SparkSpec {
     assert(v.isEmpty, v.mkString("\n") + "\n\nfull report:\n" + report)
   }
 
-  test("production near-dup (auto-bits) scales ≲ linearly") {
-    assume(new java.io.File(Sf1).isDirectory, s"run dev/gen_scale_tables.py")
-    graft.functions.GraftFunctions.register(spark)
-    def run(dir: String): Double = {
-      val v = graft.Tables(spark, dir, "embeddings")
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
-      val t0 = System.nanoTime()
-      // bits = 0 → autoBits: signature width grows with the corpus so
-      // bucket sizes (and the candidate join volume) stay bounded
-      graft.ops.VectorSearch.nearDupPairs(v, "vec_id", "e", dim = 64,
-        threshold = 0.9, bits = 0, tables = 6)
-        .queryExecution.toRdd.count()
-      spark.catalog.clearCache()
-      (System.nanoTime() - t0) / 1e9
-    }
-    run(Sf01) // warm-up
-    val base = run(Sf01)
-    val scaled = run(Sf1)
-    info(f"auto-bits near-dup: sf0.1 $base%.2f s → 10x $scaled%.2f s (${scaled / base}%.1f×)")
-    assert(scaled / base <= FamilyBound,
-      f"auto-bits near-dup scaled super-linearly (${scaled / base}%.1f× for 10× vectors)")
-    // DBSCAN's production regime (dedup threshold, auto-sized bits): the
-    // LSH edge join stays bounded per bucket and the core-core closure
-    // runs over the sparse high-similarity graph — the deployment shape;
-    // the registered 0.3-threshold/2-bit fixture regime is
-    // Θ(N²)-by-construction and excluded from the sweep (see header)
-    def runDbscan(dir: String): Double = {
-      val v = graft.Tables(spark, dir, "embeddings")
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
-      val t0 = System.nanoTime()
-      graft.ops.VectorSearch.dbscanCosine(v, "vec_id", "e", dim = 64,
-        threshold = 0.9, minPts = 4, bits = 0, tables = 6)
-        .queryExecution.toRdd.count()
-      spark.catalog.clearCache()
-      (System.nanoTime() - t0) / 1e9
-    }
-    runDbscan(Sf01) // warm-up
-    val dBase = runDbscan(Sf01)
-    val dScaled = runDbscan(Sf1)
-    info(f"auto-bits DBSCAN: sf0.1 $dBase%.2f s → 10x $dScaled%.2f s (${dScaled / dBase}%.1f×)")
-    assert(dScaled / dBase <= FamilyBound,
-      f"auto-bits DBSCAN scaled super-linearly (${dScaled / dBase}%.1f× for 10× vectors)")
-  }
-
   test("100x probe: representative operators stay ~linear at sf10-equivalent") {
     val Sf10 = "/tmp/graft_scale/sf10"
     assume(new java.io.File(Sf10).isDirectory,
       "run dev/gen_scale_tables.py 100 /tmp/graft_scale/sf10")
     // One representative per plan family, run at TRUE 100× volume (60M
-    // lineitem / 10M events / 500k docs / 200k vectors): scan-agg,
+    // lineitem / 10M events / 500k docs): scan-agg,
     // multi-join, global window, gaps-and-islands, windowed rollup,
     // boundary-carried scan, the custom as-of join, the fused text scan,
     // and exact dedup. doc_minhash is probed at 10× only — this corpus
@@ -159,10 +94,9 @@ class ScaleRegistrySpec extends SparkSpec {
       "q8_running_qty_by_supplier", "ev_sessionize", "ev_rollup_60s",
       "ev_value_drops", "ev_asof_last_signup", "doc_langid",
       "doc_fingerprint_dedup",
-      // round-6 additions: the broadcast decontamination probe (50M
-      // exploded grams through a broadcast hash join at 100×) and the
-      // int8-quantized brute-force scan (5 queries × 200k vectors)
-      "doc_decontam", "emb_int8_knn",
+      // round-6 addition: the broadcast decontamination probe (50M
+      // exploded grams through a broadcast hash join at 100×)
+      "doc_decontam",
       // round-10 additions: the per-step conditional-min funnel and its
       // streaming-carrier twin over 10M events / 150k funnel keys, BPE
       // merge training (64 fixed iterations over the bounded dict — the
@@ -172,21 +106,17 @@ class ScaleRegistrySpec extends SparkSpec {
       "ev_funnel_users", "ev_streaming_funnel", "doc_bpe_vocab",
       "doc_tfidf_terms", "doc_bm25_topk",
       // round-10 continuation: the streaming-carrier sessionization
-      // (10M events folded per key), hashed-TF-IDF spherical k-means
-      // (500k docs into a FIXED 32-dim feature space), interpolated LM
-      // scoring (bounded model + 1-row total broadcast), PQ-ADC full
-      // scan (5 queries × 200k byte-code rows) and its IVF-pruned form
-      "ev_streaming_sessions", "doc_topic_clusters", "doc_interp_nll",
-      "emb_ann_pq", "emb_ann_ivfpq",
+      // (10M events folded per key) and interpolated LM scoring
+      // (bounded model + 1-row total broadcast)
+      "ev_streaming_sessions", "doc_interp_nll",
       // round-11 additions: winnowing at 100× on the replica-heavy
       // corpus (the hot-cap case — 80% of docs are 100-way replicas, so
       // most fingerprints blow the 50-doc cap and must DROP before the
       // pair join), the exact + bounded-state MAD pair, the per-user
-      // lag Markov matrix, the streaming dedup carrier over 500k docs,
-      // and the residual IVFADC (two trainings + cell-pruned ADC)
+      // lag Markov matrix and the streaming dedup carrier over 500k docs
       "doc_winnow_fingerprints", "doc_winnow_overlap", "ev_mad_anomalies",
       "ev_mad_anomalies_approx", "ev_markov_transitions",
-      "doc_streaming_dedup", "emb_ann_ivfpq_res",
+      "doc_streaming_dedup",
       // round-12 additions: duplicated-span detection + trim on the
       // replica-heavy corpus (near-every gram duplicated — the dup-hash
       // semi-join passes almost the whole gram stream, the worst case
@@ -209,42 +139,8 @@ class ScaleRegistrySpec extends SparkSpec {
     sweep(Sf01) // warm-up
     val base = sweep(Sf01)
     val scaled = sweep(Sf10)
-    // ANN at 100×: the operator's auto-bits mode (the registered query's
-    // fixed-bits regime is Θ(N²/2^bits) by construction)
-    graft.functions.GraftFunctions.register(spark)
-    def annAt(dir: String): Double = {
-      val v = graft.Tables(spark, dir, "embeddings")
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
-      val t0 = System.nanoTime()
-      graft.ops.VectorSearch.annCosine(v, v.filter(col("vec_id") < 5),
-        "vec_id", "e", dim = 64, k = 10, bits = 0, tables = 4)
-        .queryExecution.toRdd.count()
-      spark.catalog.clearCache()
-      (System.nanoTime() - t0) / 1e9
-    }
-    annAt(Sf01)
-    val annBase = annAt(Sf01)
-    val annScaled = annAt(Sf10)
-    // IVF at 100×: auto mode (cells ≈ √N, sampled Lloyd) — the fixed
-    // 16-cell registered regime re-ranks a constant 19% of any corpus
-    def ivfAt(dir: String): Double = {
-      val v = graft.Tables(spark, dir, "embeddings")
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
-      val t0 = System.nanoTime()
-      graft.ops.VectorSearch.ivfCosine(v, v.filter(col("vec_id") < 5),
-        "vec_id", "e", k = 10, nCells = 0, nprobe = 3)
-        .queryExecution.toRdd.count()
-      spark.catalog.clearCache()
-      (System.nanoTime() - t0) / 1e9
-    }
-    ivfAt(Sf01)
-    val ivfBase = ivfAt(Sf01)
-    val ivfScaled = ivfAt(Sf10)
-    val all = (base.keys.map(k => (k, base(k), scaled(k))).toSeq :+
-      ("ann_auto_bits", annBase, annScaled) :+
-      ("ivf_auto_cells", ivfBase, ivfScaled)).sortBy(-_._3)
+    val all = base.keys.map(k => (k, base(k), scaled(k))).toSeq
+      .sortBy(-_._3)
     val report = all.map { case (n, b, s) =>
       f"$n%-30s sf0.1 $b%6.2f s → 100x $s%8.2f s  (${s / b}%6.1f×)"
     }.mkString("\n")

@@ -905,69 +905,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("streaming embedding near-dup alerts: stateless LSH probe, exact-" +
-      "cosine precision, equals the batch execution") {
-    implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
-    val dim = 8
-    val rng = new scala.util.Random(7L)
-    def randVec(): Seq[Double] = Seq.fill(dim)(rng.nextGaussian())
-    val corpusVecs = (0L until 40L).map(i => (i, randVec()))
-    val corpus = corpusVecs.toDF("vec_id", "embedding")
-    // the STORED index the stream probes: bucketed + normed corpus
-    val corpusBuckets = graft.ops.VectorSearch.explodedBuckets(
-      corpus.withColumn("nrm", sqrt(
-        graft.functions.GraftFunctions.dotProduct(col("embedding"), col("embedding")))),
-      "embedding", dim, bits = 6, tables = 4, seed = 42L)
-      .select("vec_id", "embedding", "nrm", "tbl", "bucket")
-
-    val input = MemoryStream[(Long, Seq[Double])]
-    val vecs = input.toDF().toDF("vec_id", "embedding")
-    val q = StreamingOps.embNearDupAlerts(vecs, corpusBuckets,
-        dim = dim, threshold = 0.95, bits = 6)
-      .writeStream.format("memory").queryName("embdup_out")
-      .outputMode(OutputMode.Append).start()
-    val newBatch = Seq(
-      (100L, corpusVecs(0)._2),                         // verbatim copy of vec 0
-      (101L, corpusVecs(3)._2.map(_ * 1.0001 + 1e-6)),  // near-identical to vec 3
-      (102L, randVec()))                                // fresh random: no 0.95-dup
-    input.addData(newBatch.take(2): _*)
-    q.processAllAvailable()
-    input.addData(newBatch.drop(2): _*) // stream-static stays stateless
-    q.processAllAvailable()
-    q.stop()
-    val alerts = spark.table("embdup_out")
-      .select("vec_id", "old_id", "cosine").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-
-    // exact-cosine precision: every alert really clears the threshold
-    def cos(a: Seq[Double], b: Seq[Double]): Double = {
-      val d = a.zip(b).map { case (x, y) => x * y }.sum
-      d / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
-    }
-    val byId = (corpusVecs ++ newBatch.map(t => (t._1, t._2))).toMap
-    alerts.foreach { case (id, old, c) =>
-      assert(c >= 0.95 && math.abs(cos(byId(id), byId(old)) - c) < 1e-9,
-        s"alert ($id,$old,$c)")
-    }
-    // the planted copies must alert against their source vectors
-    // (identical vectors share every bucket; the scaled copy's sign bits
-    // are unchanged by positive scaling + epsilon at this seed)
-    assert(alerts.exists(a => a._1 == 100L && a._2 == 0L))
-    assert(alerts.exists(a => a._1 == 101L && a._2 == 3L))
-    // the fresh random vector has no 0.95-cosine neighbor in 40 gaussians
-    assert(!alerts.exists(_._1 == 102L))
-
-    // streaming == batch: the same operator over the same rows as a
-    // batch frame yields the same alert set
-    val batchAlerts = StreamingOps.embNearDupAlerts(
-        newBatch.toDF("vec_id", "embedding"), corpusBuckets,
-        dim = dim, threshold = 0.95, bits = 6)
-      .select("vec_id", "old_id", "cosine").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(alerts.toSet === batchAlerts.toSet)
-  }
-
   test("streaming contamination alerts: stream-static join matches batch decontam") {
     implicit val sqlCtx = spark.sqlContext
     val evalDocs = Seq(

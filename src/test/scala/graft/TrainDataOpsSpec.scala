@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Decontam, Sampling, TextAnalysis, VectorSearch}
+import graft.ops.{Decontam, Sampling, TextAnalysis}
 
 /** Training-data pipeline additions: n-gram decontamination, repetition
-  * signals, token-budget sampling, int8 quantization. Each op is pinned
+  * signals, token-budget sampling. Each op is pinned
   * against a naive in-memory re-derivation. */
 class TrainDataOpsSpec extends SparkSpec {
 
@@ -627,6 +627,23 @@ class TrainDataOpsSpec extends SparkSpec {
     }
   }
 
+  test("graft_gram_hashes rejects a NULL or non-integer k with the builder's error") {
+    graft.functions.TextFunctions.register(spark)
+    def builderError(k: String): String = {
+      val e = intercept[Throwable] {
+        spark.sql(s"SELECT graft_gram_hashes('a b c d', $k, true, false)")
+          .collect()
+      }
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case iae: IllegalArgumentException => iae.getMessage }
+        .getOrElse(fail(s"k = $k: no IllegalArgumentException in $e"))
+    }
+    assert(builderError("NULL") ===
+      "graft_gram_hashes k must be a non-null int literal, got null")
+    assert(builderError("3.0") ===
+      "graft_gram_hashes k must be a non-null int literal, got 3.0")
+  }
+
   test("tokenBudgetSample: greedy fill in hash order; deterministic under repartition") {
     val docs = (0L until 200L).map(i => (i, s"s${i % 3}", 100L + i % 7))
       .toDF("doc_id", "stratum", "n_tokens")
@@ -707,149 +724,6 @@ class TrainDataOpsSpec extends SparkSpec {
     assert(got(11L)._2 >= 1L, "one-word edit must hit the LSH index")
     assert(got(11L)._3 === 0)
     assert(got(12L) === ((0, 0L, 1)), "novel doc must be admitted")
-  }
-
-  test("hashedTfVectors: md5 buckets + unit norm match a naive model; wordless docs drop") {
-    graft.functions.GraftFunctions.register(spark)
-    val docsSeq = Seq(
-      (1L, "Alpha beta beta GAMMA gamma gamma"),
-      (2L, "alpha alpha delta-epsilon 42"), // '-' and digits split words
-      (3L, "12345 !!!"),                    // no [a-z] words at all
-      (4L, "zeta"))
-    val out = TextAnalysis.hashedTfVectors(
-        docsSeq.toDF("doc_id", "text"), "doc_id", "text", dim = 16)
-      .collect().map(r => r.getLong(0) ->
-        (r.getSeq[Double](1).toArray, r.getSeq[Double](2).toArray)).toMap
-    assert(!out.contains(3L), "a doc with no words must drop")
-    def bucket(word: String): Int = {
-      val d = java.security.MessageDigest.getInstance("MD5")
-        .digest(word.getBytes("UTF-8"))
-      val hex = d.take(4).map(b => f"${b & 0xff}%02x").mkString
-      (java.lang.Long.parseLong(hex, 16) % 16).toInt
-    }
-    def naive(words: Seq[String]): Array[Double] = {
-      val v = new Array[Double](16)
-      words.foreach(w => v(bucket(w)) += 1.0)
-      v
-    }
-    val expect1 = naive(Seq("alpha", "beta", "beta", "gamma", "gamma", "gamma"))
-    val expect2 = naive(Seq("alpha", "alpha", "delta", "epsilon"))
-    assert(out(1L)._1.toSeq === expect1.toSeq, "doc 1 raw counts")
-    assert(out(2L)._1.toSeq === expect2.toSeq, "doc 2 raw counts")
-    // e is v / sqrt(v·v) computed with the same fold the engine uses
-    val n1 = math.sqrt(expect1.map(x => x * x).sum)
-    assert(out(1L)._2.toSeq === expect1.map(_ / n1).toSeq, "doc 1 unit vector")
-    assert(math.abs(out(4L)._2.map(x => x * x).sum - 1.0) < 1e-12,
-      "single-word doc must normalize to a unit axis vector")
-  }
-
-  test("topic clustering: disjoint vocabularies separate under spherical k-means") {
-    graft.functions.GraftFunctions.register(spark)
-    // two topics with disjoint word pools; 30 docs each, varying lengths —
-    // the hashing trick + spherical k-means must split them exactly
-    val poolA = Seq("kernel", "tensor", "gradient", "epoch", "batch")
-    val poolB = Seq("sonata", "violin", "tempo", "legato", "octave")
-    val docsSeq = (0 until 60).map { i =>
-      val pool = if (i % 2 == 0) poolA else poolB
-      val words = (0 to i % 7 + 2).map(j => pool((i + j) % pool.size))
-      (i.toLong, words.mkString(" "))
-    }
-    val feats = TextAnalysis.hashedTfVectors(
-      docsSeq.toDF("doc_id", "text"), "doc_id", "text", dim = 32)
-    val assigned = VectorSearch.clusterAssign(feats, "doc_id", "e", k = 2)
-      .select("doc_id", "cid").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val cidsA = (0 until 60 by 2).map(i => assigned(i.toLong)).toSet
-    val cidsB = (1 until 60 by 2).map(i => assigned(i.toLong)).toSet
-    assert(cidsA.size == 1 && cidsB.size == 1 && cidsA != cidsB,
-      s"topics must separate: A=$cidsA B=$cidsB")
-  }
-
-  test("quantizeInt8: values bounded, reconstruction within half-step, exact integer dots") {
-    graft.functions.GraftFunctions.register(spark)
-    val rng = new scala.util.Random(7)
-    val vecs = (0 until 100).map(i =>
-      (i.toLong, Seq.fill(16)(rng.nextGaussian())))
-    val df = vecs.toDF("vec_id", "e").cache()
-
-    val q = VectorSearch.quantizeInt8(df, "e")
-      .select("vec_id", "e", "q", "scale").collect()
-    q.foreach { r =>
-      val e = r.getSeq[Double](1)
-      val qi = r.getSeq[Int](2)
-      val s = r.getDouble(3)
-      assert(qi.forall(v => v >= -127 && v <= 127))
-      // reconstruction error ≤ scale/2 per element
-      e.zip(qi).foreach { case (x, v) =>
-        assert(math.abs(x - v * s) <= s / 2 + 1e-12)
-      }
-      // naive quantization matches
-      val maxAbs = e.map(math.abs).max
-      val es = maxAbs / 127.0
-      assert(math.abs(s - es) < 1e-15)
-      e.zip(qi).foreach { case (x, v) =>
-        assert(v === math.round(x / es).toInt)
-      }
-    }
-
-    // quantized top-k: exact integer dot + high recall vs float baseline
-    val queries = df.filter(col("vec_id") < 5)
-    val topQ = VectorSearch.quantizedTopK(df, queries, "vec_id", "e", k = 10)
-    val rows = topQ.collect()
-    val qmap = q.map(r => r.getLong(0) ->
-      (r.getSeq[Int](2).toArray, r.getDouble(3))).toMap
-    rows.take(20).foreach { r =>
-      val (qa, _) = qmap(r.getAs[Long]("query_id"))
-      val (qb, _) = qmap(r.getAs[Long]("neighbor_id"))
-      val naive = qa.zip(qb).map { case (x, y) => x.toLong * y }.sum
-      assert(r.getAs[Long]("dot_q") === naive)
-    }
-    val exact = VectorSearch.bruteForceCosine(df, queries, "vec_id", "e", 10)
-      .select("query_id", "neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = rows.map(r =>
-      (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    val recall = (exact & approx).size.toDouble / exact.size
-    assert(recall >= 0.9, s"int8 recall $recall too low")
-  }
-
-  test("ivfCosineInt8: high recall on clustered vectors, int8 resident index") {
-    graft.functions.GraftFunctions.register(spark)
-    val rng = new scala.util.Random(11)
-    val centers = Array.fill(10)(Array.fill(16)(rng.nextGaussian() * 5))
-    val vecs = (0 until 300).map { i =>
-      val c = centers(i % 10)
-      (i.toLong, c.map(x => x + rng.nextGaussian() * 0.3).toSeq)
-    }
-    val df = vecs.toDF("vec_id", "e").cache()
-    val queries = df.filter(col("vec_id") < 10)
-    // reference = int8 BRUTE FORCE: isolates the IVF cell routing under
-    // test from inherent int8 scoring noise (in-cluster neighbors here
-    // are near-ties with ~1e-3 cosine margins, so int8 legitimately
-    // reorders the float top-10; on the real corpus, where margins are
-    // larger, int8 vs float recall@10 is 1.0 — see quantizeInt8 test)
-    val int8Exact = VectorSearch.quantizedTopK(df, queries, "vec_id", "e", 10)
-      .select("query_id", "neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf8 = VectorSearch.ivfCosineInt8(df, queries, "vec_id", "e",
-      k = 10, nCells = 16, nprobe = 3)
-    val rows = ivf8.collect()
-    val approx = rows.map(r =>
-      (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    val recall = (int8Exact & approx).size.toDouble / int8Exact.size
-    assert(recall >= 0.9, s"ivf-int8 recall $recall vs int8 brute force too low")
-    // and the cells must still land in the right neighborhoods: most of
-    // the float top-10 survives routing + int8 scoring
-    val floatExact = VectorSearch.bruteForceCosine(df, queries, "vec_id", "e", 10)
-      .select("query_id", "neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val floatRecall = (floatExact & approx).size.toDouble / floatExact.size
-    assert(floatRecall >= 0.5, s"ivf-int8 float-recall $floatRecall too low")
-    // integer dots really are integers of plausible magnitude (|q|≤127,
-    // dim 16 → |dot| ≤ 16·127²)
-    rows.foreach { r =>
-      assert(math.abs(r.getAs[Long]("dot_q")) <= 16L * 127 * 127)
-    }
   }
 
   test("postings: df counts docs once, stop-list cap, topK cut, sorted") {
