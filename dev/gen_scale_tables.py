@@ -3,8 +3,8 @@
 (sf1-equivalent volume) for graft.ScaleRegistrySpec. Keys are shifted per
 replica so FK joins stay consistent (each replica is a self-contained
 shard of the keyspace); dimension tables (nation/region) copy as-is.
-Documents get a distinct per-replica suffix (near-duplicates across
-replicas — the hard dedup path). NOT part of the shipped engine
+Documents get a distinct per-replica suffix (see the documents block
+below). NOT part of the shipped engine
 (driver-side python).
 
 Usage: python3 dev/gen_scale_tables.py [K] [OUT]
@@ -65,17 +65,12 @@ gen("lineitem",
 gen("events",
     "event_id + {k} * CAST(10000000 AS BIGINT) AS event_id, ts, "
     "user_id + {k} * CAST(1000000 AS BIGINT) AS user_id, event_type, value, props")
-# Documents: a MIXED replicated/unique split. 80% of each replica keeps
-# the near-duplicate form (text + per-replica suffix — the hard dedup
-# path); 20% ((doc_id + k) % 5 = 4) gets fully UNIQUE synthetic text (24
-# four-hex-char words from three salted md5s of (doc_id, k, j)). The
-# unique slice passes every clean-pipeline gate — >=20 tokens, zero
-# stopwords, top2 bigram frac ~0.076 < 0.18, its own dedup component,
-# no 8-gram shared with any eval doc — so the pipeline KEEPS a nonzero
-# set at any K and the pipeline_idempotent scale invariant is
-# non-vacuous (round-9 verdict: pure replication left 0 keeps at 100x,
-# because doc_id + k*1e6 cycles all residues mod 7, putting ~1/7 of
-# every replica family into the eval set and contaminating the rest).
+# Documents: a MIXED replicated/unique split, read by doc_text_splitter
+# (the chunker's split oracle). 80% of each replica keeps the original
+# text plus a per-replica suffix; 20% ((doc_id + k) % 5 = 4) gets fully
+# UNIQUE synthetic text (24 four-hex-char words from three salted md5s
+# of (doc_id, k, j)), so the splitter sees fresh word sequences at
+# every K rather than only suffixed copies.
 UNIQ = ("array_to_string(flatten(list_transform(range(3), j -> "
         "list_transform(range(8), i -> substr(md5(concat(doc_id, '|{k}|', j)), "
         "CAST(i*4+1 AS INTEGER), 4)))), ' ')")

@@ -33,7 +33,6 @@ object Bench {
       } catch { case e: Throwable => Some(describe(e)) }
 
     val names = SparkEntry.queries.keys.toSeq.sorted
-    graft.queries.BpeQueries.evictTrainMemo()
     names.foreach { n => exec(n); reset(spark) } // warm-up
     // Machine-load calibration: a FIXED synthetic workload (registry- and
     // data-independent, codegen'd, all cores) timed alongside the
@@ -52,45 +51,20 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     calibrate() // warm-up
-    // The BPE training memo is evicted per PASS, not per query: the two
-    // full-dict BPE queries share one identical 64-merge training (the
-    // clean-pipeline sharing pattern). The shared training is billed to
-    // its OWN explicit line item (`bpe_train`, timed right after the
-    // eviction) rather than to whichever consumer happens to sort first
-    // — order-independent accounting, visible in bench_results.json, and
-    // adding a BPE query can never silently shift the billing. Everything
-    // else still pays its full standalone cost via reset(spark) between
-    // queries.
     // Each entry is Right(seconds) or Left(failure message).
-    def timedPass(): (Map[String, Either[String, Double]], Double) = {
-      graft.queries.BpeQueries.evictTrainMemo()
-      val bt0 = System.nanoTime()
-      // on failure the consumers bill their own training run
-      val bpe = try {
-        graft.queries.BpeQueries.trainedFor(spark, sfDir,
-          graft.queries.BpeQueries.NumMerges, graft.ops.Bpe.DefaultDictCap)
-          ._2.queryExecution.toRdd.count()
-        Right((System.nanoTime() - bt0) / 1e9)
-      } catch {
-        case scala.util.control.NonFatal(e) => Left(describe(e))
-      }
-      reset(spark) // the memoized dict is localCheckpoint'd; it survives this
+    def timedPass(): (Map[String, Either[String, Double]], Double) =
       (names.map { name =>
-      val t0 = System.nanoTime()
-      val err = exec(name)
-      val dt = (System.nanoTime() - t0) / 1e9
-      reset(spark)
-      name -> err.toLeft(dt)
-    }.toMap + ("bpe_train" -> bpe), calibrate())
-    }
+        val t0 = System.nanoTime()
+        val err = exec(name)
+        val dt = (System.nanoTime() - t0) / 1e9
+        reset(spark)
+        name -> err.toLeft(dt)
+      }.toMap, calibrate())
     // several timed passes, report the per-query minimum — local-mode wall
     // times on shared hardware are noisy and min is the robust statistic
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     val all = (1 to math.max(passes, 1)).map(_ => timedPass())
-    // `bpe_train` is the explicit shared-training line item from
-    // timedPass — reported like any query so vs_prev gates cover it
-    val reportNames = names :+ "bpe_train"
-    val runs = reportNames.map(n => n -> all.map(_._1(n)))
+    val runs = names.map(n => n -> all.map(_._1(n)))
     val results = runs.collect { case (n, rs) if rs.forall(_.isRight) =>
       n -> rs.flatMap(_.toOption).min }
     val failed = runs.flatMap { case (n, rs) =>

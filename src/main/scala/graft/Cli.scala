@@ -69,13 +69,6 @@ object Cli {
         case "chunk" => chunk(ctx, rest.tail.toSeq)
         case "forced-recovery" => forcedRecovery(ctx, rest.tail.toSeq)
         case "detect" => detect(ctx)
-        case "clean" => clean(ctx, rest.tail.toSeq)
-        case "split" => splitCmd(ctx, rest.tail.toSeq)
-        case "pack" => pack(ctx, rest.tail.toSeq)
-        case "sample" => sample(ctx, rest.tail.toSeq)
-        case "redact" => redact(ctx, rest.tail.toSeq)
-        case "score" => score(ctx, rest.tail.toSeq)
-        case "shard" => shard(ctx, rest.tail.toSeq)
         case "compact" =>
           val (b, a) = graft.sources.Store.compactEvents(
             ctx.spark, ctx.path("events"))
@@ -105,44 +98,6 @@ object Cli {
       |                             CodeCoverage whose Comment contains S
       |                             (default "forced recovery", case-insensitive)
       |  detect                     run the detector battery
-      |  clean <docs.parquet> [--eval <bench.parquet>] [--eval-mod N]
-      |                             training-corpus cleaning pipeline (quality +
-      |                             repetition + near-dup CC + decontamination);
-      |                             writes clean_decisions / clean_docs (kept) /
-      |                             clean_report. Eval set = the external
-      |                             benchmark parquet, or the doc_id %% N = 0
-      |                             holdout (default N=7)
-      |  split <docs.parquet>       deterministic salted-md5 train/val/test
-      |                             split; writes doc_splits + prints stats
-      |  pack <docs.parquet> [--budget N] [--buckets N] [--examples]
-      |                             greedy sequence packing into token-budget
-      |                             bins (default 512 tokens, 8 bucket streams);
-      |                             writes packed; --examples additionally
-      |                             materializes packed_examples (one row per
-      |                             bin with ordered members + concatenated
-      |                             text)
-      |  sample <docs.parquet> [--stratum COL] [--budget N]
-      |         [--budgets k=v,k=v,...] [--default-budget N]
-      |                             deterministic token-budget sampling per
-      |                             stratum (default lang, 2000 tokens) or a
-      |                             weighted per-stratum mix via --budgets;
-      |                             writes doc_sample
-      |  redact <docs.parquet>      PII-style scrub (emails, IPv4, 7+-digit
-      |                             runs) of the text column; writes
-      |                             doc_redacted (scrubbed text + per-pattern
-      |                             counts) and prints per-source PII density
-      |  score <docs.parquet> [--vocab V] [--bigram]
-      |                             LM quality scores (avg -log2 p per
-      |                             token, corpus-fit top-V model, default
-      |                             V=1000); writes doc_lm_scores and
-      |                             prints the per-source NLL distribution.
-      |                             --bigram scores order-2 conditionals
-      |                             instead (writes doc_lm_scores2)
-      |  shard <docs.parquet> [--shards N]
-      |                             deterministic md5-shuffle shard
-      |                             addressing (default 8 shards); writes
-      |                             doc_shards partitioned by shard, rows
-      |                             in permutation order inside each file
       |  compact                    rewrite the events table into one ts-sorted
       |                             file per date partition (merges the small
       |                             files streaming ingest appends)
@@ -313,231 +268,19 @@ object Cli {
     TimelineBuilder.build(events).show(truncate = false)
   }
 
-  /** Training-corpus cleaning (quality + repetition + near-dup CC +
-    * decontam, one composed plan — ops.CleanPipeline). The eval
-    * (benchmark) set is either an external parquet (--eval) or the
-    * doc_id % N = 0 holdout of the corpus itself (--eval-mod, default 7
-    * — the registered doc_clean_pipeline cut). */
-  private def clean(ctx: Ctx, args: Seq[String]): Unit = {
-    val evalPath = opt(args, "--eval")
-    val evalMod = opt(args, "--eval-mod").map(_.toInt).getOrElse(7)
-    val path = positionals(args, Set("--eval", "--eval-mod")).headOption
-      .getOrElse(sys.error("clean requires a documents parquet path"))
-    val docs = ctx.spark.read.parquet(path)
-    val (train, eval) = evalPath match {
-      case Some(p) => (docs, ctx.spark.read.parquet(p))
-      case None => (docs.filter(col("doc_id") % evalMod =!= 0),
-        docs.filter(col("doc_id") % evalMod === 0))
-    }
-    val decisions = graft.ops.CleanPipeline.decisions(train, eval)
-    ctx.write(decisions, "clean_decisions")
-    // kept corpus: the full original rows of every doc that passed all
-    // gates (broadcast-free equi-join on doc_id; both sides big → SMJ)
-    val decided = ctx.read("clean_decisions")
-    ctx.write(
-      train.join(decided.filter(col("keep") === 1).select("doc_id"), "doc_id"),
-      "clean_docs")
-    val report = graft.ops.CleanPipeline.report(decided).orderBy("source")
-    ctx.write(report, "clean_report")
-    println(s"cleaned ${ctx.read("clean_docs").count()} of ${train.count()} docs kept")
-    report.show(truncate = false)
-    // decisions() caches the train projection for its four gates and the
-    // caller owns the unpersist — drop it now that every output is
-    // written, so a long-lived CLI/REPL session doesn't retain the corpus
-    train.unpersist()
-  }
-
-  /** Deterministic salted-md5 train/val/test split (13/2/1 of 16). */
-  private def splitCmd(ctx: Ctx, args: Seq[String]): Unit = {
-    val path = positionals(args, Set.empty).headOption
-      .getOrElse(sys.error("split requires a documents parquet path"))
-    val split = graft.ops.Sampling.deterministicSplit(
-      ctx.spark.read.parquet(path))
-    ctx.write(split.select("doc_id", "h", "split"), "doc_splits")
-    println("wrote doc_splits")
-    ctx.read("doc_splits").groupBy("split")
-      .agg(count(lit(1)).as("n_docs")).orderBy("split").show()
-  }
-
-  /** Greedy sequence packing into (bucket, bin) token-budget examples;
-    * --examples additionally materializes one row per bin with the
-    * ordered member list and the concatenated text the tokenizer sees. */
-  private def pack(ctx: Ctx, args: Seq[String]): Unit = {
-    val budget = opt(args, "--budget").map(_.toLong).getOrElse(512L)
-    val buckets = opt(args, "--buckets").map(_.toInt).getOrElse(8)
-    val examples = args.contains("--examples")
-    val path = positionals(args, Set("--budget", "--buckets"),
-      boolFlags = Set("--examples")).headOption
-      .getOrElse(sys.error("pack requires a documents parquet path"))
-    val docs = ctx.spark.read.parquet(path)
-      .withColumn("n_tokens",
-        size(expr("regexp_extract_all(text, '\\\\S+', 0)")))
-    val packed = graft.ops.Packing.packGreedy(docs,
-      idCol = "doc_id", tokensCol = "n_tokens",
-      budget = budget, buckets = buckets)
-    ctx.write(packed, "packed")
-    if (examples) {
-      ctx.write(ctx.read("packed")
-        .join(docs.select(col("doc_id"), col("text"), col("n_tokens")),
-          "doc_id")
-        .groupBy("bucket", "bin")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).cast("long").as("total_tokens"),
-          concat_ws("|", transform(
-            array_sort(collect_list(col("doc_id"))),
-            x => x.cast("string"))).as("doc_ids"),
-          concat_ws("\n\n", transform(
-            array_sort(collect_list(struct(col("doc_id"), col("text")))),
-            s => s.getField("text"))).as("example_text")),
-        "packed_examples")
-      println("wrote packed_examples")
-    }
-    val bins = ctx.read("packed")
-    println(s"packed ${bins.count()} docs into " +
-      s"${bins.select("bucket", "bin").distinct().count()} bins " +
-      s"(budget $budget, $buckets bucket streams)")
-    bins.groupBy("bucket").agg(max("bin").as("last_bin"))
-      .orderBy("bucket").show()
-  }
-
-  /** Deterministic token-budget sampling (uniform per-stratum budget) or
-    * a weighted per-stratum mix (--budgets lang=N,...). Token counts are
-    * whitespace-token counts over `text` (the registered queries'
-    * derivation). */
-  private def sample(ctx: Ctx, args: Seq[String]): Unit = {
-    val stratum = opt(args, "--stratum").getOrElse("lang")
-    val budget = opt(args, "--budget").map(_.toLong).getOrElse(2000L)
-    val dflt = opt(args, "--default-budget").map(_.toLong).getOrElse(0L)
-    val budgets = opt(args, "--budgets").map(_.split(",").map { kv =>
-      kv.split("=") match {
-        case Array(k, v) => k -> v.toLong
-        case _ => sys.error(s"--budgets expects k=v pairs, got '$kv'")
-      }
-    }.toMap)
-    val path = positionals(args,
-      Set("--stratum", "--budget", "--budgets", "--default-budget")).headOption
-      .getOrElse(sys.error("sample requires a documents parquet path"))
-    val docs = ctx.spark.read.parquet(path)
-      .withColumn("n_tokens",
-        size(expr("regexp_extract_all(text, '\\\\S+', 0)")).cast("long"))
-    val sampled = budgets match {
-      case Some(b) => graft.ops.Sampling.tokenBudgetMix(
-        docs, stratum, "n_tokens", b, defaultBudget = dflt)
-      case None => graft.ops.Sampling.tokenBudgetSample(
-        docs, stratum, "n_tokens", budget)
-    }
-    ctx.write(sampled, "doc_sample")
-    println("wrote doc_sample")
-    ctx.read("doc_sample").groupBy(stratum)
-      .agg(count(lit(1)).as("n_docs"), sum("kept").as("n_kept"),
-        sum(when(col("kept") === 1, col("n_tokens"))).as("kept_tokens"))
-      .orderBy(stratum).show()
-  }
-
-  /** Deterministic shuffle-shard materialization: addresses every doc as
-    * (shard, pos) under the reproducible md5 permutation, then writes
-    * the corpus partitioned by shard with rows in pos order inside each
-    * file — the layout a training run streams directly. The write is
-    * repartition(shard) + sortWithinPartitions(pos): the rank window's
-    * sort IS the file sort, paid once. */
-  private def shard(ctx: Ctx, args: Seq[String]): Unit = {
-    val n = opt(args, "--shards").map(_.toInt).getOrElse(8)
-    val path = positionals(args, Set("--shards")).headOption
-      .getOrElse(sys.error("shard requires a documents parquet path"))
-    val sharded = graft.ops.Sampling.shuffleShards(
-      ctx.spark.read.parquet(path), nShards = n)
-    sharded
-      .repartition(n, col("shard"))
-      .sortWithinPartitions("shard", "pos")
-      .write.mode("overwrite").partitionBy("shard")
-      .parquet(ctx.path("doc_shards"))
-    println(s"wrote doc_shards ($n shards)")
-    ctx.read("doc_shards").groupBy("shard")
-      .agg(count(lit(1)).as("n_docs"), max("pos").as("last_pos"))
-      .orderBy("shard").show()
-  }
-
-  /** Unigram-LM quality scoring (the perplexity filter): fit the
-    * corpus-level smoothed top-V unigram model, score every doc's
-    * average per-token -log2 p, write doc_lm_scores, and print the
-    * per-source score distribution (a source whose NLL jumps is
-    * degenerate text or the wrong language). */
-  private def score(ctx: Ctx, args: Seq[String]): Unit = {
-    val vocab = opt(args, "--vocab").map(_.toInt).getOrElse(1000)
-    val bigram = args.contains("--bigram")
-    val path = positionals(args, Set("--vocab"),
-      boolFlags = Set("--bigram")).headOption
-      .getOrElse(sys.error("score requires a documents parquet path"))
-    val docs = ctx.spark.read.parquet(path)
-    if (bigram) {
-      val scored = graft.ops.TextAnalysis.bigramNll(docs, vocabSize = vocab)
-      ctx.write(scored, "doc_lm_scores2")
-      // bigramNll cached its exploded pair frame (caller-owned, per its
-      // contract) — release it now that the scores are materialized,
-      // mirroring the clean subcommand's train.unpersist(); the summary
-      // below re-reads the written table, not the cache
-      ctx.spark.catalog.clearCache()
-      println("wrote doc_lm_scores2")
-      ctx.read("doc_lm_scores2")
-        .join(docs.select("doc_id", "source"), "doc_id")
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          round(avg("avg_nll_bits"), 3).as("mean_nll2_bits"),
-          round(avg("backoff_rate"), 4).as("mean_backoff_rate"))
-        .orderBy("source").show()
-    } else {
-      val scored = graft.ops.TextAnalysis.unigramNll(docs, vocabSize = vocab)
-      ctx.write(scored, "doc_lm_scores")
-      println("wrote doc_lm_scores")
-      ctx.read("doc_lm_scores")
-        .join(docs.select("doc_id", "source"), "doc_id")
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          round(avg("avg_nll_bits"), 3).as("mean_nll_bits"),
-          round(avg("oov_rate"), 4).as("mean_oov_rate"))
-        .orderBy("source").show()
-    }
-  }
-
-  /** PII-style scrub of the corpus text: replaces the original text with
-    * the redacted form, keeps per-pattern counts as audit columns, and
-    * prints PII density per source (the upstream-corruption alarm). */
-  private def redact(ctx: Ctx, args: Seq[String]): Unit = {
-    val path = positionals(args, Set.empty).headOption
-      .getOrElse(sys.error("redact requires a documents parquet path"))
-    val docs = ctx.spark.read.parquet(path)
-    val out = docs
-      .withColumn("__c", graft.ops.TextAnalysis.redactCounts(col("text")))
-      .withColumn("text", graft.ops.TextAnalysis.redact(col("text")))
-      .withColumn("n_email", col("__c.n_email"))
-      .withColumn("n_ip", col("__c.n_ip"))
-      .withColumn("n_num", col("__c.n_num"))
-      .drop("__c")
-    ctx.write(out, "doc_redacted")
-    println("wrote doc_redacted")
-    ctx.read("doc_redacted").groupBy("source")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_email") + col("n_ip") + col("n_num")).as("pii_hits"))
-      .orderBy("source").show()
-  }
-
   private def opt(args: Seq[String], flag: String): Option[String] = {
     val i = args.indexOf(flag)
     if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
   }
 
-  /** Strip `flags` (value-taking: skip flag + value) and `boolFlags`
-    * (zero-argument: skip flag alone) from the argument list; what
-    * remains are the positionals. A boolean flag passed in the
-    * value-taking set would swallow the following positional — keep the
-    * two sets honest per subcommand. */
-  private def positionals(args: Seq[String], flags: Set[String],
-      boolFlags: Set[String] = Set.empty): Seq[String] = {
+  /** Strip the value-taking `flags` (skip flag + value) from the
+    * argument list; what remains are the positionals. */
+  private def positionals(args: Seq[String],
+      flags: Set[String]): Seq[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var i = 0
     while (i < args.length) {
       if (flags.contains(args(i))) i += 2
-      else if (boolFlags.contains(args(i))) i += 1
       else { out += args(i); i += 1 }
     }
     out.toSeq

@@ -15,11 +15,11 @@ import graft.queries.Registry
   *
   * local[N] shares one JVM end to end, so it never exercises: closure and
   * task serialization across processes, codegen compiled on a non-driver
-  * classloader (EwmaExpression, RollingHash), cross-JVM
-  * serialize/merge of custom TypedImperativeAggregate buffers (HllAgg,
-  * MinHashAgg), or remote shuffle fetches. This main runs all of them for
-  * real; equality with local mode is the assertion that the engine's
-  * answers don't depend on where tasks physically run.
+  * classloader (EwmaExpression), cross-JVM serialize/merge of custom
+  * TypedImperativeAggregate buffers (HllAgg, PctSampleAgg), or remote
+  * shuffle fetches. This main runs all of them for real; equality with
+  * local mode is the assertion that the engine's answers don't depend on
+  * where tasks physically run.
   *
   * Run as a separate JVM (the test session owns the in-process
   * SparkContext slot): LocalClusterSpec spawns `java -cp <same classpath>
@@ -29,34 +29,22 @@ object ClusterSmoke {
 
   /** One query per plan family (the round-6 verdict's list, plus the
     * native-codegen expressions): classic shuffle join, HllAgg merge,
-    * Ewma window codegen, boundary-carried scan, MinHashAgg + banded
-    * join, RollingHash codegen, the partitioned-store trace analytics
-    * path — plus the executor-JVM
-    * service paths: the custom as-of join, and the streaming gate's
-    * state store across executors. */
+    * Ewma window codegen, boundary-carried scan, the partitioned-store
+    * trace analytics path — plus the executor-JVM service paths: the
+    * custom as-of join, and the streaming gate's state store across
+    * executors. */
   val Slice: Seq[String] = Seq(
     "q3_revenue_by_nation",
     "ev_hll_users",
     "ev_ewma_by_user",
     "ev_value_drops",
-    "doc_minhash_lsh",
-    "doc_fingerprints",
     "trace_rollups_60s",
     "ev_asof_last_signup",
     "ev_streaming_gate",
-    // round-6 addition: the end-to-end cleaning pipeline (broadcast
-    // decontam probe + CC star-loop + repetition min_by + quality gate
-    // composed across executor JVMs)
-    "doc_clean_pipeline",
-    // round-7 additions: the sharded two-level sampler (shard-local
-    // windows + broadcast offset join across executors) and the
-    // streaming clean gate's batch-path plan (key-unique probes + the
-    // 1-row eval-array cross join + the per-row top-gram fold)
-    "doc_budget_sample",
-    "doc_clean_stream_gate",
-    // exact percentile is a TypedImperativeAggregate — its buffer merge
-    // across executor JVMs is the point of this entry
-    "doc_gate_calibration")
+    // PctSampleAgg is a TypedImperativeAggregate — its buffer merge
+    // across executor JVMs is the point of this entry (the same
+    // aggregate DerivedTables' p95 baselines use)
+    "ev_percentiles_approx")
 
   /** JDK-17 module opens Spark needs outside spark-submit — mirrored from
     * build.sbt's javaOptions; reused for the spawned driver AND the
@@ -122,12 +110,11 @@ object ClusterSmoke {
       spark.catalog.clearCache()
     }
 
-    // Closed-form probes for the two ops whose registered queries take
-    // bounded non-distributed paths at fixture scale: the star-loop CC
-    // (smallGraphEdges=0 forces the distributed loop — its localCheckpoint
-    // blocks live on EXECUTOR block managers here, a placement local mode
-    // cannot test) and the sorted-group packer (flatMapSortedGroups
-    // closure + sorted shuffle on executor JVMs).
+    // Closed-form probes for two ops no registered query reaches: the
+    // star-loop CC (smallGraphEdges=0 forces the distributed loop — its
+    // localCheckpoint blocks live on EXECUTOR block managers here, a
+    // placement local mode cannot test) and the sorted-group packer
+    // (flatMapSortedGroups closure + sorted shuffle on executor JVMs).
     import org.apache.spark.sql.functions._
     val n = 20000L
     val k = 97L

@@ -55,8 +55,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("graft_pct_sample"), graft.functions.PctSampleAgg.builder))
     ext.injectFunction((FunctionIdentifier("graft_kmv"),
       info("graft_kmv"), graft.functions.KmvAgg.builder))
-    ext.injectFunction((FunctionIdentifier("graft_any_gram_in_set"),
-      info("graft_any_gram_in_set"), graft.functions.AnyGramInSet.builder))
     graft.functions.PyNum.Names.foreach { case (mode, name) =>
       ext.injectFunction((FunctionIdentifier(name),
         info(name), graft.functions.PyNum.builder(mode)))

@@ -17,10 +17,9 @@ object GraftSession {
     *   - one tail op (append, re-read, battery, gate): 104; its
     *     maintenance pass: 278 more
     *   - the sf0.1 `Bench` warm-up: 1,651, measured on the 184-query
-    *     registry (since cut to 152 by dropping the multimodal and
-    *     embedding/ANN families),
-    *     with the 33 queries whose reference fixtures were missing failing
-    *     early
+    *     registry (since cut to 96 by dropping the multimodal,
+    *     embedding/ANN and LLM-training-data families), with the 33
+    *     queries whose reference fixtures were missing failing early
     * A JVM runs either a pipeline session or the Bench, so the Bench pass
     * is the largest working set; 4096 leaves room for the queries that
     * failed there and for the cache's per-segment eviction. At 100, every
@@ -57,6 +56,12 @@ object GraftSession {
       .config(CodegenReuse)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // ScanOps' guarded small-input fast path runs an unpartitioned window
+    // on purpose; WindowExec's per-plan warning about it (hundreds per
+    // pipeline op) would bury every other warning.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     spark
   }
 }

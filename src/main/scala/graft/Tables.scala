@@ -6,10 +6,6 @@ import org.apache.spark.sql.types.LongType
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md). */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings")
-
   /** The events table carries TIMESTAMP(NANOS) which Spark 4 refuses to
     * read natively; sessions set spark.sql.legacy.parquet.nanosAsLong and
     * we rebuild a microsecond timestamp here (truncation — same behavior

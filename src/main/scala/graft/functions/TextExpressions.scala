@@ -163,8 +163,8 @@ object SimHash {
 }
 
 /** Native codegen form of [[SimHash.simhash]] — the former ScalaUDF
-  * blocked whole-stage codegen of every projection it appeared in
-  * (doc_simhash_pairs' signature scan). Same bits, same determinism. */
+  * blocked whole-stage codegen of every projection it appeared in.
+  * Same bits, same determinism. */
 case class SimHash32(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType

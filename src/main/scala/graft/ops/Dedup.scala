@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
 /** Deduplication library for document corpora: exact, normalized
   * fingerprint, word-shingle Jaccard, and MinHash-LSH. All hashing is
   * md5/xxhash based — deterministic under any partitioning and
-  * reproducible across engines. The registered doc_* queries are thin
-  * wrappers over these.
+  * reproducible across engines.
   *
   * Caching contract: jaccardPairs / minhashCandidates / nearDedup cache
   * the shingle frame for their internal self-joins and leave it cached
@@ -150,24 +149,10 @@ object Dedup {
     sh.join(freq, Seq("shingle"), "left_anti")
   }
 
-  /** Exact dedup: groups by content hash, keeps the minimum id as the
-    * representative. Returns (content_hash, n_docs, keep_id). */
-  def exactGroups(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    docs.groupBy(md5(col(textCol)).as("content_hash"))
-      .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("keep_id"))
-
   /** Whitespace/case-normalized content fingerprint — the single
     * definition batch and streaming dedup share. */
   def fingerprint(text: Column): Column =
     md5(lower(trim(regexp_replace(text, "\\s+", " "))))
-
-  /** Whitespace/case-normalized fingerprint groups. */
-  def fingerprintGroups(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    docs.groupBy(fingerprint(col(textCol)).as("fingerprint"))
-      .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("keep_id"),
-        max(col(idCol)).as("last_id"))
 
   /** Shared Jaccard verification: pair shingle-intersection counts +
     * per-doc sizes → jaccard. `candidates` (doc_a, doc_b) restricts the
@@ -343,8 +328,8 @@ object Dedup {
     // candidatesFrom(sh) — recomputing the signatures — and re-ran the
     // shingle explode for the sizes; sizes now come map-side off the
     // doc-level shingle arrays (the jaccardPairs move: shingles are
-    // distinct per doc, so size(array) == the exploded count). Cache
-    // ownership follows the CleanPipeline convention.
+    // distinct per doc, so size(array) == the exploded count). The
+    // caller owns the cache (the caching contract above).
     val sig = minhashSignatures(shingles(docs, idCol, textCol), hashes)
       .cache()
     val sizes = shingleArrays(docs, idCol, textCol)
@@ -545,7 +530,7 @@ object Dedup {
     * groupBy-min plus one equi-join — the DedupSpec skew probe measures
     * it). The hub's high degree is exactly the shape the star loop's
     * small-star step halves per round. Pair-level semantics
-    * (exact-Jaccard verification, doc_minhash_lsh) keep the all-pairs
+    * (exact-Jaccard verification, minhashCandidates) keep the all-pairs
     * form — candidate PAIRS are their contract; components are this
     * one's. */
   def starCandidateEdges(docs: DataFrame, idCol: String = "doc_id",
@@ -643,8 +628,7 @@ object Dedup {
     // cached (narrow: id, key, component) so the text column is read
     // once, not once per consumer (there is no ReusedExchange here: the
     // aggregate side exchanges partial-agg rows, not labeled's).
-    // Cache ownership follows the CleanPipeline convention: the caller
-    // (Verify/Bench clear all caches) unpersists when done.
+    // The caller owns the cache (the caching contract above).
     val labeled = docs
       .select(col(idCol).cast("long").as("doc_id"),
         key.getOrElse(length(col(textCol))).as("__k"))

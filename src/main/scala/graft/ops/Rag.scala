@@ -53,18 +53,17 @@ object Rag {
       embedStub(col("query_text"), dim).as("embedding"))
     bruteForceCosine(
       idx.select(col("chunk_id"), col("embedding")), q,
-      "chunk_id", "embedding", k, excludeSelf = false)
+      "chunk_id", "embedding", k)
       .withColumnRenamed("neighbor_id", "chunk_id")
       .join(idx.select(col("chunk_id"), col("chunk_content")), "chunk_id")
       .select("query_id", "chunk_id", "rank", "cosine", "chunk_content")
   }
 
-  /** Exact brute-force cosine top-k (broadcast query set).
-    * `excludeSelf` drops neighbor_id == query_id matches — right for
-    * corpus-vs-corpus dedup, wrong for external query sets whose ids
-    * merely collide with corpus ids. */
+  /** Exact brute-force cosine top-k (broadcast query set). A query id
+    * that collides with a corpus id still sees that chunk: the query set
+    * is external, so the ids are unrelated. */
   private def bruteForceCosine(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int = 10, excludeSelf: Boolean = true): DataFrame = {
+      vecCol: String, k: Int): DataFrame = {
     val c = corpus
       .withColumn("nrm", sqrt(GraftFunctions.dotProduct(col(vecCol), col(vecCol))))
     val q = queries
@@ -73,7 +72,6 @@ object Rag {
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id"))
     c.crossJoin(broadcast(q))
-      .filter(if (excludeSelf) col(idCol) =!= col("query_id") else lit(true))
       .withColumn("cosine",
         GraftFunctions.dotProduct(col("qvec"), col(vecCol)) /
           (col("qnrm") * col("nrm")))

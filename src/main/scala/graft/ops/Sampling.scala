@@ -1,115 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Deterministic corpus sampling for training-data mixes.
-  *
-  * A pre-training mix assigns each stratum (language, source domain, ...)
-  * a TOKEN budget, not a row budget. `tokenBudgetSample` fills each
-  * stratum's budget by walking its documents in salted-md5 order — a
-  * uniform random permutation that is reproducible across runs, engines
-  * and partitionings (the same property doc_train_split relies on) — and
-  * keeps every doc that STARTS within budget, so the kept set is stable
-  * under corpus growth of later-ordered docs.
-  *
-  * Scale shape — the mega-stratum problem: real pre-training corpora are
-  * dominated by one stratum (en is 50-90% of most web corpora), so a
-  * plain `Window.partitionBy(stratum)` running sum lands the WHOLE
-  * dominant stratum in one task. Instead the running sum is sharded
-  * two-level:
-  *
-  *   1. shard key  = the first hex byte of the salted hash (256 shards),
-  *      a LEADING substring of the order key — so shard-major order is
-  *      exactly the global (hash, id) order;
-  *   2. one map-side-combinable aggregate computes per-(stratum, shard)
-  *      token subtotals (≤ 256 × |strata| rows);
-  *   3. a window over that tiny frame turns subtotals into exclusive
-  *      per-shard offsets, broadcast back;
-  *   4. a (stratum, shard)-partitioned window computes the shard-local
-  *      running sum; local sum + broadcast offset == the global running
-  *      sum, bit-for-bit (token counts are longs — addition reorders
-  *      freely).
-  *
-  * The skewed key now fans out over 256 tasks bounded by the largest
-  * 1/256th slice, at the cost of one extra corpus scan that reduces
-  * map-side to ~256 rows per stratum. SamplingShardSpec pins equality
-  * against the naive single-window form on ScalaCheck corpora including
-  * a 90%-one-stratum regime.
+/** Deterministic, hash-ordered corpus sampling: shard assignment,
+  * sampled heavy hitters and tempered mixture weights. Every order key is
+  * md5 of an id plus a salt — a uniform random permutation that is
+  * reproducible across runs, engines and partitionings.
   */
 object Sampling {
-
-  /** Number of hex characters of the hash used as the shard key.
-    * 2 → 256 shards: enough fan-out to break any real stratum skew while
-    * keeping the offset frame trivially broadcastable. */
-  private val ShardHexChars = 2
-
-  private def withRunningTokens(df: DataFrame, stratumCol: String,
-      tokensCol: String, idCol: String, salt: String): DataFrame = {
-    val hash = md5(concat(col(idCol).cast("string"), lit(salt)))
-    val withHash = df.withColumn("smp_hash", hash)
-      .withColumn("smp_pfx", substring(col("smp_hash"), 1, ShardHexChars))
-    val tokens = col(tokensCol).cast("long")
-    // per-(stratum, shard) subtotals — partial-aggregated map-side, so the
-    // extra pass ships ~256 rows per stratum per task, not the corpus
-    val perShard = withHash.groupBy(col(stratumCol), col("smp_pfx"))
-      .agg(sum(tokens).as("pfx_tokens"))
-    // exclusive prefix-sum over shards in hash order, on the tiny frame
-    val wOff = Window.partitionBy(col(stratumCol)).orderBy(col("smp_pfx"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = perShard
-      .withColumn("pfx_offset", coalesce(sum(col("pfx_tokens")).over(wOff), lit(0L)))
-      .drop("pfx_tokens")
-    // shard-local running sum + broadcast shard offset = global running sum
-    val wLocal = Window.partitionBy(col(stratumCol), col("smp_pfx"))
-      .orderBy(col("smp_hash"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    withHash
-      .join(broadcast(offsets), Seq(stratumCol, "smp_pfx"), "left")
-      .withColumn("cum_tokens", sum(tokens).over(wLocal) + col("pfx_offset"))
-      // restore the caller's column order (the using-join moved keys first)
-      .select((df.columns.map(col) :+ col("smp_hash") :+ col("cum_tokens")): _*)
-  }
-
-  /** Adds `smp_hash` (the salted order key), `cum_tokens` (running token
-    * total in hash order, inclusive of the current doc) and `kept`
-    * (1 iff the doc's tokens START before the stratum budget is full). */
-  def tokenBudgetSample(df: DataFrame, stratumCol: String,
-      tokensCol: String, budget: Long, idCol: String = "doc_id",
-      salt: String = ":sample:v1"): DataFrame =
-    withRunningTokens(df, stratumCol, tokensCol, idCol, salt)
-      .withColumn("kept",
-        when(col("cum_tokens") - col(tokensCol) < budget, 1).otherwise(0))
-
-  /** The round-5-shape single-window sampler, kept as the oracle twin for
-    * SamplingShardSpec's sharded-vs-naive equality property. NOT for
-    * production use: the per-stratum window single-tasks each stratum. */
-  private[graft] def tokenBudgetSampleNaive(df: DataFrame, stratumCol: String,
-      tokensCol: String, budget: Long, idCol: String = "doc_id",
-      salt: String = ":sample:v1"): DataFrame = {
-    val hash = md5(concat(col(idCol).cast("string"), lit(salt)))
-    val w = Window.partitionBy(col(stratumCol))
-      .orderBy(col("smp_hash"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("smp_hash", hash)
-      .withColumn("cum_tokens", sum(col(tokensCol).cast("long")).over(w))
-      .withColumn("kept",
-        when(col("cum_tokens") - col(tokensCol) < budget, 1).otherwise(0))
-  }
-
-  /** Deterministic train/val/test split: the first hex nibble of
-    * md5(id || salt) maps 13/16 → train, 2/16 → val, 1/16 → test.
-    * Content-independent, engine-portable, stable under repartitioning
-    * and corpus growth — a doc never migrates between splits across
-    * runs. Adds `h` (the nibble) and `split`. */
-  def deterministicSplit(df: DataFrame, idCol: String = "doc_id",
-      salt: String = ":split:v1"): DataFrame =
-    df.withColumn("h", substring(
-        md5(concat(col(idCol).cast("string"), lit(salt))), 1, 1))
-      .withColumn("split",
-        when(col("h") < "d", "train").when(col("h") < "f", "val")
-          .otherwise("test"))
 
   /** Deterministic global shuffle → training shards: every doc gets a
     * (shard, pos) address under a reproducible random permutation —
@@ -136,31 +36,9 @@ object Sampling {
       .drop("__k")
   }
 
-  /** Weighted training mix: a DIFFERENT token budget per stratum (the
-    * actual shape of a pre-training data recipe — "30B tokens of code,
-    * 5B of forum text, ..."). `budgets` maps stratum value → budget;
-    * strata absent from the map get `defaultBudget`. The map joins in as
-    * a broadcast literal frame, so the plan stays the same sharded
-    * running-sum shape as the uniform sampler. */
-  def tokenBudgetMix(df: DataFrame, stratumCol: String, tokensCol: String,
-      budgets: Map[String, Long], defaultBudget: Long = 0L,
-      idCol: String = "doc_id", salt: String = ":sample:v1"): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val b = budgets.toSeq.sortBy(_._1)
-      .toDF(stratumCol, "stratum_budget")
-    withRunningTokens(df, stratumCol, tokensCol, idCol, salt)
-      .join(broadcast(b), Seq(stratumCol), "left")
-      .withColumn("stratum_budget",
-        coalesce(col("stratum_budget"), lit(defaultBudget)))
-      .withColumn("kept",
-        when(col("cum_tokens") - col(tokensCol) < col("stratum_budget"), 1)
-          .otherwise(0))
-  }
-
   /** Sampled heavy hitters: estimate the most frequent values of `keyCol`
     * from a deterministic bottom-k occurrence sample instead of an exact
-    * global groupBy. The exact form (doc_top_ngrams' groupBy + top-k)
+    * global groupBy. The exact form (a groupBy + top-k)
     * shuffles EVERY DISTINCT KEY — at 100 TB an n-gram key space is
     * billions of rows of shuffle no matter how good the partial
     * aggregation; this estimator moves exactly k sampled occurrences
@@ -206,8 +84,7 @@ object Sampling {
     * perfect squares where the product is an exact integer); the
     * normalizer is an exact integer sum; share is raw IEEE division and
     * the per-stratum token budget is pure integer arithmetic
-    * (budget·w div Σw — floor on positives in any engine). Feeds
-    * [[tokenBudgetMix]] directly. Returns (stratumCol, n_docs, n_tokens,
+    * (budget·w div Σw — floor on positives in any engine). Returns (stratumCol, n_docs, n_tokens,
     * w_micro, share, token_budget). */
   def mixtureWeights(df: DataFrame, stratumCol: String, totalBudget: Long,
       textCol: String = "text"): DataFrame = {

@@ -74,10 +74,6 @@ object TextAnalysis {
   def bpeishTokenCount(c: Column): Column =
     size(regexp_extract_all(c, lit(BpeishPattern), lit(0)))
 
-  /** Cheap token estimate used by the reference for LLM budgeting
-    * (~4 chars/token, cli_wrapper/main.py:417-424 display only). */
-  def tokenEstimate(c: Column): Column = ceil(length(c) / 4)
-
   /** Quality-signal projection: length, token stats, stopword/punct/upper
     * ratios and a composite keep/drop flag — the standard pre-training
     * quality gate shape. */
@@ -307,9 +303,8 @@ object TextAnalysis {
     // and map to symbols via two broadcast vocab probes; the former
     // shape posexploded the corpus and equi-self-joined it on
     // (doc, pos) — a corpus-wide shuffle of every token, twice, to
-    // reconstruct adjacency the row already holds. Cache ownership
-    // follows the CleanPipeline convention: the caller (Verify/Bench
-    // clear all caches) unpersists when done.
+    // reconstruct adjacency the row already holds. The caller
+    // unpersists the cache when done.
     val pairs = adjacentPairs(df, idCol, textCol)
       .join(broadcast(vocab.select(col("__w").as("__pr"),
         col("__v").as("__vp"))), Seq("__pr"), "left")
@@ -463,7 +458,7 @@ object TextAnalysis {
       ((num * num) / (denX * denY)).as("r2"))
   }
 
-  /** Words of a text row, Bpe-compatible: lowercased `[a-z]+` runs. */
+  /** Words of a text row: lowercased `[a-z]+` runs. */
   private def words(textCol: Column): Column =
     regexp_extract_all(lower(textCol), lit("[a-z]+"), lit(0))
 
@@ -484,8 +479,7 @@ object TextAnalysis {
     * corpus alone cost 10.7 s; the native expression is ~ns/char.)
     * The DuckDB twin computes the same counts via unnest + GROUP BY —
     * equality is on values, not plans. ASCII-safe; on astral text the
-    * expression counts UTF-16 units where DuckDB splits codepoints
-    * (the doc_langid caveat).
+    * expression counts UTF-16 units where DuckDB splits codepoints.
     * Returns struct(n_chars_seen, distinct_chars, entropy_micro). */
   def charEntropyStats(textCol: Column): Column = {
     val st = graft.functions.TextFunctions.charEntropy(textCol)

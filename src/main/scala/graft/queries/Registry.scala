@@ -4,8 +4,7 @@ package graft.queries
   * operator inventory onto the driver testdata tables. */
 object Registry {
   lazy val all: Seq[QueryDef] =
-    Relational.all ++ EventAnalytics.all ++ DocAnalytics.all ++
-      TraceQueries.all ++ PipelineQueries.all ++ BpeQueries.all ++
+    Relational.all ++ EventAnalytics.all ++ TraceQueries.all ++
       SinkRoundtrip.all
 
   lazy val byName: Map[String, QueryDef] =

@@ -21,6 +21,10 @@ import QueryDef._
   * concurrent suites never collide; every execution rewrites it
   * (mode=overwrite), so the queries stay idempotent and bench passes pay
   * the full write+read cost honestly.
+  *
+  * `doc_text_splitter` closes the chunk sink's remaining gap: it runs
+  * the chunker's 500/100 split over the `documents` table and checks the
+  * pieces against a DuckDB replay of the algorithm.
   */
 object SinkRoundtrip {
 
@@ -120,7 +124,8 @@ object SinkRoundtrip {
     // Same canonical projection (and oracle) as trace_chunks, but the
     // values travel through the chunk command's parquet sink first —
     // chunk_content/chunk_pieces are written too (CliSpec asserts them;
-    // the 500/100 split algorithm itself is oracled by doc_text_splitter).
+    // the 500/100 split algorithm itself is oracled by doc_text_splitter,
+    // below).
     sql("trace_chunk_sink_roundtrip", TraceQueries.duckChunksSql) { (s, _) =>
       val db = rtDir(s, "chunk")
       cli(s, "--db", db, "load", XmlFixture, "--stable-ids")
@@ -129,6 +134,51 @@ object SinkRoundtrip {
         .select("chunk_id", "start_event_id", "end_event_id", "n_events",
           "chunk_type")
         .orderBy("chunk_id")
+    },
+
+    // ---- §2.8 recursive 500/100 text splitter, full oracle ---------------
+    // Chunker.splitText (chunker.py:8-16, langchain's recursive splitter):
+    // on this corpus (single-space word sequences, words ≤ 8 chars, no
+    // newlines) the algorithm reduces provably to a greedy word merge
+    // with a ≤100-char carried overlap — which the oracle replays as a
+    // DuckDB recursive CTE over word-prefix lengths. cum[j] is the joined
+    // length of words 1..j plus one separator (so join(s..j) =
+    // cum[j]-cum[s-1]-1); a chunk [s,e] takes the longest fitting prefix,
+    // the next start trims the head until the carried tail is ≤ overlap.
+    sql("doc_text_splitter", {
+      def cum0(sv: String) =
+        s"(CASE WHEN $sv = 1 THEN 0 ELSE cum[$sv - 1] END)"
+      def eOf(sv: String) =
+        s"($sv - 1 + len(list_filter(list_slice(cum, $sv, nw), c -> c - ${cum0(sv)} <= 501)))"
+      val s2 = "(s + len(list_filter(list_slice(cum, s, e - 1), c -> c < cum[e] - 101)) + 1)"
+      s"""WITH RECURSIVE w AS (
+        |  SELECT doc_id, ws, len(ws) AS nw,
+        |    list_transform(range(1, len(ws) + 1),
+        |      j -> strlen(array_to_string(ws[1:j], ' ')) + 1) AS cum
+        |  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents
+        |        WHERE text IS NOT NULL AND text <> '')
+        |), chunks AS (
+        |  SELECT doc_id, ws, nw, cum, 0 AS piece_index, 1 AS s,
+        |    ${eOf("1")} AS e
+        |  FROM w
+        |  UNION ALL
+        |  SELECT doc_id, ws, nw, cum, piece_index + 1, $s2 AS s,
+        |    ${eOf(s2)} AS e
+        |  FROM chunks WHERE e < nw
+        |)
+        |SELECT doc_id, piece_index,
+        |  array_to_string(list_slice(ws, s, e), ' ') AS content,
+        |  row_number() OVER (ORDER BY doc_id, piece_index) - 1 AS chunk_index
+        |FROM chunks
+        |ORDER BY doc_id, piece_index"""
+    }) { (s, dir) =>
+      graft.trace.Chunker.splitChunks(graft.Tables(s, dir, "documents").select(
+          col("doc_id").as("chunk_id"), lit(0L).as("start_event_id"),
+          lit(0L).as("end_event_id"), lit("doc").as("chunk_type"),
+          col("text").as("chunk_content")))
+        .select(col("chunk_id").as("doc_id"), col("piece_index"),
+          col("content"), col("chunk_index"))
+        .orderBy("doc_id", "piece_index")
     }
   )
 }

@@ -12,12 +12,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingOps {
 
-  /** Upper bound on the decontam eval suite [[cleanStream]] will pack
-    * into the per-executor probe set: 4M grams = 64 MB resident (16 B
-    * per 128-bit digest) — the broadcast-budget line past which the
-    * suite must be sharded, not shipped. */
-  val MaxEvalGrams: Long = 4000000L
-
   /** Tumbling metric rollups over a (streaming) metrics frame:
     * groupBy(window(ts, Ns), role, metric) agg n/avg/max — the streaming
     * twin of DerivedTables.rollups. With `watermark` set, late rows beyond
@@ -82,26 +76,6 @@ object StreamingOps {
       }
       .start()
 
-  /** Streaming benchmark-contamination alerts: a stream-static join of
-    * the live ingest's word n-gram hashes against a STATIC eval-set gram
-    * table (graft.ops.Decontam.ngramHashes output). Stream-static joins
-    * are stateless in Structured Streaming — no watermark, no state
-    * store; each micro-batch probes the broadcast eval grams exactly the
-    * way the batch decontamination plan does, so flagged docs surface
-    * DURING ingest instead of in a nightly sweep. Emits one row per
-    * (doc, matching gram hash); dedupe/aggregate downstream if alert
-    * volume matters. */
-  def contaminationAlerts(docs: DataFrame, evalGrams: DataFrame,
-      n: Int = 8, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val grams = docs
-      .select(col(idCol),
-        explode(array_distinct(graft.functions.TextFunctions.gramMd5(
-          col(textCol), n, clip = true))).as("gram"))
-    grams.join(broadcast(evalGrams.select(col("gram")).distinct()),
-      Seq("gram"), "inner")
-  }
-
   /** Streaming near-duplicate ingest alerts: each arriving doc's MinHash
     * signature is computed STATELESSLY as a per-row projection (array_min
     * over the doc's shingle array per seed — value-identical to the
@@ -149,105 +123,6 @@ object StreamingOps {
   /** Band-k hash over `rows` consecutive signature columns. */
   private def bandHash(k: Int, rows: Int): org.apache.spark.sql.Column =
     md5(concat((0 until rows).map(r => col(s"__m${rows * k + r}")): _*))
-
-  /** The full cleaning pipeline's per-doc keep decision DURING ingest —
-    * the streaming twin of `ops.CleanPipeline.decisions`, entirely
-    * STATELESS (no watermark, no state store, decisions emit in the same
-    * micro-batch the doc arrives in):
-    *
-    *  - quality + repetition gates are per-row projections (the
-    *    repetition top-gram via `TextAnalysis.top2GramStats`' sorted
-    *    array fold — no explode/groupBy);
-    *  - the dedup gate runs in the INCREMENTAL regime (the only regime a
-    *    stream can see): each doc probes the STATIC corpus index —
-    *    content-hash table + per-band MinHash bucket sets — through
-    *    key-unique stream-static left joins, exactly the batch
-    *    `Dedup.incrementalAdmit` semantics (admit ⇔ no exact hit and no
-    *    band collision). Batch-vs-corpus self-dedup (connected
-    *    components) stays the nightly batch job's business;
-    *  - the decontam gate probes the benchmark suite's gram hashes
-    *    through `AnyGramInSet` — the eval digests packed into one sorted
-    *    long[] shipped per executor inside the task binary; each doc
-    *    binary-searches it in O(g · log |eval|), so per-doc cost is
-    *    independent of eval-set size (a 1M-gram suite is 16 MB resident
-    *    and ~20 compares per gram, vs the former collected-array
-    *    `arrays_overlap` scan that was O(|eval|) PER DOCUMENT).
-    *    Membership is exact on the full 128-bit digest — same gate, same
-    *    hashes, no bloom false-positive path to confirm.
-    *
-    * Each static side is key-unique (distinct hashes / distinct bucket
-    * hashes per band / one row of grams), so the stream keeps exactly
-    * one output row per ingested doc. Returns (idCol, is_quality,
-    * not_repetitive, dedup_keep, not_contaminated, keep). */
-  def cleanStream(docs: DataFrame, corpusBands: DataFrame,
-      corpusHashes: DataFrame, evalGrams: DataFrame,
-      cfg: graft.ops.CleanPipeline.Config = graft.ops.CleanPipeline.Config(),
-      hashes: Int = 16, bandCount: Int = 4, idCol: String = "doc_id",
-      textCol: String = "text",
-      maxEvalGrams: Long = MaxEvalGrams): DataFrame = {
-    val rows = hashes / bandCount
-    val n = cfg.decontamN
-    // static side, materialized ONCE at stream build: the eval suite's
-    // distinct gram digests, packed sorted for the per-row binary probe.
-    // The pack rides inside the task binary shipped to every executor
-    // (16 B/gram), so its size is a broadcast budget, not a data plan —
-    // fail FAST at stream build past the documented bound (the
-    // jaccardPairs guard pattern) instead of collecting an unbounded
-    // suite onto the driver and shipping a multi-GB closure.
-    val distinctGrams = evalGrams.select(col("gram")).distinct()
-    val nGrams = distinctGrams.count()
-    require(nGrams <= maxEvalGrams,
-      s"cleanStream eval suite has $nGrams distinct grams; the packed " +
-        s"probe set is bounded at $maxEvalGrams (${16L * maxEvalGrams >> 20} MB " +
-        "resident per executor). Shard the eval suite across gates or " +
-        "pre-filter it to the benchmark splits this stream must guard.")
-    val packedEval = graft.functions.AnyGramInSet.pack(
-      distinctGrams.collect().map(_.getString(0)))
-    val base = docs
-      .withColumn("__w", split(col(textCol), " "))
-      .withColumn("__sh", shingleArray)
-      .withColumn("__g8", array_distinct(
-        graft.functions.TextFunctions.gramMd5(col(textCol), n, clip = true)))
-      .withColumn("__top2", graft.ops.TextAnalysis.top2GramStats(col(textCol)))
-      .withColumn("__content_hash", md5(col(textCol)))
-    val withSig = base.select(col("*") +: sigCols(hashes): _*)
-    val withBands = (0 until bandCount).foldLeft(withSig) { (df, k) =>
-      df.withColumn(s"__bh$k", bandHash(k, rows))
-    }
-    val exactIdx = corpusHashes
-      .select(col("content_hash").as("__content_hash")).distinct()
-      .withColumn("__exact_hit", lit(1))
-    val probed = (0 until bandCount).foldLeft(
-        withBands.join(exactIdx, Seq("__content_hash"), "left")) { (df, k) =>
-      val idx = corpusBands.filter(col("band") === k)
-        .select(col("bh").as(s"__bh$k")).distinct()
-        .withColumn(s"__nd$k", lit(1))
-      df.join(idx, Seq(s"__bh$k"), "left")
-    }
-    val ndHit = (0 until bandCount).map(k => col(s"__nd$k").isNotNull)
-      .reduce(_ || _)
-    val toks = col("__w")
-    probed
-      .withColumn("is_quality",
-        when(size(toks) >= cfg.minTokens &&
-          size(filter(toks, x => x.isin(cfg.stopwords: _*))).cast("double") /
-            size(toks) < cfg.maxStopFrac, 1).otherwise(0))
-      .withColumn("not_repetitive",
-        when((col("__top2")("cnt") * length(col("__top2")("gram")))
-          .cast("double") / greatest(length(col(textCol)), lit(1)) <
-            cfg.maxTopGramFrac, 1).otherwise(0))
-      .withColumn("dedup_keep",
-        when(col("__exact_hit").isNull && !ndHit, 1).otherwise(0))
-      .withColumn("not_contaminated",
-        when(!graft.functions.AnyGramInSet.anyGramInSet(
-          col("__g8"), packedEval), 1).otherwise(0))
-      .withColumn("keep",
-        when(col("is_quality") === 1 && col("not_repetitive") === 1 &&
-          col("dedup_keep") === 1 && col("not_contaminated") === 1, 1)
-          .otherwise(0))
-      .select(col(idCol), col("is_quality"), col("not_repetitive"),
-        col("dedup_keep"), col("not_contaminated"), col("keep"))
-  }
 
   case class DistinctPoint(key: String, value: String,
       ts: java.sql.Timestamp = null)
@@ -571,8 +446,7 @@ object StreamingOps {
     *
     * Within a trigger rows fold SORTED by doc_id, so a single-batch
     * execution admits exactly the per-fingerprint MINIMUM id — the batch
-    * dedup rule, which is what the registered `doc_streaming_dedup`
-    * oracle verifies. Across triggers the winner is FIRST-SEEN: a later
+    * dedup rule, which StreamingSpec's batch-fold case verifies. Across triggers the winner is FIRST-SEEN: a later
     * trigger cannot dethrone it even with a smaller id (re-admitting
     * would retract the earlier rejection — unbounded output revision),
     * which equals the batch rule whenever delivery is id-ordered — the

@@ -102,121 +102,4 @@ class CliSpec extends SparkSpec {
       "--partitions", "2") === 0)
     assert(new java.io.File(out).listFiles().count(_.getName.endsWith(".csv")) === 2)
   }
-
-  test("cli: clean/split/pack subcommands hash-match the registered queries") {
-    import org.apache.spark.sql.functions._
-    val store = Files.createTempDirectory("graft-cli-train").toString
-    val docsPath = s"${sf("")}/documents.parquet"
-    def run(args: String*): Int =
-      Cli.run(args.toArray, sessionOverride = Some(spark))
-    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[String]] = {
-      val cols = df.columns.sorted
-      df.select(cols.map(col): _*).collect()
-        .map(_.toSeq.map(String.valueOf)).toSet
-    }
-
-    // clean — per-doc decisions and the per-source report must equal the
-    // registered doc_clean_pipeline / doc_pipeline_report results
-    assert(run("--db", store, "clean", docsPath) === 0)
-    val decisionCols = Seq("doc_id", "is_quality", "not_repetitive",
-      "dedup_keep", "not_contaminated", "keep")
-    assert(rows(spark.read.parquet(s"$store/clean_decisions")
-        .select(decisionCols.map(col): _*)) ===
-      rows(graft.queries.Registry.byName("doc_clean_pipeline")
-        .run(spark, sf(""))))
-    assert(rows(spark.read.parquet(s"$store/clean_report")) ===
-      rows(graft.queries.Registry.byName("doc_pipeline_report")
-        .run(spark, sf(""))))
-    // kept corpus = exactly the keep=1 decision rows, full original docs
-    val keptIds = spark.read.parquet(s"$store/clean_decisions")
-      .filter(col("keep") === 1).select("doc_id")
-    val cleanDocs = spark.read.parquet(s"$store/clean_docs")
-    assert(cleanDocs.count() === keptIds.count())
-    assert(cleanDocs.join(keptIds, Seq("doc_id"), "left_anti").count() === 0L)
-    assert(cleanDocs.columns.toSet ===
-      spark.read.parquet(docsPath).columns.toSet)
-
-    // split — stats over the written assignment must equal doc_split_stats
-    assert(run("--db", store, "split", docsPath) === 0)
-    val splitStats = spark.read.parquet(s"$store/doc_splits")
-      .join(spark.read.parquet(docsPath).select("doc_id", "n_chars"), "doc_id")
-      .groupBy("split")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_chars")).cast("long").as("total_chars"),
-        min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
-    assert(rows(splitStats) ===
-      rows(graft.queries.Registry.byName("doc_split_stats").run(spark, sf(""))))
-
-    // pack — default budget/buckets must equal doc_seq_pack; --examples
-    // materializes one consistent row per bin
-    assert(run("--db", store, "pack", docsPath, "--examples") === 0)
-    assert(rows(spark.read.parquet(s"$store/packed")) ===
-      rows(graft.queries.Registry.byName("doc_seq_pack").run(spark, sf(""))))
-    val ex = spark.read.parquet(s"$store/packed_examples")
-    val nDocs = spark.read.parquet(docsPath).count()
-    assert(ex.agg(sum("n_docs")).first().getLong(0) === nDocs)
-    // every example's member count matches its id list and its text join
-    assert(ex.filter(size(split(col("doc_ids"), "\\|")) =!= col("n_docs"))
-      .count() === 0L)
-    assert(ex.filter(col("total_tokens") > 512)
-      .filter(col("n_docs") > 1).count() === 0L,
-      "only oversize singleton docs may exceed the budget")
-
-    // sample — default budget must equal doc_budget_sample; a --budgets
-    // mix must equal doc_mix_sample
-    val sampleCols = Seq("doc_id", "lang", "n_tokens", "cum_tokens", "kept")
-    assert(run("--db", store, "sample", docsPath) === 0)
-    assert(rows(spark.read.parquet(s"$store/doc_sample")
-        .select(sampleCols.map(col): _*)) ===
-      rows(graft.queries.Registry.byName("doc_budget_sample")
-        .run(spark, sf(""))))
-    assert(run("--db", store, "sample", docsPath, "--budgets",
-      "en=4000,de=2000,fr=1500,es=1000,zh=500") === 0)
-    assert(rows(spark.read.parquet(s"$store/doc_sample")
-        .select((sampleCols :+ "stratum_budget").map(col): _*)) ===
-      rows(graft.queries.Registry.byName("doc_mix_sample")
-        .run(spark, sf(""))))
-
-    // redact — written corpus carries the scrubbed text + audit counts,
-    // equal to applying the ops directly
-    assert(run("--db", store, "redact", docsPath) === 0)
-    val redacted = spark.read.parquet(s"$store/doc_redacted")
-    val want = spark.read.parquet(docsPath)
-      .select(col("doc_id"),
-        graft.ops.TextAnalysis.redact(col("text")).as("text"),
-        graft.ops.TextAnalysis.redactCounts(col("text")).as("c"))
-      .select(col("doc_id"), col("text"), col("c.n_email").as("n_email"),
-        col("c.n_ip").as("n_ip"), col("c.n_num").as("n_num"))
-    assert(rows(redacted.select("doc_id", "text", "n_email", "n_ip", "n_num"))
-      === rows(want))
-    assert(redacted.count() === spark.read.parquet(docsPath).count())
-
-    // score — written LM scores must equal the registered doc_unigram_nll
-    assert(run("--db", store, "score", docsPath) === 0)
-    assert(rows(spark.read.parquet(s"$store/doc_lm_scores")) ===
-      rows(graft.queries.Registry.byName("doc_unigram_nll")
-        .run(spark, sf(""))))
-
-    // score --bigram — the order-2 scores must equal doc_bigram_nll
-    assert(run("--db", store, "score", docsPath, "--bigram") === 0)
-    assert(rows(spark.read.parquet(s"$store/doc_lm_scores2")) ===
-      rows(graft.queries.Registry.byName("doc_bigram_nll")
-        .run(spark, sf(""))))
-
-    // shard — the partitioned-by-shard layout must carry exactly the
-    // registered doc_shuffle_shards addressing, and each shard's file
-    // must hold its rows in permutation (pos) order
-    assert(run("--db", store, "shard", docsPath) === 0)
-    val shards = spark.read.parquet(s"$store/doc_shards")
-    assert(rows(shards.select("doc_id", "shard", "pos")) ===
-      rows(graft.queries.Registry.byName("doc_shuffle_shards")
-        .run(spark, sf(""))))
-    // in-file order: reading one shard partition back preserves pos order
-    val shard0dir = new java.io.File(s"$store/doc_shards")
-      .listFiles().filter(_.getName.startsWith("shard=")).head
-    val inFile = spark.read.parquet(shard0dir.toString)
-      .select("pos").collect().map(_.getInt(0)).toSeq
-    assert(inFile === inFile.sorted,
-      "rows inside a shard file must be in permutation order")
-  }
 }

@@ -13,7 +13,7 @@ class DedupSpec extends SparkSpec {
     // the clustering contract: per-bucket star edges and per-bucket
     // cliques have identical connected components — pin it on the
     // fixture corpus by running CC over BOTH edge sets
-    val docs = Tables(spark, sf(""), "documents")
+    val docs = Tables(spark, SfDir, "documents")
     val viaStar = Dedup.nearDupComponents(docs)
     val pairs = Dedup.minhashCandidates(docs)
     val viaClique = docs.select(col("doc_id").cast("long").as("doc_id"))
@@ -150,7 +150,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("canonicalReps picks the longest member per component, ties to min id") {
-    val docs = Tables(spark, sf(""), "documents")
+    val docs = Tables(spark, SfDir, "documents")
     val got = Dedup.canonicalReps(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getInt(4))).sortBy(_._1)
@@ -174,7 +174,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("nearDedup removes exactly the verified near-duplicates") {
-    val docs = Tables(spark, sf(""), "documents").cache()
+    val docs = Tables(spark, SfDir, "documents").cache()
     val n = docs.count()
     val pairs = Dedup.jaccardPairs(docs, 0.8).cache()
     val dupIds = pairs.select(col("doc_b")).distinct().count()
@@ -187,7 +187,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("all-pairs verification twin fails fast past its row bound") {
-    val docs = Tables(spark, sf(""), "documents")
+    val docs = Tables(spark, SfDir, "documents")
     val e = intercept[IllegalArgumentException] {
       Dedup.jaccardPairs(docs, 0.8, maxRows = 10)
     }
@@ -226,7 +226,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("LSH candidates cover all true Jaccard pairs (recall 1.0 here)") {
-    val docs = Tables(spark, sf(""), "documents")
+    val docs = Tables(spark, SfDir, "documents")
     val truth = Dedup.jaccardPairs(docs, 0.8)
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -267,7 +267,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("sourceOverlap == manual aggregation of candidate pairs by source") {
-    val docs = Tables(spark, sf(""), "documents")
+    val docs = Tables(spark, SfDir, "documents")
     val src = docs.select("doc_id", "source").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     val want = Dedup.minhashCandidates(docs).collect()
@@ -285,7 +285,7 @@ class DedupSpec extends SparkSpec {
 
   test("shingle frequency cap removes hot shingles, keeps planted dups") {
     import spark.implicits._
-    val docs = Tables(spark, sf(""), "documents")
+    val docs = Tables(spark, SfDir, "documents")
     val sh = Dedup.shingles(docs)
     // cap at the observed max doc-frequency → no-op
     val maxFreq = sh.groupBy("shingle").count()
@@ -305,7 +305,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("MinHashAgg signature == per-seed min(md5(concat)) reference form") {
-    val docs = Tables(spark, sf(""), "documents")
+    val docs = Tables(spark, SfDir, "documents")
     val sh = Dedup.shingles(docs)
     val refCols = (0 until 16).map(i =>
       min(md5(concat(lit(s"$i|"), col("shingle")))).as(s"m$i"))
@@ -343,11 +343,18 @@ class DedupSpec extends SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
+      val text = (1 to 40).map(i => s"word$i").mkString(" ")
       val r = s2.sql(
-        """SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d,
-          |       rolling_hash('abc') AS h""".stripMargin).first()
+        s"""SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d,
+           |       rolling_hash('abc') AS h,
+           |       graft_split_text('$text', 50, 10) AS pieces""".stripMargin)
+        .first()
       assert(r.getDouble(0) === 11.0)
       assert(r.getLong(1) === graft.functions.RollingHash.hash("abc"))
+      // the trace chunker's splitter, reached through the extensions path
+      val pieces = r.getSeq[String](2)
+      assert(pieces.length > 1)
+      assert(pieces === graft.trace.Chunker.splitText(text, 50, 10))
       val e = s2.sql(
         "SELECT graft_ewma(x, 0.5) OVER (ORDER BY i) AS e FROM VALUES (1, 2.0), (2, 4.0) AS t(i, x)")
         .collect().map(_.getDouble(0)).toSeq

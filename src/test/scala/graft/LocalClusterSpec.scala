@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions.col
 /** Multi-executor smoke (round-6 verdict item 1): spawn a separate driver
   * JVM running the ClusterSmoke slice on `local-cluster[2,4,2048]` — real
   * executor processes, real task/closure serialization, cross-JVM merge
-  * of the custom aggregate buffers (HllAgg, MinHashAgg), codegen on
-  * executor classloaders (Ewma, RollingHash), remote
-  * shuffle fetches — then assert each query's result is EXACTLY the
-  * local-mode answer computed in this JVM.
+  * of the custom aggregate buffers (HllAgg, PctSampleAgg), codegen on
+  * executor classloaders (Ewma), remote shuffle fetches — then assert
+  * each query's result is EXACTLY the local-mode answer computed in this
+  * JVM.
   *
   * The subprocess is required because one JVM holds one SparkContext and
   * every other suite shares the local[4] session; a cluster master needs
@@ -31,7 +31,6 @@ class LocalClusterSpec extends SparkSpec {
       "local-cluster[2,4,2048] equals local mode exactly") {
     val outDir = Files.createTempDirectory("graft_cluster_smoke")
     outDir.toFile.deleteOnExit()
-    val sfDir = sf("any")
 
     val java = Paths.get(System.getProperty("java.home"), "bin", "java")
     val cmd: Seq[String] =
@@ -40,7 +39,7 @@ class LocalClusterSpec extends SparkSpec {
         "-Dspark.ui.enabled=false",
         "-cp", System.getProperty("java.class.path"),
         "graft.ClusterSmoke",
-        "local-cluster[2,4,2048]", sfDir, outDir.toString)
+        "local-cluster[2,4,2048]", SfDir, outDir.toString)
     val log = outDir.resolve("driver.log").toFile
     val pb = new ProcessBuilder(cmd: _*)
     pb.environment().put("SPARK_HOME",
@@ -71,7 +70,7 @@ class LocalClusterSpec extends SparkSpec {
       val clusterRows =
         canon(spark.read.parquet(s"$outDir/$name"))
       val localRows =
-        canon(graft.queries.Registry.byName(name).run(spark, sfDir))
+        canon(graft.queries.Registry.byName(name).run(spark, SfDir))
       assert(clusterRows == localRows,
         s"$name differs between local and local-cluster: " +
           s"cluster=${clusterRows.size} rows, local=${localRows.size} rows")

@@ -72,7 +72,7 @@ class PackCcSpec extends SparkSpec {
   }
 
   test("nearDupComponents labels every doc and respects candidate pairs") {
-    val docs = Tables(spark, sf(""), "documents").cache()
+    val docs = Tables(spark, SfDir, "documents").cache()
     val n = docs.count()
     val comp = Dedup.nearDupComponents(docs).cache()
     assert(comp.count() === n)
@@ -171,7 +171,7 @@ class PackCcSpec extends SparkSpec {
   }
 
   test("packGreedy on the documents fixture fills bins near budget") {
-    val docs = Tables(spark, sf(""), "documents")
+    val docs = Tables(spark, SfDir, "documents")
       .withColumn("n_tokens",
         size(expr("regexp_extract_all(text, '\\\\S+', 0)")))
     val packed = Packing.packGreedy(docs, "doc_id", "n_tokens", 512, 8).cache()

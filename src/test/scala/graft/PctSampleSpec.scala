@@ -8,8 +8,8 @@ import graft.trace.DerivedTables
 
 /** functions/PctSampleAgg — the bounded-state (bottom-k sample)
   * percentile that replaces exact `Percentile` on the 100-TB path.
-  * Cross-engine value identity is proven by the ev_percentiles_approx /
-  * doc_gate_calibration_approx oracles; these cases pin the properties
+  * Cross-engine value identity is proven by the ev_percentiles_approx
+  * oracle; these cases pin the properties
   * that make it safe at scale: the sample IS the window-rule sample
   * (bit-for-bit), merge-order/partitioning invariance, the DKW rank
   * error envelope on real data, exactness below k, and the flat 24·k

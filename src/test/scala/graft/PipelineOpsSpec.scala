@@ -21,20 +21,6 @@ class PipelineOpsSpec extends SparkSpec {
     assert(SimHash.simhash(a) !== SimHash.simhash(c))
   }
 
-  test("simhash pair query matches brute-force Hamming enumeration") {
-    val pairs = graft.queries.Registry.byName("doc_simhash_pairs")
-      .run(spark, sf("")).collect()
-      .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
-    val sigs = Tables(spark, sf(""), "documents")
-      .select(col("doc_id"), TextFunctions.simhash32(col("text")).as("sig"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
-    val expected = (for {
-      (a, sa) <- sigs; (b, sb) <- sigs
-      if a < b && java.lang.Long.bitCount(sa ^ sb) <= 3
-    } yield (a, b)).toSet
-    assert(pairs === expected)
-  }
-
   test("rolling hash fingerprint: deterministic, order-sensitive") {
     import graft.functions.RollingHash
     assert(RollingHash.hash("abc") === ((('a' * 31) + 'b') * 31 + 'c') % 1000000007L)

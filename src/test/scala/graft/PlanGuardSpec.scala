@@ -9,23 +9,14 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
   * fine" assumption had to go: the recovery lookback joins planned as
   * BNLJ over a GROWING side and measured 26× at 10× volume until they
   * were re-shaped into time-bucketed equi-joins.
-  *
-  * The product exception is the deliberately-all-pairs exact
-  * verification twin, which is input-size-guarded in code
-  * (Dedup.jaccardPairs) and exists to anchor the bucketed production
-  * path.
   */
 class PlanGuardSpec extends SparkSpec {
-
-  private val allowedProducts = Set("doc_neardup_jaccard")
 
   /** BNLJ allowed ONLY where the broadcast side cannot grow with the
     * data: each entry names the bound. */
   private val allowedBnlj: Map[String, String] = Map(
     // 1-row global stats frame crossJoined onto bucket counts (J4)
     "ev_zscore_hotspots" -> "broadcast side is a single global-stats row",
-    // 1-row total-symbols frame crossJoined onto the pair scoring
-    "doc_interp_nll" -> "broadcast side is a 1-row symbol-total frame",
     // three 1-row aggregate counts crossJoined into one summary row
     "q14_nation_set_ops" -> "all sides are 1-row aggregates",
     // AnomalyGate.stats: total-events 1-row agg × anomaly-count 1-row agg
@@ -36,32 +27,9 @@ class PlanGuardSpec extends SparkSpec {
     "trace_timeline" -> "all sides are 1-row first-event aggregates",
     // Rag.retrieve: ONE embedded question broadcast against the chunks
     "trace_rag_retrieve" -> "broadcast side is the single query embedding",
-    // gate calibration: the 3-row (rate, percentile-threshold) frame
-    // derived from a 1-row aggregate, broadcast over the corpus
-    "doc_gate_calibration" -> "broadcast side is the 3-row rate/threshold frame",
-    // same shape, thresholds from the bounded-state sampled percentile
-    "doc_gate_calibration_approx" -> "broadcast side is the 3-row rate/threshold frame",
-    // unigram-LM scoring: 1-row denominator / OOV-constant aggregates
-    // broadcast into the vocab build and the per-token scoring
-    "doc_unigram_nll" -> "broadcast sides are 1-row total/denominator aggregates",
-    // TF-IDF: the 1-row corpus-count aggregate crossJoined into the
-    // vocab-bounded (doc, term, tf) scoring frame
-    "doc_tfidf_terms" -> "broadcast side is the 1-row corpus-count aggregate",
-    // BM25: the 1-row (W, N) corpus-totals aggregate crossJoined into
-    // the |query-terms|-bounded per-doc scoring frame
-    "doc_bm25_topk" -> "broadcast side is the 1-row corpus-totals aggregate",
-    // DSIR log-ratio model: the 1-row corpus/target token totals
-    // broadcast into the ≤buckets-row bucket-stats frame
-    "doc_dsir_weights" -> "broadcast side is the 1-row token-totals aggregate",
-    // mixture weights: the 1-row weight normalizer crossJoined onto the
-    // per-stratum (≤ #sources) frame
-    "doc_mix_weights" -> "broadcast side is the 1-row weight-sum aggregate",
     // HLL set ops: the type_a < type_b pair frame over the ≤ #event_types
     // per-type sketch aggregate (both sides are groupBy(event_type) rows)
-    "ev_hll_overlap" -> "both sides are per-type sketch aggregates (≤ #event_types rows)",
-    // sampled heavy hitters: the 1-row corpus-total crossJoined onto the
-    // ≤ k-row sample counts
-    "doc_heavy_hitters_sampled" -> "broadcast side is the 1-row occurrence-total aggregate"
+    "ev_hll_overlap" -> "both sides are per-type sketch aggregates (≤ #event_types rows)"
   )
 
   // The RCA loop queries execute their bounded driver-side orchestration
@@ -71,15 +39,15 @@ class PlanGuardSpec extends SparkSpec {
 
   test("no registered query plans a Cartesian product or an unbounded BNLJ") {
     // As of round 8 EVERY registered plan is UDF-free: the numeric
-    // parsers (round 6), LangId, SimHash and the recursive text splitter
-    // (round 8) are all native codegen expressions. ANY ScalaUDF in a
-    // registered plan is a regression to a path that de-codegens the
-    // enclosing stage — no names, no exemptions.
+    // parsers (round 6) and the recursive text splitter (round 8) are
+    // native codegen expressions. ANY ScalaUDF in a registered plan is a
+    // regression to a path that de-codegens the enclosing stage — no
+    // names, no exemptions.
     val bnljSeen = Set.newBuilder[String]
     val violations = graft.queries.Registry.all
-      .filterNot(q => skip(q.name) || allowedProducts(q.name))
+      .filterNot(q => skip(q.name))
       .flatMap { q =>
-        val plan = q.run(spark, sf("")).queryExecution.sparkPlan
+        val plan = q.run(spark, SfDir).queryExecution.sparkPlan
         val product = plan.collect { case c: CartesianProductExec => c }
           .headOption.map(_ => s"${q.name}: CartesianProduct")
         val hasBnlj = plan

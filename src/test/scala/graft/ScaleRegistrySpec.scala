@@ -16,11 +16,6 @@ import graft.trace._
   *
   * Both tests self-cancel when the generated inputs are absent, so the
   * regular test cycle stays fast; COVERAGE.md records a full run.
-  *
-  * Excluded by design: doc_neardup_jaccard — the guarded all-pairs
-  * ORACLE TWIN (documented `weak`, fail-fast over 100k rows). Its
-  * quadratic cost at 10× is the reason the production path
-  * (doc_minhash_lsh) exists; that IS measured here.
   */
 class ScaleRegistrySpec extends SparkSpec {
 
@@ -28,8 +23,6 @@ class ScaleRegistrySpec extends SparkSpec {
   private val Sf1 = "/tmp/graft_scale/sf1"
   private val Logs = "/tmp/graft_scale/logs"
   private val Logs10 = "/tmp/graft_scale/logs10"
-
-  private val ExcludedTwins = Set("doc_neardup_jaccard")
 
   /** Ratio bound: 10× rows on fixed cores is ~10× ideally; partial
     * aggregation and amortized constants often land BELOW 10, shuffle
@@ -41,12 +34,7 @@ class ScaleRegistrySpec extends SparkSpec {
     assume(new java.io.File(Sf1).isDirectory, s"run dev/gen_scale_tables.py")
     val qs = Registry.all
       .filterNot(_.name.startsWith("trace_")) // fixture-bound, see below
-      .filterNot(q => ExcludedTwins(q.name))
     def sweep(dir: String): Map[String, Double] = qs.map { q =>
-      // evict the BPE train memo BEFORE timing so each BPE query bills
-      // its own training at each scale (the bench-pass sharing would
-      // otherwise make the ratio measure the warm-up's cache)
-      graft.queries.BpeQueries.evictTrainMemo()
       val t0 = System.nanoTime()
       q.run(spark, dir).queryExecution.toRdd.count()
       spark.catalog.clearCache()
@@ -84,53 +72,24 @@ class ScaleRegistrySpec extends SparkSpec {
     assume(new java.io.File(Sf10).isDirectory,
       "run dev/gen_scale_tables.py 100 /tmp/graft_scale/sf10")
     // One representative per plan family, run at TRUE 100× volume (60M
-    // lineitem / 10M events / 500k docs): scan-agg,
-    // multi-join, global window, gaps-and-islands, windowed rollup,
-    // boundary-carried scan, the custom as-of join, the fused text scan,
-    // and exact dedup. doc_minhash is probed at 10× only — this corpus
-    // replicates every doc 100 ways, so its OUTPUT is Θ(K²·N) here (24.7M
-    // pairs), which measures the synthetic data, not the plan.
+    // lineitem / 10M events): scan-agg, multi-join, global window,
+    // gaps-and-islands, windowed rollup, boundary-carried scan, the
+    // custom as-of join, the per-step conditional-min funnel and its
+    // streaming-carrier twin over 150k funnel keys, the streaming-carrier
+    // sessionization (10M events folded per key), the exact +
+    // bounded-state MAD pair, the per-user lag Markov matrix,
+    // session-path trajectories, and the exact vs KMV-sketch profile
+    // pair (the exact form pays the Expand + per-distinct hash state;
+    // the sketch form holds 4 KB/column)
     val probes = Seq("q1_pricing_summary", "q3_revenue_by_nation",
       "q8_running_qty_by_supplier", "ev_sessionize", "ev_rollup_60s",
-      "ev_value_drops", "ev_asof_last_signup", "doc_langid",
-      "doc_fingerprint_dedup",
-      // round-6 addition: the broadcast decontamination probe (50M
-      // exploded grams through a broadcast hash join at 100×)
-      "doc_decontam",
-      // round-10 additions: the per-step conditional-min funnel and its
-      // streaming-carrier twin over 10M events / 150k funnel keys, BPE
-      // merge training (64 fixed iterations over the bounded dict — the
-      // corpus-scale part is the one word-count pass), and the
-      // fixed-point rankers (vocab-bounded df join; query-term-filtered
-      // BM25)
-      "ev_funnel_users", "ev_streaming_funnel", "doc_bpe_vocab",
-      "doc_tfidf_terms", "doc_bm25_topk",
-      // round-10 continuation: the streaming-carrier sessionization
-      // (10M events folded per key) and interpolated LM scoring
-      // (bounded model + 1-row total broadcast)
-      "ev_streaming_sessions", "doc_interp_nll",
-      // round-11 additions: winnowing at 100× on the replica-heavy
-      // corpus (the hot-cap case — 80% of docs are 100-way replicas, so
-      // most fingerprints blow the 50-doc cap and must DROP before the
-      // pair join), the exact + bounded-state MAD pair, the per-user
-      // lag Markov matrix and the streaming dedup carrier over 500k docs
-      "doc_winnow_fingerprints", "doc_winnow_overlap", "ev_mad_anomalies",
-      "ev_mad_anomalies_approx", "ev_markov_transitions",
-      "doc_streaming_dedup",
-      // round-12 additions: duplicated-span detection + trim on the
-      // replica-heavy corpus (near-every gram duplicated — the dup-hash
-      // semi-join passes almost the whole gram stream, the worst case
-      // for the islands window), session-path trajectories over 10M
-      // events, and the exact vs KMV-sketch profile pair (the exact
-      // form pays the Expand + per-distinct hash state; the sketch form
-      // holds 4 KB/column)
-      "doc_dup_spans", "doc_dup_span_trim", "ev_session_paths",
-      "ev_profile", "ev_profile_kmv", "ev_streaming_kmv",
-      "doc_bpe_fertility", "doc_postings")
+      "ev_value_drops", "ev_asof_last_signup",
+      "ev_funnel_users", "ev_streaming_funnel", "ev_streaming_sessions",
+      "ev_mad_anomalies", "ev_mad_anomalies_approx", "ev_markov_transitions",
+      "ev_session_paths", "ev_profile", "ev_profile_kmv", "ev_streaming_kmv")
     val qs = Registry.all.filter(q => probes.contains(q.name))
     assert(qs.size == probes.size, "probe names drifted from the registry")
     def sweep(dir: String): Map[String, Double] = qs.map { q =>
-      graft.queries.BpeQueries.evictTrainMemo() // bill each BPE training
       val t0 = System.nanoTime()
       q.run(spark, dir).queryExecution.toRdd.count()
       spark.catalog.clearCache()

@@ -16,7 +16,8 @@ trait SparkSpec extends AnyFunSuite {
     .config(GraftSession.CodegenReuse)
     .getOrCreate()
 
-  def sf(name: String): String = s"/root/testdata/sf0.001"
+  /** The smallest generated scale factor (TESTDATA.md). */
+  val SfDir = "/root/testdata/sf0.001"
 
   val RefXml =
     "/root/reference/data/log_example/simlogs/trace.172.17.0.3.4500.1763869069.8tVoRN.0.1.xml"

@@ -14,7 +14,7 @@ class StoreSpec extends SparkSpec {
 
   test("events store partition-prunes time-range queries") {
     val dir = Files.createTempDirectory("graft-store").toString + "/events"
-    val events = Tables(spark, sf(""), "events")
+    val events = Tables(spark, SfDir, "events")
     Store.writeEvents(events, dir)
 
     val stored = Store.readEvents(spark, dir)
@@ -39,7 +39,7 @@ class StoreSpec extends SparkSpec {
   test("compaction merges streaming-append small files, preserving content " +
       "and pruning") {
     val dir = Files.createTempDirectory("graft-compact").toString + "/events"
-    val events = Tables(spark, sf(""), "events").cache()
+    val events = Tables(spark, SfDir, "events").cache()
     // simulate the streaming ingest's per-micro-batch appends: 6 slices
     // written separately → one file set per append per touched date
     val sliced = events.withColumn("__s", pmod(col("event_id"), lit(6)))
@@ -77,7 +77,7 @@ class StoreSpec extends SparkSpec {
     // intact. A reader thread hammers the store while three compactions
     // (including the flat→versioned migration) swap under it.
     val dir = Files.createTempDirectory("graft-swap").toString + "/events"
-    val events = Tables(spark, sf(""), "events")
+    val events = Tables(spark, SfDir, "events")
     Store.writeEvents(events, dir)
     val expected = events.count()
     @volatile var stop = false
@@ -111,7 +111,7 @@ class StoreSpec extends SparkSpec {
 
   test("a failed pointer flip rolls the compaction back cleanly") {
     val dir = Files.createTempDirectory("graft-rollback").toString + "/events"
-    Store.writeEvents(Tables(spark, sf(""), "events"), dir)
+    Store.writeEvents(Tables(spark, SfDir, "events"), dir)
     val before = Store.readEvents(spark, dir).count()
     // poison the flip: a NON-EMPTY DIRECTORY at the _current path cannot
     // be atomically replaced by the pointer file, so the rename throws
@@ -137,7 +137,7 @@ class StoreSpec extends SparkSpec {
 
   test("appends racing a compaction fail LOUDLY, never silently drop") {
     val dir = Files.createTempDirectory("graft-lock").toString + "/events"
-    val events = Tables(spark, sf(""), "events").limit(50).cache()
+    val events = Tables(spark, SfDir, "events").limit(50).cache()
     Store.writeEvents(events, dir)
     val before = Store.readEvents(spark, dir).count()
     // a compactor holds _writer.lock for its whole window — simulate
@@ -177,8 +177,8 @@ class StoreSpec extends SparkSpec {
         scala.reflect.io.Directory(loc).deleteRecursively()
     }
     cleanup()
-    val orders = Tables(spark, sf(""), "orders")
-    val lineitem = Tables(spark, sf(""), "lineitem")
+    val orders = Tables(spark, SfDir, "orders")
+    val lineitem = Tables(spark, SfDir, "lineitem")
     Store.writeBucketed(orders, "orders_b", "o_orderkey", 8)
     Store.writeBucketed(
       lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),

@@ -788,94 +788,6 @@ class StreamingSpec extends SparkSpec {
     assert(!alerts.exists(_._1 == 12L), "novel doc must not alert")
   }
 
-  test("streaming clean pipeline: stateless per-doc keep decisions equal the " +
-      "batch gates across 3 micro-batches incl. late data") {
-    implicit val sqlCtx = spark.sqlContext
-    graft.functions.MinHashAgg.register(spark)
-    val filler = (1 to 30).map(i => s"w$i").mkString(" ")
-    val corpusDocs = Seq(
-      (0L, s"the quick brown fox jumps over the lazy dog $filler"),
-      (1L, s"completely different content about spark shuffles and joins $filler"))
-      .toDF("doc_id", "text")
-    val evalDocs = Seq(
-      (100L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
-      .toDF("doc_id", "text")
-    // the three STATIC index tables a continuously-ingesting deployment
-    // keeps: per-band MinHash buckets, content hashes, benchmark grams
-    val corpusBands = graft.ops.Dedup.bands(
-      graft.ops.Dedup.minhashSignatures(graft.ops.Dedup.shingles(corpusDocs)))
-    val corpusHashes = corpusDocs.select(md5(col("text")).as("content_hash"))
-    val evalGrams = graft.ops.Decontam.ngramHashes(evalDocs, 8)
-
-    val input = MemoryStream[(Timestamp, Long, String)]
-    val docs = input.toDF().toDF("ts", "doc_id", "text")
-    val q = StreamingOps.cleanStream(docs, corpusBands, corpusHashes, evalGrams)
-      .writeStream.format("memory").queryName("clean_out")
-      .outputMode(OutputMode.Append).start()
-
-    val batches = Seq(
-      Seq( // batch 1: quality-fail, repetitive, clean
-        (ts("2025-01-01 00:00:01"), 10L, "too short"),
-        (ts("2025-01-01 00:00:02"), 11L,
-          (1 to 15).map(_ => "x y").mkString(" ")),
-        (ts("2025-01-01 00:00:03"), 12L,
-          s"novel clean document with plenty of fresh content $filler")),
-      Seq( // batch 2: exact dup of corpus doc 0, near-dup of corpus doc 1
-        (ts("2025-01-01 00:01:01"), 20L,
-          s"the quick brown fox jumps over the lazy dog $filler"),
-        (ts("2025-01-01 00:01:02"), 21L,
-          s"completely different content about spark shuffles and hashing $filler")),
-      Seq( // batch 3: LATE rows (ts before batch 1) — stateless gates
-           // must decide them identically; one contaminated, one clean
-        (ts("2024-12-31 23:59:58"), 30L,
-          s"alpha beta gamma delta epsilon zeta eta theta iota kappa $filler"),
-        (ts("2024-12-31 23:59:59"), 31L,
-          s"another perfectly ordinary clean training document here $filler")))
-    batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
-    q.stop()
-    val streamed = spark.table("clean_out")
-      .collect().map(r => r.getLong(0) ->
-        (r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5)))
-      .toMap
-
-    // batch comparator, gate by gate, over ALL streamed docs at once
-    val newDocs = batches.flatten.map { case (_, id, t) => (id, t) }
-      .toDF("doc_id", "text")
-    val toks = split(col("text"), " ")
-    val qual = newDocs.select(col("doc_id"),
-      when(size(toks) >= 20 &&
-        size(filter(toks, x => x.isin("the", "a"))).cast("double") /
-          size(toks) < 0.1, 1).otherwise(0).as("q")).collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val rep = graft.ops.TextAnalysis.repetitionSignals(newDocs)
-      .select(col("doc_id"),
-        when(col("top2_frac") < 0.18, 1).otherwise(0).as("r")).collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val ded = graft.ops.Dedup.incrementalAdmit(newDocs, corpusDocs)
-      .select("doc_id", "admit").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val con = graft.ops.Decontam.contamination(newDocs, evalDocs)
-      .select(col("doc_id"),
-        when(col("contaminated") === 0, 1).otherwise(0).as("c")).collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-
-    assert(streamed.keySet === Set(10L, 11L, 12L, 20L, 21L, 30L, 31L),
-      "exactly one decision row per ingested doc")
-    streamed.foreach { case (id, (sq, sr, sd, sc, sk)) =>
-      assert((sq, sr, sd, sc) === ((qual(id), rep(id), ded(id), con(id))),
-        s"doc $id gate mismatch vs batch")
-      assert(sk === (if (sq == 1 && sr == 1 && sd == 1 && sc == 1) 1 else 0))
-    }
-    // the corpus planted one of each failure mode — prove each gate fired
-    assert(streamed(10L)._1 === 0, "short doc fails quality")
-    assert(streamed(11L)._2 === 0, "degenerate x-y doc fails repetition")
-    assert(streamed(20L)._3 === 0, "exact dup fails dedup")
-    assert(streamed(21L)._3 === 0, "near dup fails dedup")
-    assert(streamed(30L)._4 === 0, "benchmark text fails decontam")
-    assert(streamed(12L)._5 === 1 && streamed(31L)._5 === 1,
-      "clean docs keep=1 (incl. the late-arriving one)")
-  }
-
   test("per-row top2GramStats fold equals the batch repetitionSignals aggregate") {
     // fixture corpus + adversarial shapes (ties, single word, empty text,
     // double spaces → empty tokens, non-ASCII) + 300 fuzzed docs over a
@@ -885,7 +797,7 @@ class StreamingSpec extends SparkSpec {
     val fuzzed = (9100L until 9400L).map(i => (i,
       Seq.fill(rng.nextInt(12))(vocab(rng.nextInt(vocab.length)))
         .mkString(" ")))
-    val docs = graft.Tables(spark, sf(""), "documents")
+    val docs = graft.Tables(spark, SfDir, "documents")
       .select(col("doc_id"), col("text"))
       .unionAll((Seq((9001L, "x y z w"), (9002L, "solo"), (9003L, ""),
         (9004L, "b a b a b"), (9005L, "t t t t t t"),
@@ -903,49 +815,6 @@ class StreamingSpec extends SparkSpec {
     batch.foreach { case (id, want) =>
       assert(perRow(id) === want, s"doc $id")
     }
-  }
-
-  test("streaming contamination alerts: stream-static join matches batch decontam") {
-    implicit val sqlCtx = spark.sqlContext
-    val evalDocs = Seq(
-      (100L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
-      .toDF("doc_id", "text")
-    val evalGrams = graft.ops.Decontam.ngramHashes(evalDocs, 8)
-
-    val input = MemoryStream[(Long, String)]
-    val docs = input.toDF().toDF("doc_id", "text")
-    val q = StreamingOps.contaminationAlerts(docs, evalGrams)
-      .writeStream.format("memory").queryName("contam_out")
-      .outputMode(OutputMode.Append).start()
-    input.addData(
-      // shares its first 8-word window with the eval doc → alert
-      (1L, "alpha beta gamma delta epsilon zeta eta theta lambda mu"),
-      // word 8 swapped → no 8-gram window matches → clean
-      (2L, "alpha beta gamma delta epsilon zeta eta thorn lambda mu"))
-    q.processAllAvailable()
-    // stream-static joins are stateless: a later batch still probes
-    input.addData((3L, "zeta eta theta iota kappa one two three four"))
-    q.processAllAvailable()
-    q.stop()
-    val hits = spark.table("contam_out").select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    // doc 3 contains "zeta eta theta iota kappa" but no FULL eval
-    // 8-gram (the eval doc's windows all start at alpha/beta/gamma)
-    assert(hits === Set(1L))
-
-    // per-doc alert counts equal the batch decontamination counts
-    val batch = graft.ops.Decontam.contamination(
-      Seq((1L, "alpha beta gamma delta epsilon zeta eta theta lambda mu"),
-        (2L, "alpha beta gamma delta epsilon zeta eta thorn lambda mu"),
-        (3L, "zeta eta theta iota kappa one two three four"))
-        .toDF("doc_id", "text"),
-      evalDocs)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    val streamCounts = spark.table("contam_out").groupBy("doc_id").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(batch(1L) === streamCounts.getOrElse(1L, 0L))
-    assert(batch(2L) === 0L && !streamCounts.contains(2L))
-    assert(batch(3L) === 0L && !streamCounts.contains(3L))
   }
 
   test("running KMV: multi-trigger == batch under a SHUFFLED permutation") {

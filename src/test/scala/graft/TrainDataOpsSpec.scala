@@ -2,20 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Decontam, Sampling, TextAnalysis}
+import graft.ops.{Sampling, TextAnalysis}
 
-/** Training-data pipeline additions: n-gram decontamination, repetition
-  * signals, token-budget sampling. Each op is pinned
+/** Training-data pipeline additions: repetition and language-model
+  * signals, passage dedup, hash-ordered sampling. Each op is pinned
   * against a naive in-memory re-derivation. */
 class TrainDataOpsSpec extends SparkSpec {
 
   import spark.implicits._
-
-  private def ngrams(text: String, n: Int): Set[String] = {
-    val w = text.split(" ", -1)
-    if (w.length <= n) Set(w.mkString(" "))
-    else w.sliding(n).map(_.mkString(" ")).toSet
-  }
 
   test("dupPassages matches a naive windowed-hash model, incl. short docs") {
     import graft.ops.Dedup
@@ -457,95 +451,6 @@ class TrainDataOpsSpec extends SparkSpec {
     assert(byId(4L) < byId(3L), "all-common doc must out-score the OOV doc")
   }
 
-  test("Decontam: per-doc contaminated gram counts match a naive set intersection") {
-    val docs = Seq(
-      (0L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-      (1L, "alpha beta gamma delta epsilon zeta eta thorn lambda mu"),
-      (2L, "one two three four five six seven eight nine ten"),
-      (3L, "short doc"),
-      (4L, "alpha beta gamma delta epsilon zeta eta theta iota kappa nu xi"))
-      .toDF("doc_id", "text")
-    val eval = docs.filter(col("doc_id") === 0L)
-    val train = docs.filter(col("doc_id") =!= 0L)
-
-    val got = Decontam.contamination(train, eval, n = 8)
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getInt(3))))
-      .toMap
-
-    val evalGrams = ngrams("alpha beta gamma delta epsilon zeta eta theta iota kappa", 8)
-    val trainTexts = Map(
-      1L -> "alpha beta gamma delta epsilon zeta eta thorn lambda mu",
-      2L -> "one two three four five six seven eight nine ten",
-      3L -> "short doc",
-      4L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa nu xi")
-    trainTexts.foreach { case (id, t) =>
-      val g = ngrams(t, 8)
-      val hits = (g & evalGrams).size.toLong
-      assert(got(id) === ((g.size.toLong, hits, if (hits > 0) 1 else 0)),
-        s"doc $id")
-    }
-    // doc 4 contains doc 0's full 8-gram window run → contaminated
-    assert(got(4L)._3 === 1)
-    // doc 1 swaps word 8 (theta -> thorn), so no 8-word window matches
-    assert(got(1L)._3 === 0)
-  }
-
-  test("Decontam: randomized corpora match the naive model (100 docs, 3 gram sizes)") {
-    val rng = new scala.util.Random(20260814L)
-    val vocab = Array("aa", "bb", "cc", "dd", "ee")
-    def randDoc(): String =
-      Seq.fill(1 + rng.nextInt(20))(vocab(rng.nextInt(vocab.length)))
-        .mkString(" ")
-    val texts = (0L until 100L).map(i => (i, randDoc()))
-    val df = texts.toDF("doc_id", "text")
-    val eval = df.filter(col("doc_id") % 5 === 0)
-    val train = df.filter(col("doc_id") % 5 =!= 0)
-    val evalTexts = texts.filter(_._1 % 5 == 0).map(_._2)
-    Seq(2, 4, 8).foreach { n =>
-      val evalGrams = evalTexts.flatMap(t => ngrams(t, n)).toSet
-      val got = Decontam.contamination(train, eval, n)
-        .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
-        .toMap
-      texts.filter(_._1 % 5 != 0).foreach { case (id, t) =>
-        val g = ngrams(t, n)
-        assert(got(id) === ((g.size.toLong, (g & evalGrams).size.toLong)),
-          s"n=$n doc $id text '$t'")
-      }
-    }
-  }
-
-  test("contaminationReport: per-eval-doc leak counts match a naive model") {
-    val docs = Seq(
-      (0L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-      (7L, "one two three four five six seven eight nine ten"),
-      (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa nu"),
-      (2L, "x alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-      (3L, "totally unrelated words live in this training document here"))
-      .toDF("doc_id", "text")
-    val eval = docs.filter(col("doc_id") % 7 === 0)
-    val train = docs.filter(col("doc_id") % 7 =!= 0)
-    val got = Decontam.contaminationReport(train, eval)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    // naive model over the same 8-gram definition
-    val texts = Map(0L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa",
-      7L -> "one two three four five six seven eight nine ten")
-    val trains = Map(
-      1L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa nu",
-      2L -> "x alpha beta gamma delta epsilon zeta eta theta iota kappa",
-      3L -> "totally unrelated words live in this training document here")
-    texts.foreach { case (id, t) =>
-      val eg = ngrams(t, 8)
-      val leaked = eg.filter(g => trains.values.exists(tt => ngrams(tt, 8)(g)))
-      val carriers = trains.count { case (_, tt) => (ngrams(tt, 8) & eg).nonEmpty }
-      assert(got(id) === ((eg.size.toLong, leaked.size.toLong, carriers.toLong)),
-        s"eval doc $id")
-    }
-    // doc 0's windows leak into docs 1 and 2 but not 3; doc 7 is clean
-    assert(got(0L)._3 === 2L)
-    assert(got(7L) === ((3L, 0L, 0L)))
-  }
-
   test("redact: email/ip/digit-run scrub and counts, in chain order") {
     val rows = Seq(
       (1L, "mail me at jo.doe+x@sub.ex-mail.com or 10.0.37.7 ref 12345678 ok"),
@@ -642,64 +547,6 @@ class TrainDataOpsSpec extends SparkSpec {
       "graft_gram_hashes k must be a non-null int literal, got null")
     assert(builderError("3.0") ===
       "graft_gram_hashes k must be a non-null int literal, got 3.0")
-  }
-
-  test("tokenBudgetSample: greedy fill in hash order; deterministic under repartition") {
-    val docs = (0L until 200L).map(i => (i, s"s${i % 3}", 100L + i % 7))
-      .toDF("doc_id", "stratum", "n_tokens")
-    val a = Sampling.tokenBudgetSample(docs, "stratum", "n_tokens", 1000L)
-      .select("doc_id", "cum_tokens", "kept")
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getInt(2)))).toMap
-    val b = Sampling.tokenBudgetSample(docs.repartition(7), "stratum",
-        "n_tokens", 1000L)
-      .select("doc_id", "cum_tokens", "kept")
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getInt(2)))).toMap
-    assert(a === b)
-
-    // naive replay: md5 order within stratum, cumulative fill
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def h(id: Long): String = md.digest(s"$id:sample:v1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    (0 until 3).foreach { s =>
-      val rows = (0L until 200L).filter(_ % 3 == s)
-        .map(i => (i, 100L + i % 7)).sortBy { case (i, _) => (h(i), i) }
-      var cum = 0L
-      rows.foreach { case (id, tok) =>
-        val kept = if (cum < 1000L) 1 else 0
-        cum += tok
-        assert(a(id) === ((cum, kept)), s"doc $id stratum $s")
-      }
-    }
-    // every stratum keeps at least one doc and drops at least one
-    val kept = a.values.map(_._2).sum
-    assert(kept > 0 && kept < 200)
-  }
-
-  test("tokenBudgetMix: per-stratum budgets; absent strata fall to the default") {
-    val docs = (0L until 90L).map(i => (i, s"s${i % 3}", 50L))
-      .toDF("doc_id", "stratum", "n_tokens")
-    val mix = Sampling.tokenBudgetMix(docs, "stratum", "n_tokens",
-      budgets = Map("s0" -> 500L, "s1" -> 100L), defaultBudget = 0L)
-      .select("doc_id", "stratum", "kept", "stratum_budget")
-      .collect()
-    val keptBy = mix.groupBy(_.getString(1))
-      .view.mapValues(_.count(_.getInt(2) == 1)).toMap
-    // 50-token docs: 500 budget keeps 10 (starts at 0..450), 100 keeps 2
-    assert(keptBy("s0") === 10)
-    assert(keptBy("s1") === 2)
-    // s2 is absent from the map → default budget 0 keeps nothing
-    assert(keptBy("s2") === 0)
-    mix.filter(_.getString(1) == "s2").foreach(r =>
-      assert(r.getLong(3) === 0L))
-    // uniform sampler with the same budget for every stratum agrees
-    val uni = Sampling.tokenBudgetSample(docs, "stratum", "n_tokens", 100L)
-      .select("doc_id", "kept").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val mixUni = Sampling.tokenBudgetMix(docs, "stratum", "n_tokens",
-      budgets = Map.empty, defaultBudget = 100L)
-      .select("doc_id", "kept").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(uni === mixUni)
   }
 
   test("incrementalAdmit: exact dup, near dup, and clean docs routed correctly") {
