@@ -110,11 +110,10 @@ object ClusterSmoke {
       spark.catalog.clearCache()
     }
 
-    // Closed-form probes for two ops no registered query reaches: the
+    // Closed-form probe for an op no registered query reaches: the
     // star-loop CC (smallGraphEdges=0 forces the distributed loop — its
     // localCheckpoint blocks live on EXECUTOR block managers here, a
-    // placement local mode cannot test) and the sorted-group packer
-    // (flatMapSortedGroups closure + sorted shuffle on executor JVMs).
+    // placement local mode cannot test).
     import org.apache.spark.sql.functions._
     val n = 20000L
     val k = 97L
@@ -125,16 +124,6 @@ object ClusterSmoke {
       col("component") =!= col("id") - (col("id") % k)).count()
     require(ccBad == 0L && cc.count() == n,
       s"distributed CC on executors: $ccBad mismatches vs closed form")
-
-    val packed = graft.ops.Packing.packGreedy(
-      spark.range(n).select(col("id").as("doc_id"), lit(100L).as("n_tokens")),
-      "doc_id", "n_tokens", budget = 512, buckets = 64)
-    // bucket = id % 64, rank within bucket = id div 64, 5 docs fit a bin
-    val pBad = packed.filter(
-      col("bin") =!= expr("(doc_id div 64) div 5") ||
-      col("fill") =!= (expr("(doc_id div 64) % 5") + 1) * 100).count()
-    require(pBad == 0L && packed.count() == n,
-      s"distributed packGreedy on executors: $pBad mismatches vs closed form")
 
     println("CLUSTER_SMOKE_OK")
     spark.stop()

@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{Ewma, GraftFunctions, RollingHash}
+import graft.functions.{Ewma, GraftFunctions}
 
 /** Session-extension entry point: registers the engine's native Catalyst
   * expressions at session build time, so a cluster deployment gets them
@@ -20,28 +20,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((FunctionIdentifier("graft_dot"),
       info("graft_dot"), GraftFunctions.dotBuilder))
-    ext.injectFunction((FunctionIdentifier("rolling_hash"),
-      info("rolling_hash"), (exprs: Seq[Expression]) => {
-        require(exprs.length == 1,
-          s"rolling_hash expects (text), got ${exprs.length} arguments")
-        RollingHash(exprs.head)
-      }))
     ext.injectFunction((FunctionIdentifier("graft_ewma"),
       info("graft_ewma"), Ewma.builder))
     ext.injectFunction((FunctionIdentifier("graft_md5_seeds"),
       info("graft_md5_seeds"), graft.functions.TextFunctions.md5SeedsBuilder))
     ext.injectFunction((FunctionIdentifier("simhash32"),
       info("simhash32"), graft.functions.TextFunctions.simhashBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_langid"),
-      info("graft_langid"), graft.functions.TextFunctions.langIdBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_char_entropy"),
-      info("graft_char_entropy"),
-      graft.functions.TextFunctions.charEntropyBuilder))
     ext.injectFunction((FunctionIdentifier("graft_split_text"),
       info("graft_split_text"), graft.functions.TextFunctions.splitTextBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_repetition_stats"),
-      info("graft_repetition_stats"),
-      graft.functions.TextFunctions.repetitionStatsBuilder))
     ext.injectFunction((FunctionIdentifier("graft_gram_hashes"),
       info("graft_gram_hashes"),
       graft.functions.TextFunctions.gramHashesBuilder))

@@ -8,37 +8,13 @@ import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Polynomial rolling-hash document fingerprint: h = (h*31 + codepoint)
-  * mod 1_000_000_007, over unicode codepoints. Deterministic, partition
-  * independent, and cheap enough to run inline with the scan (whole-stage
-  * codegen). The same fold is expressible in DuckDB
-  * (list_reduce over unicode()) so fingerprints are oracle-checkable.
+/** Polynomial rolling-hash fingerprint: h = (h*31 + codepoint)
+  * mod 1_000_000_007, over unicode codepoints. Deterministic and cheap;
+  * the LLM boundary's stub client keys its canned responses on it.
   */
-case class RollingHash(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"rolling_hash expects STRING, got ${other.sql}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    RollingHash.hash(v.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.RollingHash.hash($c.toString())")
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
 object RollingHash {
   final val Mod = 1000000007L
 
-  /** Shared by interpreted + generated code paths. */
   def hash(s: String): Long = {
     var h = 0L
     var i = 0
@@ -157,8 +133,8 @@ object SimHash {
   def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
   /** Static entry shared by the interpreted and generated code paths of
-    * [[SimHash32]] (the RollingHash pattern — a name no class member
-    * shadows, so scalac emits the static forwarder codegen calls). */
+    * [[SimHash32]] (a name no class member shadows, so scalac emits the
+    * static forwarder codegen calls). */
   def hashU(s: UTF8String): Long = simhash(s.toString)
 }
 
@@ -183,49 +159,6 @@ case class SimHash32(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
-}
-
-/** Native codegen form of the language-ID heuristic
-  * (graft.ops.TextAnalysis.LangId.detect — the scoring table and decision
-  * procedure live there, next to the DuckDB oracle that re-derives them).
-  * Null routes to "unknown" like the Scala function, so the expression is
-  * NOT null-intolerant: eval handles null itself instead of inheriting
-  * UnaryExpression's null short-circuit. */
-case class LangIdExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_langid expects STRING, got ${other.sql}")
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    LangIdExpr.detectU(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        UTF8String ${ev.value} = graft.functions.LangIdExpr.detectU(
-          ${c.isNull} ? null : ${c.value});
-      """, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-object LangIdExpr {
-  /** Static entry shared by interpreted + generated code. */
-  def detectU(s: UTF8String): UTF8String =
-    UTF8String.fromString(
-      graft.ops.TextAnalysis.LangId.detect(if (s == null) null else s.toString))
 }
 
 /** Native codegen form of the recursive character splitter
@@ -280,186 +213,6 @@ object SplitTextExpr {
       else graft.trace.Chunker.splitText(s.toString, chunkSize, overlap)
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
       pieces.map(UTF8String.fromString).toArray[Any])
-  }
-}
-
-/** Native per-row character-entropy statistics: one compiled O(L) pass
-  * over the UTF-16 units returning [n_chars_seen, distinct_chars,
-  * entropy_micro] (H = log2fp(L) − (Σ n_c·log2fp(n_c)) div L, every
-  * log2 micro-rounded so the statistic is an exact BIGINT — see
-  * TextAnalysis.charEntropyStats' contract). A HigherOrderFunction fold
-  * computes the same values but interprets ~5 µs/char (measured 10.7 s
-  * for sf0.1's 1.75M chars); this expression runs inside whole-stage
-  * codegen at ~ns/char. ASCII counts hit a flat 128-slot array; other
-  * units fall to a map — same multiset either way. */
-case class CharEntropyExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_char_entropy expects STRING, got ${other.sql}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    CharEntropyExpr.stats(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.CharEntropyExpr.stats($c)")
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-object CharEntropyExpr {
-  private def log2fp(n: Long): Long =
-    Math.round(Math.log(n.toDouble) / Math.log(2.0) * 1e6)
-
-  def stats(u: UTF8String): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val s = u.toString
-    val len = s.length.toLong
-    if (len == 0L)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array(0L, 0L, 0L))
-    val ascii = new Array[Long](128)
-    var other: java.util.HashMap[Character, Long] = null
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c < 128) ascii(c) += 1L
-      else {
-        if (other == null) other = new java.util.HashMap[Character, Long]()
-        other.merge(c, 1L, (a, b) => a + b)
-      }
-      i += 1
-    }
-    var sum = 0L
-    var k = 0L
-    var j = 0
-    while (j < 128) {
-      val n = ascii(j)
-      if (n > 0L) { sum += n * log2fp(n); k += 1L }
-      j += 1
-    }
-    if (other != null) {
-      val it = other.values().iterator()
-      k += other.size().toLong
-      while (it.hasNext) { val n = it.next(); sum += n * log2fp(n) }
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Array(len, k, log2fp(len) - sum / len))
-  }
-}
-
-/** Native per-row Gopher-repetition statistics (Rae et al. 2021 §A1.1):
-  * one compiled pass over the doc's single-space word stream returning
-  * struct(top2_gram, top2_count, dup3_chars) — the most frequent word
-  * 2-gram (ties: count DESC, gram ASC in binary/UTF8 order, exactly the
-  * batch aggregate's min_by key) and the character mass of word 3-grams
-  * occurring more than once. Value-identical to the former two
-  * explode + groupBy passes of TextAnalysis.repetitionSignals, which
-  * shuffled every corpus gram twice for what is a purely per-document
-  * statistic; this runs inside whole-stage codegen with zero exchanges.
-  *
-  * Tokenization replicates split(text, ' ') with Java limit -1 (empty
-  * tokens between consecutive spaces and at the ends are KEPT); n-grams
-  * replicate transform(sequence(1, greatest(len-n+1, 1)), slice + single-
-  * space concat_ws) including the short-doc clip (a doc under n words
-  * yields its whole text as the single gram). Because the joiner equals
-  * the splitter, every gram is a contiguous byte slice of the original
-  * UTF-8 buffer — counted zero-copy. Gram lengths count codepoints
-  * (Spark length() == UTF8String.numChars == DuckDB length). */
-case class RepetitionStatsExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = RepetitionStatsExpr.OutType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_repetition_stats expects STRING, got ${other.sql}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    RepetitionStatsExpr.stats(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.RepetitionStatsExpr.stats($c)")
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-object RepetitionStatsExpr {
-  val OutType: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("top2_gram", StringType,
-        nullable = false),
-      org.apache.spark.sql.types.StructField("top2_count", LongType,
-        nullable = false),
-      org.apache.spark.sql.types.StructField("dup3_chars", LongType,
-        nullable = false)))
-
-  /** Shared by interpreted + generated code paths. */
-  def stats(u: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
-    val bytes = u.getBytes
-    // token boundaries: split on the single space byte (0x20 never occurs
-    // inside a multi-byte UTF-8 sequence), limit -1 semantics (empty
-    // tokens kept, including trailing)
-    val starts = new java.util.ArrayList[Integer]()
-    starts.add(0)
-    var i = 0
-    while (i < bytes.length) {
-      if (bytes(i) == 0x20) starts.add(i + 1)
-      i += 1
-    }
-    val nTok = starts.size()
-    def tokStart(t: Int): Int = starts.get(t)
-    def tokEnd(t: Int): Int =
-      if (t == nTok - 1) bytes.length else starts.get(t + 1) - 1
-    // count n-grams as byte slices [tokStart(i), tokEnd(i+n-1)) — the
-    // single-space joiner equals the splitter, so the gram IS the
-    // original substring; short docs yield one clipped whole-array gram
-    def gramCounts(n: Int): java.util.HashMap[UTF8String, Array[Long]] = {
-      val m = new java.util.HashMap[UTF8String, Array[Long]]()
-      val nGrams = math.max(nTok - (n - 1), 1)
-      var g = 0
-      while (g < nGrams) {
-        val from = tokStart(g)
-        val until = tokEnd(math.min(g + n - 1, nTok - 1))
-        val gram = UTF8String.fromBytes(bytes, from, until - from)
-        val c = m.get(gram)
-        if (c == null) m.put(gram, Array(1L)) else c(0) += 1L
-        g += 1
-      }
-      m
-    }
-    val g2 = gramCounts(2)
-    var bestCnt = 0L
-    var bestGram: UTF8String = null
-    val it2 = g2.entrySet().iterator()
-    while (it2.hasNext) {
-      val e = it2.next()
-      val c = e.getValue()(0)
-      if (c > bestCnt ||
-          (c == bestCnt && e.getKey.compareTo(bestGram) < 0)) {
-        bestCnt = c
-        bestGram = e.getKey
-      }
-    }
-    val g3 = gramCounts(3)
-    var dup3 = 0L
-    val it3 = g3.entrySet().iterator()
-    while (it3.hasNext) {
-      val e = it3.next()
-      val c = e.getValue()(0)
-      if (c > 1L) dup3 += c * e.getKey.numChars()
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](bestGram, bestCnt, dup3))
   }
 }
 
@@ -590,18 +343,6 @@ object TextFunctions {
     SimHash32(exprs.head)
   }
 
-  val charEntropyBuilder: Seq[Expression] => Expression = exprs => {
-    require(exprs.length == 1,
-      s"graft_char_entropy expects (text), got ${exprs.length} arguments")
-    CharEntropyExpr(exprs.head)
-  }
-
-  val langIdBuilder: Seq[Expression] => Expression = exprs => {
-    require(exprs.length == 1,
-      s"graft_langid expects (text), got ${exprs.length} arguments")
-    LangIdExpr(exprs.head)
-  }
-
   val gramHashesBuilder: Seq[Expression] => Expression = exprs => {
     require(exprs.length == 4,
       s"graft_gram_hashes expects (text, k, clip, hex), got ${exprs.length} arguments")
@@ -621,12 +362,6 @@ object TextFunctions {
       lt(exprs(3), "hex", "boolean", _.toBoolean))
   }
 
-  val repetitionStatsBuilder: Seq[Expression] => Expression = exprs => {
-    require(exprs.length == 1,
-      s"graft_repetition_stats expects (text), got ${exprs.length} arguments")
-    RepetitionStatsExpr(exprs.head)
-  }
-
   val splitTextBuilder: Seq[Expression] => Expression = exprs => {
     require(exprs.length == 3,
       s"graft_split_text expects (text, chunkSize, overlap), got ${exprs.length} arguments")
@@ -642,38 +377,20 @@ object TextFunctions {
 
   def register(spark: SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_md5_seeds", md5SeedsBuilder, "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "simhash32", simhashBuilder, "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_langid", langIdBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_char_entropy", charEntropyBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_split_text", splitTextBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_repetition_stats", repetitionStatsBuilder, "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_gram_hashes", gramHashesBuilder, "built-in")
   }
 
-  def rollingHash(c: Column): Column = call_function("rolling_hash", c)
-  // The three below self-register on the ACTIVE session (these are leaf
+  // The helpers below self-register on the ACTIVE session (these are leaf
   // projections built from ops code that holds only a Column, not a
   // session); GraftExtensions registers the same builders cluster-wide.
   def simhash32(c: Column): Column = {
     register(SparkSession.active); call_function("simhash32", c)
-  }
-  def langId(c: Column): Column = {
-    register(SparkSession.active); call_function("graft_langid", c)
-  }
-  def charEntropy(c: Column): Column = {
-    register(SparkSession.active); call_function("graft_char_entropy", c)
-  }
-  def repetitionStats(c: Column): Column = {
-    register(SparkSession.active); call_function("graft_repetition_stats", c)
   }
   /** 60-bit gram hashes (the winnow/dup-span BIGINT recipe). */
   def gramHash60(c: Column, k: Int, clip: Boolean): Column = {
@@ -687,8 +404,14 @@ object TextFunctions {
     import org.apache.spark.sql.functions.lit
     call_function("graft_gram_hashes", c, lit(k), lit(clip), lit(true))
   }
+  /** Registers only `graft_split_text`, and only when the session lacks
+    * it: the trace chunker calls this once per `splitChunks`. */
   def splitText(c: Column, chunkSize: Int, overlap: Int): Column = {
-    register(SparkSession.active)
+    val spark = SparkSession.active
+    if (!spark.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier("graft_split_text")))
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        "graft_split_text", splitTextBuilder, "built-in")
     call_function("graft_split_text", c,
       org.apache.spark.sql.functions.lit(chunkSize),
       org.apache.spark.sql.functions.lit(overlap))

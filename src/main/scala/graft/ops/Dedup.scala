@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Deduplication library for document corpora: exact, normalized
-  * fingerprint, word-shingle Jaccard, and MinHash-LSH. All hashing is
+/** Deduplication library for document corpora: exact content hash,
+  * word-shingle Jaccard, and MinHash-LSH. All hashing is
   * md5/xxhash based — deterministic under any partitioning and
   * reproducible across engines.
   *
@@ -49,9 +49,9 @@ object Dedup {
     * inflating winnowOverlap's shared_fps with false pairs the hot cap
     * cannot catch; 60 bits pushes the bound past 10⁹ distinct grams.
     * HASH-VERSION BREAK (round 11): the width change 32 → 60 bits means
-    * fingerprints persisted by earlier library versions (e.g. stores
-    * feeding `StreamingOps.runningDedup` admission state keyed on the
-    * old 32-bit `h`) are known-stale, not quietly disjoint — downstream
+    * fingerprints persisted by earlier library versions (e.g. admission
+    * state keyed on the old 32-bit `h`) are known-stale, not quietly
+    * disjoint — downstream
     * state keyed on old hashes must be rebuilt from text, and any
     * future width change carries the same contract.
     * Short docs (< win grams) winnow their single clipped window.
@@ -148,11 +148,6 @@ object Dedup {
       .select(col("shingle"))
     sh.join(freq, Seq("shingle"), "left_anti")
   }
-
-  /** Whitespace/case-normalized content fingerprint — the single
-    * definition batch and streaming dedup share. */
-  def fingerprint(text: Column): Column =
-    md5(lower(trim(regexp_replace(text, "\\s+", " "))))
 
   /** Shared Jaccard verification: pair shingle-intersection counts +
     * per-doc sizes → jaccard. `candidates` (doc_a, doc_b) restricts the

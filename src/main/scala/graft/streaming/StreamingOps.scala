@@ -43,20 +43,6 @@ object StreamingOps {
         col("session_window.end").as("end"), col("n_events"),
         col("max_severity"))
 
-  /** Streaming exact dedup on content hash: first occurrence of each
-    * fingerprint passes, later duplicates are dropped. State is bounded
-    * by the watermark — a fingerprint's dedup state expires once no
-    * older-than-watermark duplicate can arrive, which is what makes
-    * continuous corpus ingest (the 100 TB training-data path) feasible:
-    * unbounded dedup state is recoverable from the batch table, the
-    * stream only guards the recent horizon. */
-  def dedupStream(docs: DataFrame, textCol: String = "text",
-      watermark: String = "10 minutes"): DataFrame =
-    docs
-      .withWatermark("ts", watermark)
-      .withColumn("fingerprint", graft.ops.Dedup.fingerprint(col(textCol)))
-      .dropDuplicatesWithinWatermark("fingerprint")
-
   /** Continuous ingest into the partitioned event store: every
     * micro-batch is appended through the SAME writer the batch path uses
     * (`Store.writeEvents` — event_date directory partitioning, ts-sorted
@@ -76,61 +62,13 @@ object StreamingOps {
       }
       .start()
 
-  /** Streaming near-duplicate ingest alerts: each arriving doc's MinHash
-    * signature is computed STATELESSLY as a per-row projection (array_min
-    * over the doc's shingle array per seed — value-identical to the
-    * batch MinHashAgg, which is a groupBy aggregate and therefore not
-    * stream-friendly without state), banded, and probed against the
-    * STATIC corpus band index (`Dedup.bands(Dedup.minhashSignatures(...))`
-    * of the existing corpus — the same stored index the batch
-    * `incrementalAdmit` probes). Stream-static inner join → stateless,
-    * no watermark. Emits one row per (doc_id, old_id, band) collision —
-    * NOT distinct-ed (distinct on a stream would need state); a pair
-    * colliding in several bands alerts once per band, dedupe downstream
-    * if alert volume matters. */
-  def nearDupAlerts(docs: DataFrame, corpusBands: DataFrame,
-      hashes: Int = 16, bandCount: Int = 4, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val rows = hashes / bandCount
-    val bandStructs = (0 until bandCount).map { k =>
-      struct(lit(k).as("band"), bandHash(k, rows).as("bh"))
-    }
-    docs
-      .withColumn("__w", split(col(textCol), " "))
-      .withColumn("__sh", shingleArray)
-      .select(col(idCol) +: sigCols(hashes): _*)
-      .select(col(idCol), explode(array(bandStructs: _*)).as("b"))
-      .select(col(idCol), col("b.band").as("band"), col("b.bh").as("bh"))
-      .join(broadcast(
-        corpusBands.select(col("doc_id").as("old_id"), col("band"), col("bh"))),
-        Seq("band", "bh"), "inner")
-      .select(col(idCol), col("old_id"), col("band"))
-  }
-
-  /** 3-word shingle array over the pre-split `__w` column — the per-row
-    * twin of Dedup.shingles' explode. */
-  private def shingleArray: org.apache.spark.sql.Column = expr(
-    "array_distinct(transform(sequence(1, greatest(size(__w)-2, 1)), i -> concat_ws(' ', slice(__w, i, 3))))")
-
-  /** Per-row MinHash signature columns `__m0..` over `__sh` —
-    * value-identical to the batch MinHashAgg (min over the shingle set
-    * per seed), as a stateless projection. */
-  private def sigCols(hashes: Int) = (0 until hashes).map { i =>
-    array_min(expr(s"transform(__sh, s -> md5(concat('$i|', s)))"))
-      .as(s"__m$i")
-  }
-
-  /** Band-k hash over `rows` consecutive signature columns. */
-  private def bandHash(k: Int, rows: Int): org.apache.spark.sql.Column =
-    md5(concat((0 until rows).map(r => col(s"__m${rows * k + r}")): _*))
-
   case class DistinctPoint(key: String, value: String,
       ts: java.sql.Timestamp = null)
   case class HllState(n_seen: Long, regs: Array[Byte])
   case class RunningDistinct(key: String, n_seen: Long, zeros: Int,
       est: Double)
 
-  /** State-TTL plumbing shared by the three keyed running carriers.
+  /** State-TTL plumbing shared by the keyed running carriers.
     * `stateTtlMs = 0` (the default) keeps the exact NoTimeout semantics —
     * state lives forever and the batch twin is bit-for-bit unchanged.
     * `stateTtlMs > 0` bounds key-cardinality growth on 100-TB streams
@@ -430,73 +368,6 @@ object StreamingOps {
             val done = t.takeWhile(_ != FunnelUnset)
             Iterator.single(RunningFunnel(key, done.toSeq, done.length))
           }
-          }
-        })
-  }
-
-  case class DedupPoint(key: String, doc_id: Long,
-      ts: java.sql.Timestamp = null)
-  case class DedupAdmit(key: String, doc_id: Long, admitted: Boolean)
-
-  /** Keyed RUNNING exact-dedup — the streaming carrier of fingerprint
-    * dedup (continuous-ingest admission: the first document carrying a
-    * content fingerprint is admitted, every later copy rejected). State
-    * per fingerprint is ONLY the winning doc_id — 8 bytes, TTL-able —
-    * so the admission set never materializes.
-    *
-    * Within a trigger rows fold SORTED by doc_id, so a single-batch
-    * execution admits exactly the per-fingerprint MINIMUM id — the batch
-    * dedup rule, which StreamingSpec's batch-fold case verifies. Across triggers the winner is FIRST-SEEN: a later
-    * trigger cannot dethrone it even with a smaller id (re-admitting
-    * would retract the earlier rejection — unbounded output revision),
-    * which equals the batch rule whenever delivery is id-ordered — the
-    * same contract as the other carriers.
-    *
-    * Memory bounds, precisely: cross-trigger STATE is O(1) per key (the
-    * 8-byte winner), but the per-trigger fold buffers each key's rows
-    * delivered IN THAT TRIGGER (`rows.toArray.sortBy`) — O(rows per key
-    * per trigger) task memory, which in the single-batch oracle
-    * execution is the key's entire history on one task. That is the
-    * verification harness's cost, not the streaming deployment's (a
-    * trigger delivers an interval's worth of rows). Two unbounded-horizon
-    * caveats: (a) with no TTL the state map grows with |distinct
-    * fingerprints| — 8 bytes each, honest but unbounded; admission-
-    * forever semantics at corpus scale belongs to the store-backed
-    * [[graft.ops.Dedup.incrementalAdmit]], with TTL'd runningDedup as
-    * the windowed-recency form; (b) a fingerprint hot WITHIN one trigger
-    * buffers all its copies in the fold — cap the trigger interval, not
-    * this operator. */
-  def runningDedup(points: Dataset[DedupPoint],
-      stateTtlMs: Long = 0L,
-      watermarkDelay: String = "10 minutes"): Dataset[DedupAdmit] = {
-    import points.sparkSession.implicits._
-    val src = if (stateTtlMs > 0L)
-      points.withWatermark("ts", watermarkDelay) else points
-    val timeout = if (stateTtlMs > 0L) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    src
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, timeout)(
-        (key: String, rows: Iterator[DedupPoint],
-            state: GroupState[Long]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val ordered = rows.toArray.sortBy(_.doc_id)
-            val out = Seq.newBuilder[DedupAdmit]
-            var has = state.exists
-            var winner = if (has) state.get else Long.MinValue
-            ordered.foreach { p =>
-              if (!has) {
-                winner = p.doc_id; has = true
-                out += DedupAdmit(key, p.doc_id, admitted = true)
-              } else {
-                out += DedupAdmit(key, p.doc_id, admitted = false)
-              }
-            }
-            if (has) { state.update(winner); armTtl(state, stateTtlMs) }
-            out.result().iterator
           }
         })
   }

@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Dedup, Packing}
+import graft.ops.Dedup
 
-/** Connected components (large-star/small-star) and greedy sequence
-  * packing, each pinned against a driver-side naive model. */
+/** Connected components (large-star/small-star), pinned against a
+  * driver-side union-find model. */
 class PackCcSpec extends SparkSpec {
 
   /** Driver-side union-find — the definitional model. */
@@ -90,46 +90,8 @@ class PackCcSpec extends SparkSpec {
     assert(comp.filter(col("component") =!= col("doc_id")).count() > 0L)
   }
 
-  /** Driver-side greedy fold — the definitional model. */
-  private def greedyModel(rows: Seq[(Long, Long)], budget: Long,
-      buckets: Int): Map[Long, (Long, Long, Long)] =
-    rows.groupBy(_._1 % buckets).flatMap { case (bucket, rs) =>
-      var bin = -1L; var fill = 0L
-      rs.sortBy(_._1).map { case (id, tokens) =>
-        if (bin < 0 || fill + tokens > budget) { bin += 1; fill = tokens }
-        else fill += tokens
-        id -> ((bucket, bin, fill))
-      }
-    }
-
-  test("packGreedy == driver greedy fold, including oversize and empty docs") {
-    import spark.implicits._
-    val rng = new scala.util.Random(7)
-    // token sizes cross the 512 budget in every way: zeros, tiny, large,
-    // oversize (> budget alone), and exact-fit boundary values
-    val rows: Seq[(Long, Long)] = (0L until 400L).map { id =>
-      id -> (rng.nextInt(6) match {
-        case 0 => 0L
-        case 1 => rng.nextInt(20).toLong
-        case 2 => 512L
-        case 3 => 600L + rng.nextInt(400)
-        case 4 => 256L
-        case _ => rng.nextInt(512).toLong
-      })
-    }
-    val got = Packing.packGreedy(rows.toDF("doc_id", "n_tokens"),
-      "doc_id", "n_tokens", budget = 512, buckets = 8)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
-      .toMap
-    assert(got === greedyModel(rows, 512, 8))
-    // no bin below an oversize doc ever exceeds the budget
-    val over = got.values.filter(_._3 > 512)
-    assert(over.nonEmpty) // oversize docs exist and sit alone
-  }
-
   test("distributed star loop + packer at scale: closed-form correctness, " +
       "bounded rounds and wall") {
-    import org.apache.spark.sql.functions.expr
     // 200k nodes in diameter-96 chain blocks — the shape that defeats
     // plain label propagation (O(diameter) rounds) but not the star
     // loop (O(log²)); component(id) = id - id % 97 in closed form, so
@@ -151,34 +113,5 @@ class PackCcSpec extends SparkSpec {
     info(f"distributed CC: $secs%.1f s at 200k nodes (bound $wallBound%.0f s)")
     assert(secs <= wallBound,
       f"distributed CC took $secs%.1f s at 200k nodes (bound $wallBound%.0f s)")
-
-    // 2M docs, constant 100 tokens, 64 buckets: rank = id div 64,
-    // bin = rank div 5, fill = (rank % 5 + 1) * 100
-    val np = 2000000L
-    val t1 = System.nanoTime()
-    val packed = Packing.packGreedy(
-      spark.range(np).select(col("id").as("doc_id"),
-        lit(100L).as("n_tokens")),
-      "doc_id", "n_tokens", budget = 512, buckets = 64)
-    val pBad = packed.filter(
-      col("bin") =!= expr("(doc_id div 64) div 5") ||
-      col("fill") =!= (expr("(doc_id div 64) % 5") + 1) * 100).count()
-    val pSecs = (System.nanoTime() - t1) / 1e9
-    assert(pBad === 0L, s"$pBad/$np rows disagree with the closed form")
-    info(f"packGreedy: $pSecs%.1f s at 2M rows (bound $wallBound%.0f s)")
-    assert(pSecs <= wallBound,
-      f"packGreedy took $pSecs%.1f s at 2M rows (bound $wallBound%.0f s)")
-  }
-
-  test("packGreedy on the documents fixture fills bins near budget") {
-    val docs = Tables(spark, SfDir, "documents")
-      .withColumn("n_tokens",
-        size(expr("regexp_extract_all(text, '\\\\S+', 0)")))
-    val packed = Packing.packGreedy(docs, "doc_id", "n_tokens", 512, 8).cache()
-    assert(packed.count() === docs.count())
-    // bins are dense 0..max per bucket
-    val binStats = packed.groupBy("bucket")
-      .agg(max(col("bin")).as("mx"), countDistinct(col("bin")).as("nb"))
-    assert(binStats.filter(col("nb") =!= col("mx") + 1).count() === 0L)
   }
 }

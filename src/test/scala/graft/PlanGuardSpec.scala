@@ -43,38 +43,59 @@ class PlanGuardSpec extends SparkSpec {
     // native codegen expressions. ANY ScalaUDF in a registered plan is a
     // regression to a path that de-codegens the enclosing stage — no
     // names, no exemptions.
+    // Each query plans under its own try, so one that cannot read its
+    // fixtures does not hide the checks on every query after it.
     val bnljSeen = Set.newBuilder[String]
+    val planned = Set.newBuilder[String]
+    val unplanned = Seq.newBuilder[String]
     val violations = graft.queries.Registry.all
       .filterNot(q => skip(q.name))
       .flatMap { q =>
-        val plan = q.run(spark, SfDir).queryExecution.sparkPlan
-        val product = plan.collect { case c: CartesianProductExec => c }
-          .headOption.map(_ => s"${q.name}: CartesianProduct")
-        val hasBnlj = plan
-          .collect { case b: BroadcastNestedLoopJoinExec => b }.nonEmpty
-        if (hasBnlj) bnljSeen += q.name
-        val bnlj =
-          if (hasBnlj && !allowedBnlj.contains(q.name))
-            Some(s"${q.name}: BroadcastNestedLoopJoin")
-          else None
-        val parserUdfs = plan.flatMap(_.expressions.flatMap(_.collect {
-          case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF =>
-            s"${q.name}: ScalaUDF ${u.udfName.getOrElse(u.function.getClass.getName)}" +
-              " (plans must stay UDF-free — use a native expression)"
-        })).distinct
-        product ++ bnlj ++ parserUdfs
+        try {
+          val plan = q.run(spark, SfDir).queryExecution.sparkPlan
+          planned += q.name
+          val product = plan.collect { case c: CartesianProductExec => c }
+            .headOption.map(_ => s"${q.name}: CartesianProduct")
+          val hasBnlj = plan
+            .collect { case b: BroadcastNestedLoopJoinExec => b }.nonEmpty
+          if (hasBnlj) bnljSeen += q.name
+          val bnlj =
+            if (hasBnlj && !allowedBnlj.contains(q.name))
+              Some(s"${q.name}: BroadcastNestedLoopJoin")
+            else None
+          val parserUdfs = plan.flatMap(_.expressions.flatMap(_.collect {
+            case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF =>
+              s"${q.name}: ScalaUDF ${u.udfName.getOrElse(u.function.getClass.getName)}" +
+                " (plans must stay UDF-free — use a native expression)"
+          })).distinct
+          product ++ bnlj ++ parserUdfs
+        } catch {
+          case scala.util.control.NonFatal(e) =>
+            unplanned += s"${q.name}: ${e.getClass.getSimpleName}: " +
+              String.valueOf(e.getMessage).linesIterator.nextOption()
+                .getOrElse("")
+            Nil
+        }
       }
     // The net stays tight in both directions: an allowlist entry whose
     // plan no longer contains a BNLJ is dead weight that would silently
     // excuse a future regression — remove it when the plan improves.
-    val stale = allowedBnlj.keySet -- bnljSeen.result()
-    assert(stale.isEmpty,
-      s"allowedBnlj entries with no BNLJ in today's plan — remove them: " +
-        stale.toSeq.sorted.mkString(", "))
-    assert(violations.isEmpty,
-      "plans with a product / BNLJ over a side not proven bounded — " +
-        "re-shape as a bucketed equi-join (see RecoveryDetector." +
+    // Only entries whose query planned can be judged stale.
+    val stale = (allowedBnlj.keySet & planned.result()) -- bnljSeen.result()
+    val couldNotPlan = unplanned.result()
+    val failures = Seq(
+      if (stale.isEmpty) None
+      else Some("allowedBnlj entries with no BNLJ in today's plan — " +
+        "remove them: " + stale.toSeq.sorted.mkString(", ")),
+      if (violations.isEmpty) None
+      else Some("plans with a product / BNLJ over a side not proven " +
+        "bounded — re-shape as a bucketed equi-join (see RecoveryDetector." +
         "lookbackJoin) or justify in allowedBnlj:\n" +
-        violations.mkString("\n"))
+        violations.mkString("\n")),
+      if (couldNotPlan.isEmpty) None
+      else Some("queries that could not plan, so none of the checks " +
+        "above covered them:\n" + couldNotPlan.mkString("\n"))
+    ).flatten
+    if (failures.nonEmpty) fail(failures.mkString("\n\n"))
   }
 }

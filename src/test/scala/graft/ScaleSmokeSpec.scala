@@ -94,7 +94,6 @@ class ScaleSmokeSpec extends SparkSpec {
   }
 
   test("text analysis at sf1-equivalent volume: one scan, no collects") {
-    import graft.ops.TextAnalysis
     import graft.trace.Chunker
     val docs0 = Tables(spark, "/root/testdata/sf0.1", "documents")
     val docs = (0 until 25).map(k => docs0.select(
@@ -102,17 +101,6 @@ class ScaleSmokeSpec extends SparkSpec {
         col("text")))
       .reduce(_ unionAll _).cache()
     assert(docs.count() === 125000L)
-
-    // language id + quality + token counting fused into one projection —
-    // a single pass over the corpus, no shuffle until the summary agg
-    val scored = TextAnalysis.qualitySignals(docs)
-      .withColumn("lang", TextAnalysis.detectLanguage(col("text")))
-      .withColumn("bpe_tokens", TextAnalysis.bpeishTokenCount(col("text")))
-    val summary = timed("langid+quality+tokens @125k docs")(
-      scored.groupBy("lang").agg(count(lit(1)).as("n"),
-        sum(col("bpe_tokens")).as("toks")).collect())
-    assert(summary.map(_.getAs[Long]("n")).sum === 125000L)
-    assert(summary.nonEmpty && summary.map(_.getAs[Long]("toks")).sum > 0L)
 
     // recursive 500/100 splitter as a distributed explode — pieces stay
     // bounded by size and every doc's text is covered

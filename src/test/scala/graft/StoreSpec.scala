@@ -213,10 +213,4 @@ class StoreSpec extends SparkSpec {
     // every oracle key corresponds to a registered query
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
-
-  test("langid: CJK routing") {
-    import graft.ops.TextAnalysis
-    assert(TextAnalysis.LangId.detect("今天天气很好我们去公园散步吧") === "zh")
-    assert(TextAnalysis.LangId.detect("the weather is nice today") === "en")
-  }
 }

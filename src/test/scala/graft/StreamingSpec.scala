@@ -457,110 +457,6 @@ class StreamingSpec extends SparkSpec {
       "fresh session must hold only the post-eviction event")
   }
 
-  test("running dedup: first-seen admission across triggers; batch fold = min rule") {
-    implicit val sqlCtx = spark.sqlContext
-    def dp(key: String, id: Long, at: String) =
-      StreamingOps.DedupPoint(key, id, ts(at))
-    val input = MemoryStream[StreamingOps.DedupPoint]
-    val q = StreamingOps.runningDedup(input.toDS())
-      .writeStream.format("memory").queryName("dedup_out")
-      .outputMode(OutputMode.Append).start()
-    // trigger 1 delivered in reverse: the fold must admit the MIN id
-    input.addData(dp("fpA", 7L, "2025-01-01 00:00:02"),
-      dp("fpA", 3L, "2025-01-01 00:00:01"),
-      dp("fpB", 9L, "2025-01-01 00:00:03"))
-    q.processAllAvailable()
-    // trigger 2: a SMALLER id for fpA arrives late — first-seen keeps 3
-    input.addData(dp("fpA", 1L, "2025-01-01 00:01:00"),
-      dp("fpB", 9L, "2025-01-01 00:01:01")) // a literal duplicate row
-    q.processAllAvailable()
-    val rows = spark.table("dedup_out")
-      .as[StreamingOps.DedupAdmit].collect()
-    q.stop()
-    val admitted = rows.filter(_.admitted).map(r => (r.key, r.doc_id)).toSet
-    assert(admitted === Set(("fpA", 3L), ("fpB", 9L)),
-      s"winners must be first-seen minima, got $admitted")
-    assert(rows.count(r => r.key == "fpA" && !r.admitted) == 2,
-      "both later fpA copies rejected (incl. the smaller late id)")
-    assert(rows.count(r => r.key == "fpB" && !r.admitted) == 1,
-      "the duplicate fpB row rejected")
-  }
-
-  test("winnow admission: multi-trigger carrier equals the batch first-seen gate") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    // four docs; 2 and 3 lift long runs from earlier docs, 4 is fresh.
-    // The lifted run is 20 words: winnow selects ~2/(win+1) ≈ 0.4 fps per
-    // gram, so a full lift shares well over the minShared=3 bar.
-    val runA = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
-      "lambda mu nu xi omicron pi rho sigma tau upsilon"
-    val texts = Seq(
-      1L -> s"$runA completely different tail words here",
-      2L -> s"intro words then $runA and some more",      // lifts runA from 1
-      3L -> s"leading filler $runA trailing filler words", // lifts runA too
-      4L -> "nothing shared with anything else at all now honestly")
-    val df = spark.createDataFrame(texts).toDF("doc_id", "text")
-    val fps = graft.ops.Dedup.winnowFingerprints(df, k = 3, win = 4)
-      .select(col("doc_id"), col("h")).distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val byDoc = fps.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    // batch first-seen rule
-    val firstSeen = fps.groupBy(_._2).view.mapValues(_.map(_._1).min).toMap
-    val wantMatched = byDoc.map { case (d, hs) =>
-      d -> hs.count(h => firstSeen(h) < d).toLong
-    }
-    // stream the fingerprints doc-by-doc (id-ordered triggers — the
-    // carrier contract), one trigger per document
-    val input = MemoryStream[StreamingOps.DedupPoint]
-    val q = StreamingOps.runningDedup(input.toDS())
-      .writeStream.format("memory").queryName("winnow_adm_out")
-      .outputMode(OutputMode.Append).start()
-    texts.map(_._1).sorted.foreach { d =>
-      input.addData(byDoc(d).toSeq.sorted.map(h =>
-        StreamingOps.DedupPoint(h.toString, d, null)): _*)
-      q.processAllAvailable()
-    }
-    val rows = spark.table("winnow_adm_out")
-      .as[StreamingOps.DedupAdmit].collect()
-    q.stop()
-    val gotMatched = rows.groupBy(_.doc_id).view
-      .mapValues(_.count(!_.admitted).toLong).toMap
-    assert(gotMatched === wantMatched,
-      s"streaming matched counts must equal the batch first-seen rule")
-    val minShared = 3
-    val admitted = wantMatched.collect {
-      case (d, m) if m < minShared => d
-    }.toSet
-    assert(admitted.contains(1L) && admitted.contains(4L),
-      "originals and fresh docs must admit")
-    assert(!admitted.contains(2L),
-      "a doc lifting a full run from an earlier doc must reject")
-  }
-
-  test("running dedup: state TTL evicts idle fingerprints; re-arrival re-admits") {
-    implicit val sqlCtx = spark.sqlContext
-    def dp(key: String, id: Long, at: String) =
-      StreamingOps.DedupPoint(key, id, ts(at))
-    val input = MemoryStream[StreamingOps.DedupPoint]
-    val q = StreamingOps.runningDedup(input.toDS(),
-        stateTtlMs = 1000L, watermarkDelay = "0 seconds")
-      .writeStream.format("memory").queryName("dedup_ttl_out")
-      .outputMode(OutputMode.Append).start()
-    input.addData(dp("fpA", 3L, "2025-01-01 00:00:00")); q.processAllAvailable()
-    // an hour later another key advances the watermark → fpA evicts
-    input.addData(dp("fpB", 5L, "2025-01-01 01:00:00")); q.processAllAvailable()
-    input.addData(dp("fpB", 6L, "2025-01-01 01:00:01")); q.processAllAvailable()
-    // fpA re-arrives: the evicted winner is forgotten → re-admitted (the
-    // documented TTL trade: a duplicate older than the TTL re-enters)
-    input.addData(dp("fpA", 8L, "2025-01-01 01:30:00")); q.processAllAvailable()
-    val rows = spark.table("dedup_ttl_out")
-      .as[StreamingOps.DedupAdmit].collect()
-    q.stop()
-    assert(rows.filter(r => r.key == "fpA" && r.admitted)
-      .map(_.doc_id).sorted.toSeq === Seq(3L, 8L),
-      s"evicted fingerprint must re-admit, got ${rows.toSeq}")
-  }
-
   // ---- out-of-order / late-data semantics ---------------------------------
   // The ordered-input tests above prove streaming == batch; these prove the
   // watermark CONTRACT — out-of-order rows inside the lateness bound still
@@ -643,40 +539,6 @@ class StreamingSpec extends SparkSpec {
       "late row reopened or re-emitted a finalized session")
   }
 
-  test("streaming dedup: late rows drop; expired state re-admits old content") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, Long, String)]
-    val docs = input.toDF().toDF("ts", "doc_id", "text")
-    val q = StreamingOps.dedupStream(docs, watermark = "10 minutes")
-      .writeStream.format("memory").queryName("dedup_late")
-      .outputMode(OutputMode.Append).start()
-    def emitted(): Set[Long] =
-      spark.table("dedup_late").select("doc_id").collect()
-        .map(_.getLong(0)).toSet
-    // batch 1: one doc + a horizon row; wm → 00:10:00
-    input.addData(
-      (ts("2025-01-01 00:00:01"), 1L, "alpha beta"),
-      (ts("2025-01-01 00:20:00"), 2L, "horizon"))
-    q.processAllAvailable()
-    assert(emitted() === Set(1L, 2L))
-    // batch 2: a UNIQUE doc that is late beyond the watermark — dropped
-    // entirely (the late-row filter, not the dedup state, rejects it)
-    input.addData((ts("2025-01-01 00:00:05"), 3L, "unique but late"))
-    q.processAllAvailable()
-    assert(emitted() === Set(1L, 2L), "late-beyond-watermark row must drop")
-    // batch 3: push wm past doc 1's state expiry (00:00:01 + 10min)
-    input.addData((ts("2025-01-01 00:40:00"), 4L, "advance"))
-    q.processAllAvailable()
-    // batch 4: doc 1's content re-arrives with a fresh in-watermark ts —
-    // its dedup state has EXPIRED, so it passes: the stream guards the
-    // recent horizon only (bounded state; the batch table is the durable
-    // dedup authority, exactly the §2.9 scale contract)
-    input.addData((ts("2025-01-01 00:41:00"), 5L, "alpha beta"))
-    q.processAllAvailable()
-    q.stop()
-    assert(emitted() === Set(1L, 2L, 4L, 5L))
-  }
-
   test("streaming ingest writes the exact batch Store layout") {
     implicit val sqlCtx = spark.sqlContext
     import graft.sources.Store
@@ -725,96 +587,6 @@ class StreamingSpec extends SparkSpec {
     assert(pruned.count() === 2)
     assert(Store.prunes(pruned),
       "date filter must reach PartitionFilters on the streamed store")
-  }
-
-  test("streaming dedup passes first occurrence, drops later duplicates") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, Long, String)]
-    val docs = input.toDF().toDF("ts", "doc_id", "text")
-    val q = StreamingOps.dedupStream(docs, watermark = "10 minutes")
-      .writeStream.format("memory").queryName("dedup_out")
-      .outputMode(OutputMode.Append).start()
-    input.addData(
-      (ts("2025-01-01 00:00:01"), 1L, "alpha beta"),
-      (ts("2025-01-01 00:00:02"), 2L, "  Alpha   BETA "), // normalized dup
-      (ts("2025-01-01 00:00:03"), 3L, "gamma delta"))
-    q.processAllAvailable()
-    // a duplicate in a LATER batch is caught by carried state
-    input.addData((ts("2025-01-01 00:00:10"), 4L, "gamma delta"))
-    q.processAllAvailable()
-    val out = spark.table("dedup_out").select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    q.stop()
-    assert(out === Set(1L, 3L))
-  }
-
-  test("streaming near-dup alerts: stateless MinHash probe matches batch incrementalAdmit") {
-    implicit val sqlCtx = spark.sqlContext
-    graft.functions.MinHashAgg.register(spark)
-    val base = "the quick brown fox jumps over the lazy dog again and again today"
-    val corpus = Seq(
-      (0L, base),
-      (1L, "completely different content about spark shuffles and joins here"))
-      .toDF("doc_id", "text")
-    // the STORED index the stream probes: the batch banding chain
-    val corpusBands = graft.ops.Dedup.bands(
-      graft.ops.Dedup.minhashSignatures(graft.ops.Dedup.shingles(corpus)))
-
-    val input = MemoryStream[(Long, String)]
-    val docs = input.toDF().toDF("doc_id", "text")
-    val q = StreamingOps.nearDupAlerts(docs, corpusBands)
-      .writeStream.format("memory").queryName("neardup_out")
-      .outputMode(OutputMode.Append).start()
-    val newBatch = Seq(
-      (10L, base), // verbatim → must alert against doc 0
-      (11L, "the quick brown fox jumps over the lazy cat again and again today"),
-      (12L, "totally novel text with no overlap to the existing corpus docs"))
-    input.addData(newBatch: _*)
-    q.processAllAvailable()
-    q.stop()
-    val alerts = spark.table("neardup_out").select("doc_id", "old_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-
-    // batch twin: incrementalAdmit's near_candidates over the same split
-    val batch = graft.ops.Dedup.incrementalAdmit(
-      newBatch.toDF("doc_id", "text"), corpus)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    newBatch.foreach { case (id, _) =>
-      val streamed = alerts.count(_._1 == id)
-      assert((batch(id) > 0) === (streamed > 0),
-        s"doc $id: batch near=${batch(id)}, stream alerts=$streamed")
-    }
-    assert(alerts.exists(_ == (10L, 0L)), "verbatim copy must alert vs doc 0")
-    assert(!alerts.exists(_._1 == 12L), "novel doc must not alert")
-  }
-
-  test("per-row top2GramStats fold equals the batch repetitionSignals aggregate") {
-    // fixture corpus + adversarial shapes (ties, single word, empty text,
-    // double spaces → empty tokens, non-ASCII) + 300 fuzzed docs over a
-    // tiny vocabulary so tie-breaks and repeated runs fire constantly
-    val rng = new scala.util.Random(20260814L)
-    val vocab = Array("a", "b", "aa", "ab", "ü", "", "xy")
-    val fuzzed = (9100L until 9400L).map(i => (i,
-      Seq.fill(rng.nextInt(12))(vocab(rng.nextInt(vocab.length)))
-        .mkString(" ")))
-    val docs = graft.Tables(spark, SfDir, "documents")
-      .select(col("doc_id"), col("text"))
-      .unionAll((Seq((9001L, "x y z w"), (9002L, "solo"), (9003L, ""),
-        (9004L, "b a b a b"), (9005L, "t t t t t t"),
-        (9006L, "a  b  a  b"), (9007L, "ü ü ö ü"))
-        ++ fuzzed)
-        .toDF("doc_id", "text"))
-    val perRow = docs.select(col("doc_id"),
-      graft.ops.TextAnalysis.top2GramStats(col("text")).as("t"))
-      .select(col("doc_id"), col("t.cnt").as("cnt"), col("t.gram").as("gram"))
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2)))).toMap
-    val batch = graft.ops.TextAnalysis.repetitionSignals(docs)
-      .select("doc_id", "top2_count", "top2_gram")
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2)))).toMap
-    assert(perRow.size === batch.size)
-    batch.foreach { case (id, want) =>
-      assert(perRow(id) === want, s"doc $id")
-    }
   }
 
   test("running KMV: multi-trigger == batch under a SHUFFLED permutation") {
