@@ -110,21 +110,6 @@ object ClusterSmoke {
       spark.catalog.clearCache()
     }
 
-    // Closed-form probe for an op no registered query reaches: the
-    // star-loop CC (smallGraphEdges=0 forces the distributed loop — its
-    // localCheckpoint blocks live on EXECUTOR block managers here, a
-    // placement local mode cannot test).
-    import org.apache.spark.sql.functions._
-    val n = 20000L
-    val k = 97L
-    val chain = spark.range(n).filter(col("id") % k =!= 0)
-      .select(col("id").as("src"), (col("id") - 1).as("dst"))
-    val cc = graft.ops.Dedup.connectedComponents(chain, smallGraphEdges = 0L)
-    val ccBad = cc.filter(
-      col("component") =!= col("id") - (col("id") % k)).count()
-    require(ccBad == 0L && cc.count() == n,
-      s"distributed CC on executors: $ccBad mismatches vs closed form")
-
     println("CLUSTER_SMOKE_OK")
     spark.stop()
   }

@@ -22,17 +22,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("graft_dot"), GraftFunctions.dotBuilder))
     ext.injectFunction((FunctionIdentifier("graft_ewma"),
       info("graft_ewma"), Ewma.builder))
-    ext.injectFunction((FunctionIdentifier("graft_md5_seeds"),
-      info("graft_md5_seeds"), graft.functions.TextFunctions.md5SeedsBuilder))
-    ext.injectFunction((FunctionIdentifier("simhash32"),
-      info("simhash32"), graft.functions.TextFunctions.simhashBuilder))
     ext.injectFunction((FunctionIdentifier("graft_split_text"),
       info("graft_split_text"), graft.functions.TextFunctions.splitTextBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_gram_hashes"),
-      info("graft_gram_hashes"),
-      graft.functions.TextFunctions.gramHashesBuilder))
-    ext.injectFunction((FunctionIdentifier("graft_minhash"),
-      info("graft_minhash"), graft.functions.MinHashAgg.builder))
     ext.injectFunction((FunctionIdentifier("graft_hll"),
       info("graft_hll"), graft.functions.HllAgg.builder))
     ext.injectFunction((FunctionIdentifier("graft_hll_regs"),

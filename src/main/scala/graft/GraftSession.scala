@@ -56,12 +56,16 @@ object GraftSession {
       .config(CodegenReuse)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // ScanOps' guarded small-input fast path runs an unpartitioned window
-    // on purpose; WindowExec's per-plan warning about it (hundreds per
-    // pipeline op) would bury every other warning.
+    quietUnpartitionedWindows()
+    spark
+  }
+
+  /** ScanOps' guarded small-input fast path runs an unpartitioned window
+    * on purpose; WindowExec's per-plan warning about it (hundreds per
+    * pipeline op) would bury every other warning. The level is JVM-wide;
+    * `build` and the test suites' shared session both set it here. */
+  def quietUnpartitionedWindows(): Unit =
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
-    spark
-  }
 }

@@ -196,9 +196,14 @@ object KmvAgg {
     KmvAgg(exprs.head, k).toAggregateExpression()
   }
 
+  /** No-op when the session already has the function (injected by
+    * GraftExtensions or registered earlier): the Column API below calls
+    * this on every use. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kmv", builder, "built-in")
+    if (!spark.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier("graft_kmv")))
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        "graft_kmv", builder, "built-in")
 
   /** Column API; self-registers on the active session. */
   def kmv(value: Column, k: Int): Column = {

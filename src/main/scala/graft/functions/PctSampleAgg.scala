@@ -245,9 +245,14 @@ object PctSampleAgg {
     PctSampleAgg(exprs.head, exprs(1), pcts, k).toAggregateExpression()
   }
 
+  /** No-op when the session already has the function (injected by
+    * GraftExtensions or registered earlier): the Column API below calls
+    * this on every use. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pct_sample", builder, "built-in")
+    if (!spark.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier("graft_pct_sample")))
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        "graft_pct_sample", builder, "built-in")
 
   /** Column API; self-registers on the active session. Returns
     * ARRAY<DOUBLE> aligned with `pcts`. */

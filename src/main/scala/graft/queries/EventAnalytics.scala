@@ -1382,7 +1382,7 @@ object EventAnalytics {
     // "distinct users so far" gauge off a 4+16k-byte sketch per key.
     // KMV insertion is commutative and duplicate-insensitive, so batch
     // equality holds under ANY delivery order (no ordered-delivery
-    // clause, unlike the funnel/session/dedup carriers); k = 64 makes
+    // clause, unlike the funnel/session carriers); k = 64 makes
     // the ESTIMATOR branch live at fixture scale (event types see up to
     // 150 distinct users > k), so the oracle replays the real sketch
     // arithmetic, not just the exact fallback. StreamingSpec separately

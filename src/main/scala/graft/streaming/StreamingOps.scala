@@ -470,7 +470,7 @@ object StreamingOps {
     *
     * Because KMV insertion is commutative and duplicate-insensitive,
     * this carrier's batch equality needs NO delivery-order contract at
-    * all (stronger than the funnel/session/dedup carriers'
+    * all (stronger than the funnel/session carriers'
     * ordered-delivery clause): any partitioning of any permutation of
     * the input through any trigger boundaries yields the same final
     * sketch, so the LAST emission per key always equals the batch

@@ -190,4 +190,21 @@ class PctSampleSpec extends SparkSpec {
     val replay = 255.0 * math.pow(2.0, 60) / h60.toDouble
     assert(est(big) === replay)
   }
+
+  test("pctSample and kmv register their functions once per session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import graft.functions.KmvAgg
+    val registry = spark.sessionState.functionRegistry
+    def info(name: String) = registry.lookupFunction(FunctionIdentifier(name))
+    PctSampleAgg.pctSample(sampleKey, col("value"), Seq(0.95), 16)
+    KmvAgg.kmv(col("value"), 16)
+    val pct = info("graft_pct_sample")
+    val kmv = info("graft_kmv")
+    assert(pct.isDefined && kmv.isDefined)
+    // a second use must not re-create the temp function
+    PctSampleAgg.pctSample(sampleKey, col("value"), Seq(0.95), 16)
+    KmvAgg.kmv(col("value"), 16)
+    assert(info("graft_pct_sample").get eq pct.get)
+    assert(info("graft_kmv").get eq kmv.get)
+  }
 }

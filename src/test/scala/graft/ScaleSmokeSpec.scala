@@ -52,47 +52,6 @@ class ScaleSmokeSpec extends SparkSpec {
     }
   }
 
-  test("dedup/ANN at sf1-equivalent volume: product-free plans + recall") {
-    import graft.ops.Dedup
-    import graft.functions.TextFunctions
-    def productFree(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct"), s"$what has a product")
-      assert(!plan.contains("BroadcastNestedLoopJoin"), s"$what has a NL join")
-    }
-
-    // ~10× sf0.1 = sf1-equivalent: 50k documents. Each replica carries a
-    // distinct suffix so documents are NEAR-duplicates across replicas
-    // (the hard path).
-    val docs0 = Tables(spark, "/root/testdata/sf0.1", "documents")
-    val docs = (0 until 10).map(k => docs0.select(
-        (col("doc_id") + lit(k * 1000000L)).as("doc_id"),
-        concat(col("text"), lit(s" replica$k")).as("text")))
-      .reduce(_ unionAll _).cache()
-    assert(docs.count() === 50000L)
-
-    // SimHash banded pairs: one equi-join on (band, byte), no product
-    val sigs = docs.select(col("doc_id"),
-      TextFunctions.simhash32(col("text")).as("sig"))
-    val simPairs = Dedup.simhashSigPairs(sigs)
-    productFree(simPairs, "simhashSigPairs")
-    val nSim = timed("simhashSigPairs @50k docs")(simPairs.count())
-    assert(nSim > 0)
-
-    // End-to-end near-dedup with the hot-shingle cap: candidates from
-    // LSH bands only, exact verification of candidates, product-free
-    val deduped = Dedup.nearDedup(docs, threshold = 0.8,
-      maxShingleFreq = Some(2000))
-    productFree(deduped, "nearDedup")
-    val nKept = timed("nearDedup @50k docs")(deduped.count())
-    // every original doc has 9 near-replicas — the survivor count must
-    // collapse toward the original corpus size (minus the generator's own
-    // planted near-dups inside sf0.1, hence a bit under 5000)
-    assert(nKept < 15000L, s"near-dedup barely deduped: kept $nKept of 50k")
-    assert(nKept >= 4000L, s"near-dedup over-collapsed: kept $nKept")
-    docs.unpersist()
-  }
-
   test("text analysis at sf1-equivalent volume: one scan, no collects") {
     import graft.trace.Chunker
     val docs0 = Tables(spark, "/root/testdata/sf0.1", "documents")

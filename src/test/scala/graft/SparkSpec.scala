@@ -5,16 +5,20 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs — one per suite via lazy val. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    // the first session in the test JVM sizes Spark's generated-class cache
-    .config(GraftSession.CodegenReuse)
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .appName("graft-test")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      // the first session in the test JVM sizes Spark's generated-class cache
+      .config(GraftSession.CodegenReuse)
+      .getOrCreate()
+    GraftSession.quietUnpartitionedWindows()
+    s
+  }
 
   /** The smallest generated scale factor (TESTDATA.md). */
   val SfDir = "/root/testdata/sf0.001"
